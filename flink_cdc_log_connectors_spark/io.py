@@ -64,22 +64,22 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
 _TABLE_CACHE: dict[str, DataFrame] = {}
 
 
+#: on-disk parquet bytes per partition of a pinned table (256 KB —
+#: roughly 20-50k rows / a few MB deserialized per partition on this
+#: corpus)
+_CACHE_PART_BYTES = 256 << 10
+
+
 def _cache_partitions(spark: SparkSession, path: str) -> int:
     """Partition count for a pinned table: one per
-    ``SPARK_GRAFT_CACHE_PART_BYTES`` of on-disk parquet (default 256 KB —
-    roughly 20-50k rows / a few MB deserialized per partition on this
-    corpus), capped at the session's core count.  The synthetic tables
-    are single small files, so the scan-side split rules
-    (``maxPartitionBytes``) leave them at ONE partition — every scan
-    stage, including the Arrow/pandas text pipelines, then runs
-    single-task no matter how many cores the session has (r13: profiled
-    as the bottleneck of the document/compute-heavy queries).  Derived
-    from data size and the session's parallelism, not a local-core
-    constant; env-overridable for deployments whose inputs are already
-    well-split (set it huge to disable)."""
-    target = int(
-        os.environ.get("SPARK_GRAFT_CACHE_PART_BYTES", str(256 << 10))
-    )
+    ``_CACHE_PART_BYTES`` of on-disk parquet, capped at the session's
+    core count.  The synthetic tables are single small files, so the
+    scan-side split rules (``maxPartitionBytes``) leave them at ONE
+    partition — every scan stage, including the Arrow/pandas text
+    pipelines, then runs single-task no matter how many cores the
+    session has (r13: profiled as the bottleneck of the
+    document/compute-heavy queries).  Derived from data size and the
+    session's parallelism, not a local-core constant."""
     try:
         size = (
             os.path.getsize(path)
@@ -93,7 +93,7 @@ def _cache_partitions(spark: SparkSession, path: str) -> int:
     except OSError:
         return 1
     cores = spark.sparkContext.defaultParallelism
-    return max(1, min(cores, -(-size // target)))
+    return max(1, min(cores, -(-size // _CACHE_PART_BYTES)))
 
 
 def cache_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

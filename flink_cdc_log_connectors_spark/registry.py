@@ -17,113 +17,46 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 def all_queries() -> dict[str, tuple[QueryFn, str | None]]:
     from .operators.relational import RELATIONAL_QUERIES
+    from .operators.dedup import DEDUP_QUERIES
+    from .operators.text import TEXT_QUERIES
+    from .operators.similarity import SIMILARITY_QUERIES
+    from .operators.multimodal import MULTIMODAL_QUERIES
+    from .operators.temporal import TEMPORAL_QUERIES
+    from .operators.hypertable import HYPERTABLE_QUERIES
+    from .operators.graph import GRAPH_QUERIES
+    from .operators.clustering import CLUSTERING_QUERIES
+    from .operators.search import SEARCH_QUERIES
+    from .operators.windows import WINDOW_QUERIES
+    from .operators.bloomfilter import BLOOM_QUERIES
+    from .operators.sketch import SKETCH_QUERIES
+    from .operators.skew import SKEW_QUERIES
+    from .operators.lifecycle import LIFECYCLE_QUERIES
+    from .operators.curation import CURATION_QUERIES
+    from .operators.lm import LM_QUERIES
+    from .operators.replay import REPLAY_QUERIES
 
-    out: dict[str, tuple[QueryFn, str | None]] = {}
-    out.update(RELATIONAL_QUERIES)
-
-    try:
-        from .operators.dedup import DEDUP_QUERIES
-
-        out.update(DEDUP_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.text import TEXT_QUERIES
-
-        out.update(TEXT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.similarity import SIMILARITY_QUERIES
-
-        out.update(SIMILARITY_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.multimodal import MULTIMODAL_QUERIES
-
-        out.update(MULTIMODAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.temporal import TEMPORAL_QUERIES
-
-        out.update(TEMPORAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.hypertable import HYPERTABLE_QUERIES
-
-        out.update(HYPERTABLE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.graph import GRAPH_QUERIES
-
-        out.update(GRAPH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.clustering import CLUSTERING_QUERIES
-
-        out.update(CLUSTERING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.search import SEARCH_QUERIES
-
-        out.update(SEARCH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.windows import WINDOW_QUERIES
-
-        out.update(WINDOW_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.bloomfilter import BLOOM_QUERIES
-
-        out.update(BLOOM_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.sketch import SKETCH_QUERIES
-
-        out.update(SKETCH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.skew import SKEW_QUERIES
-
-        out.update(SKEW_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.lifecycle import LIFECYCLE_QUERIES
-
-        out.update(LIFECYCLE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.curation import CURATION_QUERIES
-
-        out.update(CURATION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.lm import LM_QUERIES
-
-        out.update(LM_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from .operators.replay import REPLAY_QUERIES
-
-        out.update(REPLAY_QUERIES)
-    except ImportError:
-        pass
-    return _driver_window_order(out)
+    return _driver_window_order(
+        {
+            **RELATIONAL_QUERIES,
+            **DEDUP_QUERIES,
+            **TEXT_QUERIES,
+            **SIMILARITY_QUERIES,
+            **MULTIMODAL_QUERIES,
+            **TEMPORAL_QUERIES,
+            **HYPERTABLE_QUERIES,
+            **GRAPH_QUERIES,
+            **CLUSTERING_QUERIES,
+            **SEARCH_QUERIES,
+            **WINDOW_QUERIES,
+            **BLOOM_QUERIES,
+            **SKETCH_QUERIES,
+            **SKEW_QUERIES,
+            **LIFECYCLE_QUERIES,
+            **CURATION_QUERIES,
+            **LM_QUERIES,
+            **REPLAY_QUERIES,
+        }
+    )
 
 
 #: The driver's CORRECTNESS record holds a bounded window of rows (50 in

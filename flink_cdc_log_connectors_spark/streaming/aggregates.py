@@ -50,7 +50,7 @@ from .statetable import PartitionedStateTable, null_safe_on
 from .ttl import (
     EventTimeTTL,
     check_expire_epoch,
-    committed_at,
+    fused_epoch,
     heal_pending_expiry,
 )
 
@@ -212,62 +212,50 @@ class ChangelogAggregate:
             rows_lazy = parse_change_rows(
                 raw_batch.filter(table_of == self.table), self.physical
             )
-        # lazy persist (r7): the stats agg below materializes the cache
+        # lazy persist (r7): the epoch's stats collect materializes it
         rows = rows_lazy.persist()
-        if self.ttl is not None:
-            try:
-                self._apply_with_ttl(spark, rows, epoch_id)
-            finally:
-                rows.unpersist(False)
-            return
-
-        # ONE driver round-trip for all per-batch scalars (r8; was an
-        # emptiness probe + a touched-bucket collect inside EACH state
-        # upsert — three driver actions): batch row count, the fact-state
-        # buckets the batch's keys hash to, and the output buckets the
-        # touched groups hash to (xxhash64 treats an all-NULL key as a
-        # real value, so the NULL group's bucket is collected, never
-        # dropped — pinned by the NULL-group replay witness).  Both
-        # upserts below take the sets precomputed.
-        stats = rows.agg(
-            *self._prepared(
-                "batch_stats",
-                lambda: [
-                    F.count(F.lit(1)).alias("n"),
-                    F.collect_set(
-                        self.fact_state.bucket_for(
-                            *[F.col(c) for c in self.group_cols]
-                        )
-                    ).alias("fb"),
-                    F.collect_set(
-                        self.output.bucket_for(
-                            *[F.col(c) for c in self.group_cols]
-                        )
-                    ).alias("ob"),
-                ],
+        try:
+            fused_epoch(
+                self, spark, epoch_id, rows, *self._epoch_stats(),
+                self._merge_and_recompute,
             )
-        ).first()
-        if stats["n"] == 0:
+        finally:
             rows.unpersist(False)
-            return
-        self._merge_and_recompute(
-            spark, rows, epoch_id, stats["fb"], stats["ob"],
-            n_rows=stats["n"],
-        )
-        rows.unpersist(False)
+
+    def _epoch_stats(self):
+        """This view's part of the epoch's one stats collect: rows group
+        by fact-state bucket, each collecting the output buckets its
+        groups hash to (xxhash64 treats an all-NULL key as a real value,
+        so the NULL group's bucket is collected, never dropped — pinned
+        by the NULL-group replay witness)."""
+
+        def build():
+            gcols = [F.col(c) for c in self.group_cols]
+            return (
+                [self.fact_state.bucket_for(*gcols).alias("__b")],
+                [F.collect_set(self.output.bucket_for(*gcols)).alias("ob")],
+            )
+
+        return self._prepared("epoch_stats", build)
 
     def _merge_and_recompute(
         self,
         spark: SparkSession,
         rows: DataFrame,
         epoch_id: int,
-        fact_buckets: Sequence[int],
-        out_buckets: Sequence[int],
-        n_rows: int | None = None,
+        per: list,
+        committed,
     ) -> None:
-        """Fact-state upsert + touched-group recompute + view upsert —
-        the batch pipeline shared by the plain and TTL paths (``rows``
-        already contains any synthesized expiry retractions)."""
+        """The epoch's commit step (``ttl.fused_epoch``): fact-state
+        upsert + touched-group recompute + view upsert.  ``rows`` already
+        contains any synthesized expiry retractions; ``per`` is the
+        stats collect, one row per fact bucket."""
+        fact_buckets = sorted(
+            {r["__b"] for r in per} | committed(self.fact_state)
+        )
+        out_buckets = sorted(
+            {b for r in per for b in r["ob"]} | committed(self.output)
+        )
         # 1. keep the fact state current (feeds min/max recompute and
         #    replayed-epoch recovery)
         self.fact_state.upsert(
@@ -275,7 +263,7 @@ class ChangelogAggregate:
             order_by=CHANGELOG_ORDER_BY,
             epoch_id=epoch_id,
             touched=fact_buckets,
-            batch_rows=n_rows,
+            batch_rows=sum(r["cnt"] for r in per),
         )
 
         # 2. touched groups: every group any image of this batch mentions
@@ -339,104 +327,6 @@ class ChangelogAggregate:
             touched=out_buckets,
         )
 
-    # -- event-time state TTL ----------------------------------------------
-    # Deterministic expiry (see ``__init__`` and ``streaming/ttl.py``):
-    # per epoch, facts whose latest version's ``ttl_col`` is at or
-    # before ``watermark - ttl`` are turned into synthesized retraction
-    # images and FOLDED INTO the batch's own pipeline — one fact-state
-    # upsert, one touched-group recompute, one view upsert, exactly the
-    # jobs a plain epoch pays.  Bounds pruning, staged crash-convergent
-    # decisions, and post-commit metadata live in EventTimeTTL.
-    # Thin delegates (also the witnesses'/tests' inspection surface):
-    def _load_wm(self) -> int | None:
-        return self._ttl_proto.load_wm()
-
-    def _load_bounds(self) -> dict[str, int]:
-        return self._ttl_proto.load_bounds()
-
-    def _stage_expiry(self, spark: SparkSession, epoch_id: int):
-        return self._ttl_proto.stage(spark, epoch_id)
-
-    def _stage_dir(self, epoch_id: int) -> str:
-        return self._ttl_proto._stage_dir(epoch_id)
-
-    def _finalize_if_staged(self, epoch_id, exp, cutoff) -> None:
-        """Early-exit twin of the post-commit finalize: an epoch whose
-        staged decision retracted NOTHING and whose batch was empty
-        mutates no state, but its PUBLISHED stage must still be
-        finalized (conservative bounds from the staged survivor minima,
-        then GC) — a stranded published stage reads as a crashed pass
-        and is refused by every later epoch's stage() (r10)."""
-        if exp:
-            self._ttl_proto.finalize(epoch_id, exp, cutoff, {}, None)
-
-    def _apply_with_ttl(
-        self, spark: SparkSession, rows: DataFrame | None, epoch_id: int
-    ) -> None:
-        exp, cutoff, syn = self._stage_expiry(spark, epoch_id)
-        parts = []
-        if rows is not None:
-            parts.append(rows.withColumn("__syn", F.lit(False)))
-        if syn is not None:
-            order = parts[0].columns if parts else None
-            flagged_syn = syn.withColumn("__syn", F.lit(True))
-            if order is not None:
-                flagged_syn = flagged_syn.select(*order)
-            parts.append(flagged_syn)
-        if not parts:
-            self._finalize_if_staged(epoch_id, exp, cutoff)
-            return
-        flagged = parts[0]
-        for p in parts[1:]:
-            flagged = flagged.unionByName(p)
-        def _build_ttl_stats():
-            gcols = [F.col(c) for c in self.group_cols]
-            live_ts = F.when(~F.col("__syn"), F.col(self.ttl_col))
-            key = self.fact_state.bucket_for(*gcols).alias("__fb")
-            aggs = [
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum(F.col("__syn").cast("long")).alias("syn_n"),
-                F.min(live_ts).alias("bmin"),
-                F.max(live_ts).alias("bmax"),
-                F.collect_set(self.output.bucket_for(*gcols)).alias("ob"),
-            ]
-            return key, aggs
-
-        fb_key, ttl_aggs = self._prepared("ttl_stats", _build_ttl_stats)
-        per_bucket = flagged.groupBy(fb_key).agg(*ttl_aggs).collect()
-        if not per_bucket:
-            self._finalize_if_staged(epoch_id, exp, cutoff)
-            return
-        self.expired_applied += sum(r["syn_n"] for r in per_bucket)
-        # a replay may see a SMALLER touched set than the buckets this
-        # epoch already committed (its expiry images are already merged
-        # into state) — union the committed ones in (committed_at)
-        fb = sorted(
-            {r["__fb"] for r in per_bucket}
-            | committed_at(self.fact_state, epoch_id)
-        )
-        ob = sorted(
-            {b for r in per_bucket for b in r["ob"]}
-            | committed_at(self.output, epoch_id)
-        )
-        self._merge_and_recompute(
-            spark, flagged.drop("__syn"), epoch_id, fb, ob,
-            n_rows=sum(r["cnt"] for r in per_bucket),
-        )
-        # -- post-commit metadata (monotone / conservative) ----------------
-        wm_cands = [v for v in (r["bmax"] for r in per_bucket) if v is not None]
-        self._ttl_proto.finalize(
-            epoch_id,
-            exp,
-            cutoff,
-            {
-                str(r["__fb"]): r["bmin"]
-                for r in per_bucket
-                if r["bmin"] is not None
-            },
-            max(wm_cands) if wm_cands else None,
-        )
-
     def expire(self, spark: SparkSession, epoch_id: int) -> None:
         """Expiry-only pass (no input batch) under a FRESH epoch id:
         retracts every fact the CURRENT stored watermark has aged out.
@@ -444,7 +334,8 @@ class ChangelogAggregate:
         "GROUP BY over facts inside the retention window" — per-batch
         expiry necessarily lags one epoch (an epoch's cutoff comes from
         the watermark its PREDECESSORS committed, keeping the batch's
-        scalars in one fused driver action).  A recycled epoch id is
+        scalars in one fused driver action).  Drives the normal batch
+        pipeline with an empty envelope frame.  A recycled epoch id is
         REFUSED (``check_expire_epoch``): it would silently no-op the
         retractions while sealing the expiry bounds."""
         if self.ttl is None:
@@ -452,7 +343,10 @@ class ChangelogAggregate:
         check_expire_epoch(
             epoch_id, self.fact_state, self.output, ttl=self._ttl_proto
         )
-        self._apply_with_ttl(spark, None, epoch_id)
+        self.process_batch(
+            spark.createDataFrame([], "value string, file string, pos long"),
+            epoch_id,
+        )
 
     def read_view(self, spark: SparkSession) -> DataFrame | None:
         df = self.output.read(spark)

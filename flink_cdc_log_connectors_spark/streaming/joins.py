@@ -56,6 +56,7 @@ reasoning); mismatched types fall back to the full dim read.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,7 +68,7 @@ from .statetable import PartitionedStateTable
 from .ttl import (
     EventTimeTTL,
     check_expire_epoch,
-    committed_at,
+    fused_epoch,
     heal_pending_expiry,
 )
 
@@ -263,108 +264,6 @@ class ChangelogJoin:
             ),
         )
 
-    def _ttl_upserts(self, spark: SparkSession, lb, rb, epoch_id: int):
-        """TTL twin of the fused stats + two state upserts: folds the
-        staged expiry retractions into the left batch, groups the stats
-        agg per bucket (same single driver action — ≤ touched-bucket
-        rows) to maintain the per-bucket min-ts bounds, and unions each
-        table's already-committed-at-this-epoch buckets into its touched
-        set so replays of shrunken effective batches stay legal.
-        Returns (lb_all, lbk, rbk, dim_buckets, out_extra, finalize) or
-        None when there is nothing at all to do."""
-        exp, cutoff, syn = self._ttl_proto.stage(spark, epoch_id)
-        lb_flag = lb.withColumn("__syn", F.lit(False))
-        if syn is not None:
-            lb_flag = lb_flag.unionByName(
-                syn.select(*lb.columns).withColumn("__syn", F.lit(True))
-            )
-        def _build_ttl_probe():
-            ts_type = {
-                f.name: f.dataType for f in self.left.physical.fields
-            }[self.left_ttl_col]
-            live_ts = F.when(~F.col("__syn"), F.col(self.left_ttl_col))
-            lcols = [
-                F.lit(0).alias("__s"),
-                self._left_bucket().alias("__b"),
-                F.col("__syn"),
-                live_ts.alias("__ts"),
-                self.right_state.bucket_for(
-                    F.col(self.left.join_col)
-                ).alias("__db"),
-            ]
-            rcols = [
-                F.lit(1).alias("__s"),
-                self.right_state.bucket_for(F.col(self.right.key)).alias(
-                    "__b"
-                ),
-                F.lit(False).alias("__syn"),
-                F.lit(None).cast(ts_type).alias("__ts"),
-                F.lit(None).cast("int").alias("__db"),
-            ]
-            aggs = [
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum(F.col("__syn").cast("long")).alias("syn_n"),
-                F.min(F.col("__ts")).alias("bmin"),
-                F.max(F.col("__ts")).alias("bmax"),
-                F.collect_set(F.col("__db")).alias("dbs"),
-            ]
-            return lcols, rcols, aggs
-
-        lcols, rcols, aggs = self._prepared("ttl_probe", _build_ttl_probe)
-        probe = lb_flag.select(*lcols).unionByName(rb.select(*rcols))
-        per = probe.groupBy("__s", "__b").agg(*aggs).collect()
-        if not per:
-            if exp:
-                # staged decision that retracted nothing + empty batch:
-                # no state mutates, but the PUBLISHED stage must still
-                # be finalized (conservative bounds from the staged
-                # survivor minima, then GC) — a stranded stage reads as
-                # a crashed pass and later epochs refuse to start (r10)
-                self._ttl_proto.finalize(epoch_id, exp, cutoff, {}, None)
-            return None
-        self.expired_applied += sum(
-            r["syn_n"] for r in per if r["__s"] == 0
-        )
-        lbk = sorted(
-            {r["__b"] for r in per if r["__s"] == 0}
-            | committed_at(self.left_state, epoch_id)
-        )
-        rbk = sorted(
-            {r["__b"] for r in per if r["__s"] == 1}
-            | committed_at(self.right_state, epoch_id)
-        )
-        dim_buckets = sorted(
-            {b for r in per for b in r["dbs"]}
-            | {r["__b"] for r in per if r["__s"] == 1}
-        )
-        lb_all = lb_flag.drop("__syn")
-        self._upsert_sides(
-            (lb_all, lbk, sum(r["cnt"] for r in per if r["__s"] == 0)),
-            (rb, rbk, sum(r["cnt"] for r in per if r["__s"] == 1)),
-            epoch_id,
-        )
-        batch_min = {
-            str(r["__b"]): r["bmin"]
-            for r in per
-            if r["__s"] == 0 and r["bmin"] is not None
-        }
-        wm_cands = [
-            r["bmax"] for r in per if r["__s"] == 0 and r["bmax"] is not None
-        ]
-        wm_cand = max(wm_cands) if wm_cands else None
-
-        def finalize():
-            self._ttl_proto.finalize(epoch_id, exp, cutoff, batch_min, wm_cand)
-
-        return (
-            lb_all,
-            lbk,
-            rbk,
-            dim_buckets,
-            sorted(committed_at(self.output, epoch_id)),
-            finalize,
-        )
-
     def _upsert_sides(self, left_args, right_args, epoch_id: int) -> None:
         """Commit the two side-state upserts as CONCURRENT driver jobs
         (r12, optimization guide §2.6): the tables are independent —
@@ -428,7 +327,7 @@ class ChangelogJoin:
         # sort keys FUSED into the parse's own projections (r13 — the
         # seven-op chain rebuilt per epoch measured 139 ms of pure plan
         # construction per side).
-        # lazy persist (r7): the state upserts below materialize the
+        # lazy persist (r7): the epoch's stats collect materializes the
         # caches — eager localCheckpoints spent two extra jobs per batch
         lb = parse_change_rows(
             raw_batch.filter(table_of == self.left.table),
@@ -439,65 +338,86 @@ class ChangelogJoin:
             self.right.physical,
         ).persist()
 
-        finalize_ttl = None
-        out_extra = None
-        if self._ttl_proto is None:
-            # ONE driver round-trip for all per-batch scalars (r8; was a
-            # touched-bucket collect inside EACH side's state upsert): the
-            # union agg materializes both persists and collects both
-            # sides' state buckets (each bounded by n_buckets), plus —
-            # r10 — the DIM buckets the batch's fact join values hash to
-            # (__db), which bound the enrichment probe's dim read.
-            def _build_probe():
-                lcols = [
-                    F.lit(0).alias("__s"),
-                    self._left_bucket().alias("__b"),
-                    self.right_state.bucket_for(
-                        F.col(self.left.join_col)
-                    ).alias("__db"),
-                ]
-                rcols = [
-                    F.lit(1).alias("__s"),
-                    self.right_state.bucket_for(F.col(self.right.key)).alias(
-                        "__b"
-                    ),
-                    F.lit(None).cast("int").alias("__db"),
-                ]
-                aggs = [
-                    F.count(F.when(F.col("__s") == 0, F.lit(1))).alias("nl"),
-                    F.count(F.when(F.col("__s") == 1, F.lit(1))).alias("nr"),
-                    F.collect_set(
-                        F.when(F.col("__s") == 0, F.col("__b"))
-                    ).alias("lbk"),
-                    F.collect_set(
-                        F.when(F.col("__s") == 1, F.col("__b"))
-                    ).alias("rbk"),
-                    F.collect_set(F.col("__db")).alias("dbk"),
-                ]
-                return lcols, rcols, aggs
-
-            lcols, rcols, aggs = self._prepared("probe", _build_probe)
-            probe = lb.select(*lcols).unionByName(rb.select(*rcols))
-            stats = probe.agg(*aggs).first()
-            if stats["nl"] == 0 and stats["nr"] == 0:
-                lb.unpersist(False)
-                rb.unpersist(False)
-                return
-            lb_all = lb
-            lbk, rbk = stats["lbk"], stats["rbk"]
-            dim_buckets = sorted({*stats["dbk"], *rbk})
-            self._upsert_sides(
-                (lb_all, lbk, stats["nl"]),
-                (rb, rbk, stats["nr"]),
-                epoch_id,
+        lcols, rcols, dbs = self._epoch_stats()
+        try:
+            fused_epoch(
+                self, spark, epoch_id, lb, ["__s", "__b"], dbs,
+                functools.partial(self._upsert_and_recompute, rb),
+                frame=lambda lf: lf.select(*lcols).unionByName(
+                    rb.select(*rcols)
+                ),
             )
-        else:
-            ttl_res = self._ttl_upserts(spark, lb, rb, epoch_id)
-            if ttl_res is None:
-                lb.unpersist(False)
-                rb.unpersist(False)
-                return
-            lb_all, lbk, rbk, dim_buckets, out_extra, finalize_ttl = ttl_res
+        finally:
+            lb.unpersist(False)
+            rb.unpersist(False)
+
+    def _epoch_stats(self):
+        """This join's part of the epoch's one stats collect: both sides'
+        images union into one frame grouped by (side ``__s``, state
+        bucket ``__b``), and each group collects the DIM buckets its
+        fact join values hash to (``__db``), which bound the enrichment
+        probe's dim read (r10).  Under TTL the fact side carries its
+        event time for the bounds."""
+
+        def build():
+            lcols = [
+                F.lit(0).alias("__s"),
+                self._left_bucket().alias("__b"),
+                F.col("__syn"),
+                self.right_state.bucket_for(
+                    F.col(self.left.join_col)
+                ).alias("__db"),
+            ]
+            rcols = [
+                F.lit(1).alias("__s"),
+                self.right_state.bucket_for(F.col(self.right.key)).alias(
+                    "__b"
+                ),
+                F.lit(False).alias("__syn"),
+                F.lit(None).cast("int").alias("__db"),
+            ]
+            if self.left_ttl_col is not None:
+                ts_type = {
+                    f.name: f.dataType for f in self.left.physical.fields
+                }[self.left_ttl_col]
+                lcols.append(F.col(self.left_ttl_col))
+                rcols.append(
+                    F.lit(None).cast(ts_type).alias(self.left_ttl_col)
+                )
+            return lcols, rcols, [F.collect_set(F.col("__db")).alias("dbs")]
+
+        return self._prepared("epoch_stats", build)
+
+    def _upsert_and_recompute(
+        self,
+        rb: DataFrame,
+        spark: SparkSession,
+        lb_all: DataFrame,
+        epoch_id: int,
+        per: list,
+        committed,
+    ) -> None:
+        """The epoch's commit step (``ttl.fused_epoch``): both side-state
+        upserts, the affected-fact recompute and the output upsert.
+        ``lb_all`` already contains any synthesized expiry retractions;
+        ``per`` is the stats collect, one row per (side, bucket)."""
+        lbk = sorted(
+            {r["__b"] for r in per if r["__s"] == 0}
+            | committed(self.left_state)
+        )
+        rbk = sorted(
+            {r["__b"] for r in per if r["__s"] == 1}
+            | committed(self.right_state)
+        )
+        dim_buckets = sorted(
+            {b for r in per for b in r["dbs"]}
+            | {r["__b"] for r in per if r["__s"] == 1}
+        )
+        self._upsert_sides(
+            (lb_all, lbk, sum(r["cnt"] for r in per if r["__s"] == 0)),
+            (rb, rbk, sum(r["cnt"] for r in per if r["__s"] == 1)),
+            epoch_id,
+        )
 
         if self.bucket_left_by_join_col:
             # every fact row this batch must see lives in a join-value
@@ -626,12 +546,8 @@ class ChangelogJoin:
             rows.withColumn("__seq", F.lit(0)),
             order_by=["__seq"],
             epoch_id=epoch_id,
-            extra_touched=out_extra,
+            extra_touched=sorted(committed(self.output)),
         )
-        if finalize_ttl is not None:
-            finalize_ttl()
-        lb.unpersist(False)
-        rb.unpersist(False)
 
     def read_view(self, spark: SparkSession) -> DataFrame | None:
         """Current join view (without internal columns)."""

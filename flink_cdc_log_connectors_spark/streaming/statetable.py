@@ -80,21 +80,14 @@ _MANIFEST = "_manifest.json"
 _DATA = "_data"
 
 
-def _commit_target_bytes() -> int:
-    """Target bytes per write task on a state commit (conf §2.2/§6 of the
-    optimization playbook: shuffle/output partitions in the 100 MB–1 GB
-    range).  Env-overridable so a cluster deployment can size it to its
-    executors; the default keeps microbatch commits single-task."""
-    return int(
-        os.environ.get("SPARK_GRAFT_COMMIT_TARGET_BYTES", str(128 << 20))
-    )
-
-
-def _commit_task_rows() -> int:
-    """Row-count floor companion to :func:`_commit_target_bytes` for
-    batches whose byte size is unknown (first commit into an empty
-    table): one write task per this many batch rows."""
-    return int(os.environ.get("SPARK_GRAFT_COMMIT_TASK_ROWS", str(1 << 20)))
+#: target bytes per write task on a state commit (conf §2.2/§6 of the
+#: optimization playbook: output partitions in the 100 MB–1 GB range);
+#: keeps microbatch commits single-task
+_COMMIT_TARGET_BYTES = 128 << 20
+#: row-count floor companion to ``_COMMIT_TARGET_BYTES`` for batches
+#: whose byte size is unknown (first commit into an empty table): one
+#: write task per this many batch rows
+_COMMIT_TASK_ROWS = 1 << 20
 
 
 class PartitionedStateTable:
@@ -387,7 +380,7 @@ class PartitionedStateTable:
         empty buckets.  Microbatches collapse to ONE task — the dynamic-
         partition writer's per-task sort/commit machinery measured ~5×
         a single-task write at kilobyte scale — while large states keep
-        one task per ~``_commit_target_bytes()`` (guide §2.2/§6 file
+        one task per ~``_COMMIT_TARGET_BYTES`` (guide §2.2/§6 file
         sizing).  Used via ``coalesce`` (a no-op when the plan already
         has fewer partitions), so it can only REDUCE task counts."""
         total = 0
@@ -403,9 +396,9 @@ class PartitionedStateTable:
                         )
                 except OSError:
                     continue
-        n = max(1, -(-total // _commit_target_bytes()))
+        n = max(1, -(-total // _COMMIT_TARGET_BYTES))
         if batch_rows:
-            n = max(n, -(-batch_rows // _commit_task_rows()))
+            n = max(n, -(-batch_rows // _COMMIT_TASK_ROWS))
         return n
 
     def read(self, spark: SparkSession) -> DataFrame | None:
@@ -504,8 +497,8 @@ class PartitionedStateTable:
             # their fused stats agg already collected): microbatches
             # write single-task — the dynamic-partition writer's
             # per-task machinery dominates at small sizes — and big
-            # backfills keep one task per _commit_task_rows()
-            out = out.coalesce(max(1, -(-batch_rows // _commit_task_rows())))
+            # backfills keep one task per _COMMIT_TASK_ROWS
+            out = out.coalesce(max(1, -(-batch_rows // _COMMIT_TASK_ROWS)))
         out.write.mode("overwrite").partitionBy("__bucket").parquet(version_dir)
         touched = [
             int(d.split("=", 1)[1])
@@ -827,7 +820,7 @@ class PartitionedStateTable:
                 # writes from ONE task (the dynamic-partition writer's
                 # per-task sort/commit machinery measured ~5× a single-
                 # task write at kilobyte scale); large touched states
-                # keep ~one task per _commit_target_bytes() of prior
+                # keep ~one task per _COMMIT_TARGET_BYTES of prior
                 # bucket bytes — which also sizes output files sanely
                 self._commit_partitions(manifest, touched, batch_rows)
             )

@@ -60,7 +60,7 @@ from .statetable import PartitionedStateTable, null_safe_on
 from .ttl import (
     EventTimeTTL,
     check_expire_epoch,
-    committed_at,
+    fused_epoch,
     heal_pending_expiry,
 )
 
@@ -159,48 +159,32 @@ class ChangelogTopN:
         table_of = F.get_json_object(F.col("value"), "$.source.table")
         # parse + UPDATE_BEFORE retraction + offset sort keys fused into
         # the parse's own projections with memoized trees (r13)
-        # lazy persist (r7): the fact-state upsert materializes the cache
+        # lazy persist (r7): the epoch's stats collect materializes it
         rows = parse_change_rows(
             raw_batch.filter(table_of == self.table), self.physical
         ).persist()
-        if self.ttl is not None:
-            try:
-                self._apply_with_ttl(spark, rows, epoch_id)
-            finally:
-                rows.unpersist(False)
-            return
-
-        # ONE driver round-trip for all per-batch scalars (r8; was an
-        # emptiness probe + a touched-bucket collect inside EACH state
-        # upsert): batch count, fact-state buckets, and the output
-        # buckets of every (touched partition, rn 1..N) slot the merge
-        # below can write — one collect_set per rank slot (N is small by
+        # the one stats collect groups by fact bucket and gathers the
+        # output buckets of every (touched partition, rn 1..N) slot the
+        # merge can write — one collect_set per rank slot (N is small by
         # construction of a Top-N query; xxhash64 hashes a NULL
         # partition value to a real bucket, so NULL partitions are
-        # collected, never dropped).
-        wrows = self._with_partition(rows)
+        # collected, never dropped)
         pcols = [F.col(c) for c in self.partition_cols]
-        stats = wrows.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(self._fact_bucket()).alias("fb"),
-            *[
-                F.collect_set(
-                    self.output.bucket_for(*pcols, F.lit(rn))
-                ).alias(f"ob{rn}")
-                for rn in range(1, self.n + 1)
-            ],
-        ).first()
-        if stats["n"] == 0:
+        try:
+            fused_epoch(
+                self, spark, epoch_id, rows,
+                [self._fact_bucket().alias("__b")],
+                [
+                    F.collect_set(
+                        self.output.bucket_for(*pcols, F.lit(rn))
+                    ).alias(f"ob{rn}")
+                    for rn in range(1, self.n + 1)
+                ],
+                self._merge_and_recompute,
+                frame=self._with_partition,
+            )
+        finally:
             rows.unpersist(False)
-            return
-        out_touched = sorted(
-            {b for rn in range(1, self.n + 1) for b in stats[f"ob{rn}"]}
-        )
-        self._merge_and_recompute(
-            spark, rows, epoch_id, stats["fb"], out_touched,
-            n_rows=stats["n"],
-        )
-        rows.unpersist(False)
 
     def _fact_bucket(self) -> F.Column:
         pcols = [F.col(c) for c in self.partition_cols]
@@ -215,20 +199,32 @@ class ChangelogTopN:
         spark: SparkSession,
         rows: DataFrame,
         epoch_id: int,
-        fact_buckets: Sequence[int],
-        out_buckets: Sequence[int],
-        n_rows: int | None = None,
+        per: list,
+        committed,
     ) -> None:
-        """Fact-state upsert + touched-partition rank recompute + view
-        upsert — the batch pipeline shared by the plain and TTL paths
-        (``rows`` already contains any synthesized expiry retractions)."""
+        """The epoch's commit step (``ttl.fused_epoch``): fact-state
+        upsert + touched-partition rank recompute + view upsert.
+        ``rows`` already contains any synthesized expiry retractions;
+        ``per`` is the stats collect, one row per fact bucket."""
+        fact_buckets = sorted(
+            {r["__b"] for r in per} | committed(self.fact_state)
+        )
+        out_buckets = sorted(
+            {
+                b
+                for r in per
+                for rn in range(1, self.n + 1)
+                for b in r[f"ob{rn}"]
+            }
+            | committed(self.output)
+        )
         # 1. fact state stays current
         self.fact_state.upsert(
             rows,
             order_by=CHANGELOG_ORDER_BY,
             epoch_id=epoch_id,
             touched=fact_buckets,
-            batch_rows=n_rows,
+            batch_rows=sum(r["cnt"] for r in per),
         )
 
         # 2. touched partitions (before-images included — re-pointing)
@@ -312,97 +308,12 @@ class ChangelogTopN:
             touched=out_buckets,
         )
 
-    def _finalize_if_staged(self, epoch_id, exp, cutoff) -> None:
-        """Early-exit twin of the post-commit finalize — see
-        ``ChangelogAggregate._finalize_if_staged`` (a stranded published
-        stage reads as a crashed pass; r10)."""
-        if exp:
-            self._ttl_proto.finalize(epoch_id, exp, cutoff, {}, None)
-
-    def _apply_with_ttl(
-        self, spark: SparkSession, rows: DataFrame | None, epoch_id: int
-    ) -> None:
-        """TTL twin of the fused stats + pipeline (mirrors
-        ``ChangelogAggregate._apply_with_ttl`` — see ``streaming/ttl.py``
-        for the staging/bounds protocol): folds the staged expiry
-        retractions into the batch, groups the stats agg per fact bucket
-        to maintain the min-ts bounds (same single driver action), and
-        unions each table's committed-at-this-epoch buckets in so
-        replays of shrunken effective batches stay legal."""
-        exp, cutoff, syn = self._ttl_proto.stage(spark, epoch_id)
-        parts = []
-        if rows is not None:
-            parts.append(rows.withColumn("__syn", F.lit(False)))
-        if syn is not None:
-            order = parts[0].columns if parts else None
-            flagged_syn = syn.withColumn("__syn", F.lit(True))
-            if order is not None:
-                flagged_syn = flagged_syn.select(*order)
-            parts.append(flagged_syn)
-        if not parts:
-            self._finalize_if_staged(epoch_id, exp, cutoff)
-            return
-        flagged = parts[0]
-        for p in parts[1:]:
-            flagged = flagged.unionByName(p)
-        wflagged = self._with_partition(flagged)
-        pcols = [F.col(c) for c in self.partition_cols]
-        live_ts = F.when(~F.col("__syn"), F.col(self.ttl_col))
-        per_bucket = (
-            wflagged.groupBy(self._fact_bucket().alias("__fb"))
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum(F.col("__syn").cast("long")).alias("syn_n"),
-                F.min(live_ts).alias("bmin"),
-                F.max(live_ts).alias("bmax"),
-                *[
-                    F.collect_set(
-                        self.output.bucket_for(*pcols, F.lit(rn))
-                    ).alias(f"ob{rn}")
-                    for rn in range(1, self.n + 1)
-                ],
-            )
-            .collect()
-        )
-        if not per_bucket:
-            self._finalize_if_staged(epoch_id, exp, cutoff)
-            return
-        self.expired_applied += sum(r["syn_n"] for r in per_bucket)
-        fb = sorted(
-            {r["__fb"] for r in per_bucket}
-            | committed_at(self.fact_state, epoch_id)
-        )
-        ob = sorted(
-            {
-                b
-                for r in per_bucket
-                for rn in range(1, self.n + 1)
-                for b in r[f"ob{rn}"]
-            }
-            | committed_at(self.output, epoch_id)
-        )
-        self._merge_and_recompute(
-            spark, flagged.drop("__syn"), epoch_id, fb, ob,
-            n_rows=sum(r["cnt"] for r in per_bucket),
-        )
-        wm_cands = [v for v in (r["bmax"] for r in per_bucket) if v is not None]
-        self._ttl_proto.finalize(
-            epoch_id,
-            exp,
-            cutoff,
-            {
-                str(r["__fb"]): r["bmin"]
-                for r in per_bucket
-                if r["bmin"] is not None
-            },
-            max(wm_cands) if wm_cands else None,
-        )
-
     def expire(self, spark: SparkSession, epoch_id: int) -> None:
         """Expiry-only pass (no input batch) under a FRESH epoch id —
         retracts every fact the CURRENT stored watermark has aged out
         (per-batch expiry lags one epoch: cutoffs come from the
-        watermark the epoch's predecessors committed).  A recycled
+        watermark the epoch's predecessors committed).  Drives the
+        normal batch pipeline with an empty envelope frame.  A recycled
         epoch id is REFUSED (``check_expire_epoch``): it would silently
         no-op the retractions while sealing the expiry bounds."""
         if self.ttl is None:
@@ -410,7 +321,10 @@ class ChangelogTopN:
         check_expire_epoch(
             epoch_id, self.fact_state, self.output, ttl=self._ttl_proto
         )
-        self._apply_with_ttl(spark, None, epoch_id)
+        self.process_batch(
+            spark.createDataFrame([], "value string, file string, pos long"),
+            epoch_id,
+        )
 
     def read_view(self, spark: SparkSession) -> DataFrame | None:
         """Current Top-N contents: the DECLARED physical columns + rank —

@@ -15,9 +15,14 @@ exactly the facts inside the retention window — a DuckDB-checkable
 oracle (witnesses: ``changelog_agg_ttl_replay``,
 ``changelog_join_ttl_replay``).
 
-Mechanics shared by every consumer (the consumer folds the synthesized
-retraction images into its OWN per-batch pipeline, so an expiry adds no
-extra state commits or recompute passes):
+Every IVM epoch — with or without TTL — runs through one function,
+:func:`fused_epoch`: it stages the expiry decision, folds the
+synthesized retraction images into the consumer's OWN batch (so an
+expiry adds no extra state commits or recompute passes), runs the
+consumer's single grouped stats collect, and calls the consumer's
+commit step between ``stage()`` and ``finalize()``.  The consumer
+supplies only its bucket key, its output-bucket sets and that commit
+step.  Mechanics:
 
 - **Per-bucket min-ts bounds** (``__ttl_bounds.json``): the expiry scan
   reads only state buckets whose lower bound the cutoff has reached —
@@ -54,10 +59,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.prepared import prepared
 from .statetable import PartitionedStateTable
 
 
@@ -173,6 +180,93 @@ def committed_at(table: PartitionedStateTable, epoch_id: int) -> set[int]:
         for b, v in table._bucket_items(table.load_manifest())
         if v == epoch_id
     }
+
+
+def _shared_stats(ts_col: str | None) -> list[Column]:
+    """The stats every epoch collects per group: row count, retraction
+    images applied, and — under TTL — the min/max event time of the
+    GENUINE images (the bounds and watermark candidates)."""
+
+    def build():
+        aggs = [
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(F.col("__syn").cast("long")).alias("syn_n"),
+        ]
+        if ts_col is not None:
+            live_ts = F.when(~F.col("__syn"), F.col(ts_col))
+            aggs += [F.min(live_ts).alias("bmin"), F.max(live_ts).alias("bmax")]
+        return aggs
+
+    return prepared(("ivm_epoch_stats", ts_col), build)
+
+
+def fused_epoch(
+    consumer,
+    spark: SparkSession,
+    epoch_id: int,
+    rows: DataFrame,
+    key: Sequence[Column | str],
+    out_sets: Sequence[Column],
+    commit: Callable,
+    frame: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
+    """One IVM epoch of ``consumer``, whether or not it has TTL: stage the
+    expiry decision, fold its retraction images into ``rows`` (the
+    parsed fact-side batch) under a ``__syn`` flag, run the epoch's ONE
+    grouped stats collect (the only driver action before the commits
+    besides the expiry scan), call the commit step, then finalize the
+    bounds and watermark.
+
+    ``key`` groups the collect and must name the fact-state bucket of a
+    fact-side row ``__b``; ``out_sets`` are the consumer's own aggregate
+    columns (the output buckets its commit touches); ``frame`` projects
+    the flagged rows first (the join unions its dim side in).
+    ``commit(spark, batch, epoch_id, per, committed)`` receives the
+    batch with the retractions folded in, the collected rows, and
+    ``committed(table)``: the buckets this epoch already committed to
+    ``table``.  Under TTL a retry's effective batch may have SHRUNK (its
+    expiry images are already merged), so the commit must union those
+    in; without TTL ``committed`` is empty — a union there would mask a
+    recycled epoch id from the upsert's epoch-reuse guard."""
+    ttl = consumer._ttl_proto
+    exp, cutoff, syn = (
+        ttl.stage(spark, epoch_id) if ttl is not None else ([], None, None)
+    )
+    flagged = rows.withColumn("__syn", F.lit(False))
+    if syn is not None:
+        flagged = flagged.unionByName(
+            syn.select(*rows.columns).withColumn("__syn", F.lit(True))
+        )
+    probe = flagged if frame is None else frame(flagged)
+    stats = _shared_stats(ttl.ttl_col if ttl is not None else None)
+    per = probe.groupBy(*key).agg(*stats, *out_sets).collect()
+    if per:
+        consumer.expired_applied += sum(r["syn_n"] for r in per)
+        commit(
+            spark,
+            rows if syn is None else flagged.drop("__syn"),
+            epoch_id,
+            per,
+            lambda t: committed_at(t, epoch_id) if ttl is not None else set(),
+        )
+    elif not exp:
+        return
+    # An empty epoch whose staged decision retracted nothing mutates no
+    # state, but its PUBLISHED stage must still be finalized
+    # (conservative bounds from the staged survivor minima, then GC) — a
+    # stranded stage reads as a crashed pass and every later epoch's
+    # stage() refuses to start (r10).
+    if ttl is not None:
+        # post-commit metadata (monotone / conservative); bmin is None
+        # for groups without genuine fact images (the join's dim side)
+        wm = [r["bmax"] for r in per if r["bmax"] is not None]
+        ttl.finalize(
+            epoch_id,
+            exp,
+            cutoff,
+            {str(r["__b"]): r["bmin"] for r in per if r["bmin"] is not None},
+            max(wm) if wm else None,
+        )
 
 
 class EventTimeTTL:

@@ -959,7 +959,7 @@ def measure_agg_ttl_expiry(
 
     # stage the decision first (expire() reuses it) so the scan set and
     # bytes are reportable without instrumenting the class
-    exp, _cutoff, _syn = agg._stage_expiry(spark, build_epochs)
+    exp, _cutoff, _syn = agg._ttl_proto.stage(spark, build_epochs)
     full_bytes = _state_bytes(agg.fact_state)
     scan_bytes = _pruned_bytes(agg.fact_state, exp)
     t0 = time.perf_counter()
@@ -977,7 +977,7 @@ def measure_agg_ttl_expiry(
     probe.count()
     agg.process_batch(probe, epoch_id=build_epochs + 1)
     probe.unpersist()
-    exp2, _c2, _s2 = agg._stage_expiry(spark, build_epochs + 2)
+    exp2, _c2, _s2 = agg._ttl_proto.stage(spark, build_epochs + 2)
 
     view = agg.read_view(spark)
     groups = 0 if view is None else view.count()

@@ -357,7 +357,7 @@ def test_ttl_expires_facts_and_retracts_view(spark, tmp_path):
         epoch_id=0,
     )
     assert view(spark, agg) == {1: (2, 12.0, 5.0, 7.0), 2: (1, 3.0, 3.0, 3.0)}
-    assert agg._load_wm() == 1000
+    assert agg._ttl_proto.load_wm() == 1000
 
     # epoch 1: cutoff = 1000 - 100 = 900 -> o1 (ets 100) and o3 (ets 150)
     # expire; cust 2's group empties out of the view entirely
@@ -462,9 +462,9 @@ def test_ttl_bounds_prune_the_expiry_scan(spark, tmp_path):
     # every surviving fact's ts > cutoff (900), so every stored bucket's
     # bound must now sit above it: the next epoch's expiry scan reads
     # ZERO buckets
-    bounds = agg._load_bounds()
+    bounds = agg._ttl_proto.load_bounds()
     assert bounds and all(v > 900 for v in bounds.values())
-    exp, _cutoff, syn = agg._stage_expiry(spark, epoch_id=2)
+    exp, _cutoff, syn = agg._ttl_proto.stage(spark, epoch_id=2)
     assert exp == [] and syn is None
 
 
@@ -497,7 +497,7 @@ def test_ttl_preexisting_dir_facts_still_expire(spark, tmp_path):
     agg.process_batch(
         raw_df(spark, [env("c", _row(4, 1, 2.0, 2000), pos=10)]), epoch_id=1
     )
-    assert agg._load_bounds() == {}, (
+    assert agg._ttl_proto.load_bounds() == {}, (
         "no bucket live before the epoch may receive a seeded bound"
     )
     assert view(spark, agg) == {1: (2, 7.0, 2.0, 5.0)}

@@ -155,6 +155,35 @@ def test_topn_replayed_epoch_idempotent(spark, tmp_path):
     assert view(spark, t) == before
 
 
+def test_topn_recycled_epoch_with_other_bucket_is_refused(spark, tmp_path):
+    """A consumer without TTL must not widen its touched sets with the
+    buckets an epoch already committed: a recycled epoch id carrying a
+    group in ANOTHER fact bucket has to hit the state table's
+    epoch-reuse guard instead of silently rewriting epoch 0's buckets."""
+    from pyspark.sql import functions as F
+
+    t = make_topn(tmp_path)
+    buckets = dict(
+        spark.createDataFrame([(c,) for c in range(1, 20)], "cust_id long")
+        .select("cust_id", t.fact_state.bucket_for(F.col("cust_id")))
+        .collect()
+    )
+    other = next(c for c in range(2, 20) if buckets[c] != buckets[1])
+    t.process_batch(
+        raw_df(spark, [
+            env("c", {"o_id": 1, "cust_id": 1, "amount": 5.0}, pos=0),
+        ]),
+        epoch_id=0,
+    )
+    with pytest.raises(ValueError, match="fresh epoch id"):
+        t.process_batch(
+            raw_df(spark, [
+                env("c", {"o_id": 2, "cust_id": other, "amount": 7.0}, pos=0),
+            ]),
+            epoch_id=0,
+        )
+
+
 def test_topn_ascending_bottom_n(spark, tmp_path):
     t = ChangelogTopN(
         "orders", ORDERS, key="o_id", partition_cols=["cust_id"],
