@@ -24,7 +24,7 @@ still broken).  So both drivers draw from ONE persistent allocator:
 - :class:`EpochSequencer` maps ``(source, source_id)`` — e.g.
   ``("stream", ss_batch_id)`` or ``("idle", ticker_batch_id)`` — to a
   monotonically increasing internal epoch, persisted atomically
-  (write-tmp + ``os.replace``) BEFORE the id is returned, so a retried
+  (:func:`~.statetable.store_json`) BEFORE the id is returned, so a retried
   Structured Streaming batch re-allocates the SAME internal epoch and
   the consumer's replay convergence is untouched.  Replays older than
   the bounded mapping window (a backup-restored checkpoint) are refused
@@ -47,12 +47,12 @@ expirable (measured scale-flat, SCALING.md r9).
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 
 from pyspark.sql import SparkSession
 
+from .statetable import load_json, store_json
 from .ttl import max_committed_epoch
 
 #: retries can only re-deliver recent epochs (Structured Streaming
@@ -114,11 +114,7 @@ class EpochSequencer:
         return os.path.join(self.meta_dir, f"__{self.name}.json")
 
     def _load(self) -> dict:
-        try:
-            with open(self._path()) as f:
-                st = json.load(f)
-        except FileNotFoundError:
-            st = {"last": -1, "map": {}, "max_src": {}}
+        st = load_json(self._path(), {"last": -1, "map": {}, "max_src": {}})
         # highest source_id actually TRIMMED per source (ADVICE r10: the
         # refusal message must distinguish a trimmed mapping from an id
         # that was simply never allocated); absent in pre-r11 files —
@@ -126,13 +122,6 @@ class EpochSequencer:
         # never the refusal itself
         st.setdefault("trim_max", {})
         return st
-
-    def _store(self, st: dict) -> None:
-        os.makedirs(self.meta_dir, exist_ok=True)
-        tmp = self._path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, self._path())
 
     def last(self) -> int:
         """Highest internal epoch allocated so far (-1 if none) — the
@@ -201,7 +190,7 @@ class EpochSequencer:
                     int(trimmed[-1][len(source) + 1 :]),
                 )
             st["max_src"][source] = source_id
-            self._store(st)
+            store_json(self._path(), st)
             return internal
 
 
@@ -276,17 +265,9 @@ class IdleExpiryMonitor:
         )
 
     def _load(self) -> dict:
-        try:
-            with open(self._state_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"seen": None, "idle": 0, "done_at": None}
-
-    def _store(self, st: dict) -> None:
-        tmp = self._state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, self._state_path)
+        return load_json(
+            self._state_path, {"seen": None, "idle": 0, "done_at": None}
+        )
 
     def on_trigger(self, spark: SparkSession, trigger_id: int) -> bool:
         """One ticker tick; returns whether an expiry pass ran.  The
@@ -305,11 +286,14 @@ class IdleExpiryMonitor:
         cur = self.seq.last()
         st = self._load()
         if st["seen"] != cur:
-            self._store({"seen": cur, "idle": 0, "done_at": st["done_at"]})
+            store_json(
+                self._state_path,
+                {"seen": cur, "idle": 0, "done_at": st["done_at"]},
+            )
             return False
         st["idle"] += 1
         if st["idle"] < self.idle_triggers or st["done_at"] == cur:
-            self._store(st)
+            store_json(self._state_path, st)
             return False
         tables = _consumer_tables(self.consumer)
         mx = max_committed_epoch(*tables)
@@ -346,7 +330,9 @@ class IdleExpiryMonitor:
             # else: a retried tick whose pass FULLY committed (stage
             # GC'd) — the work is done; recording below keeps it silent
         now = self.seq.last()
-        self._store({"seen": now, "idle": 0, "done_at": now})
+        store_json(
+            self._state_path, {"seen": now, "idle": 0, "done_at": now}
+        )
         return True
 
 

@@ -59,7 +59,6 @@ pruned shsets read additionally tolerates None/missing buckets outright
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -392,52 +391,37 @@ def _migrate_one(
     """Migrate ONE index store in place to the current layout.  Handles
     both legacy shapes:
 
-    - **raw pre-r8 dirs** (plain ``mode("append")`` parquet, no
-      ``_manifest.json``): read with the old read-side dedup, stamp every
-      row ``__epoch = 0``;
+    - **raw pre-r8 dirs** (plain ``mode("append")`` parquet, no state
+      table): read with the old read-side dedup, stamp every row
+      ``__epoch = 0``;
     - **r8 state tables with a different bucket spec** (bands was
       doc_id-bucketed): layout-agnostic ``read()``, original ``__epoch``
       stamps preserved.
 
-    The rewrite is semantically a compaction into the new layout: one
-    ``c0`` version, ``__folded_max`` set to the highest migrated integer
-    epoch so a replayed append of any migrated epoch no-ops.  Built as a
-    complete sibling dir then swapped in with two renames — run with the
-    stream STOPPED; a crash mid-swap leaves ``<path>__old``/``__new``
-    dirs to resolve (re-running after restoring ``<path>`` is safe).
-    Returns whether a migration happened."""
+    The rewrite is a compaction into the new layout
+    (:meth:`~.statetable.PartitionedStateTable.adopt`), so a replayed
+    append of any migrated epoch no-ops.  Built as a complete sibling dir
+    then swapped in with two renames — run with the stream STOPPED; a
+    crash mid-swap leaves ``<path>__old``/``__new`` dirs to resolve
+    (re-running after restoring ``<path>`` is safe).  Returns whether a
+    migration happened."""
     if not os.path.isdir(path):
         return False
     new = PartitionedStateTable(
         path + "__new", keys, n_buckets=n_buckets, bucket_cols=bucket_cols
     )
-    if os.path.exists(os.path.join(path, "_manifest.json")):
-        old_spec_path = os.path.join(path, "_spec.json")
-        spec = {"n_buckets": new.n_buckets, "bucket_cols": new.bucket_cols}
-        if os.path.exists(old_spec_path):
-            with open(old_spec_path) as f:
-                if json.load(f) == spec:
-                    return False  # already the current layout
-        cur = PartitionedStateTable(path, keys)  # read() is layout-agnostic
-        df = cur.read(spark)
+    cur = PartitionedStateTable(
+        path, keys, n_buckets=n_buckets, bucket_cols=bucket_cols
+    )
+    source = None
+    if cur.exists():
+        if cur.spec_matches():
+            return False  # already the current layout
+        df = cur.read(spark)  # read() is layout-agnostic
         if df is None:
             shutil.rmtree(path)
             return False
-        manifest = cur.load_manifest()
-        folded_max = manifest.get(PartitionedStateTable._FOLDED_MAX, -1)
-        epochs = {
-            v
-            for _, vs in PartitionedStateTable._bucket_items(manifest)
-            for v in (vs if isinstance(vs, list) else [vs])
-            if isinstance(v, int)
-        }
-        epochs.update(
-            e
-            for e in manifest.get(PartitionedStateTable._SUBSUMED, [])
-            if isinstance(e, int)
-        )
-        if epochs:
-            folded_max = max(folded_max, max(epochs))
+        source = cur
     else:
         # raw pre-r8 layout: at-least-once appends, so dedup on read;
         # strip legacy extras (pairs carried an `epoch` column) and stamp
@@ -448,23 +432,8 @@ def _migrate_one(
             .select(*raw_select)
             .withColumn("__epoch", F.lit(0))
         )
-        folded_max = 0
     shutil.rmtree(new.path, ignore_errors=True)  # crashed prior attempt
-    new._check_spec(stamp=True)
-    version_dir = os.path.join(new.path, "_data", "v=c0")
-    df.withColumn("__bucket", new._bucket()).write.mode("overwrite").partitionBy(
-        "__bucket"
-    ).parquet(version_dir)
-    touched = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(version_dir)
-        if d.startswith("__bucket=")
-    ]
-    new_manifest: dict = {str(b): ["c0"] for b in touched}
-    if folded_max >= 0:
-        new_manifest[PartitionedStateTable._FOLDED_MAX] = folded_max
-    with open(os.path.join(new.path, "_manifest.json"), "w") as f:
-        json.dump(new_manifest, f)
+    new.adopt(df, source)
     old = path + "__old"
     shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)

@@ -9,8 +9,8 @@ replayable-storage equivalent is an idempotent commit ledger:
 1. each epoch writes its rows under ``_data/epoch=<id>`` (an overwrite —
    a retry of the same epoch clobbers its own partial output, never
    another epoch's);
-2. the epoch id is then committed to ``_ledger.json`` via write-tmp +
-   ``os.replace`` (atomic commit point);
+2. the epoch id is then committed to ``_ledger.json`` through the state
+   layer's one atomic publish, :func:`~.statetable.store_json`;
 3. readers (:func:`read_committed`) union exactly the ledgered epochs —
    a crash between write and commit leaves an orphan directory that is
    invisible, re-written on retry, and never double-counted.
@@ -39,11 +39,12 @@ Pass ``compact_threshold`` to fold automatically inside
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .statetable import fold_schema, load_json, schema_reader, store_json
 
 _LEDGER = "_ledger.json"
 _DATA = "_data"
@@ -80,21 +81,12 @@ class ExactlyOnceAppendSink:
     def _load_ledger(self) -> dict:
         """{"epochs": [loose ints], "merged": [{"lo","hi","dir"}],
         "compact_seq": int} — reads the pre-r8 epochs-only format too."""
-        try:
-            with open(self._ledger_path()) as f:
-                led = json.load(f)
-        except FileNotFoundError:
-            return {"epochs": [], "merged": [], "compact_seq": 0}
+        led = load_json(
+            self._ledger_path(), {"epochs": [], "merged": [], "compact_seq": 0}
+        )
         led.setdefault("merged", [])
         led.setdefault("compact_seq", 0)
         return led
-
-    def _store_ledger(self, led: dict) -> None:
-        tmp = self._ledger_path() + ".tmp"
-        os.makedirs(self.path, exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump(led, f)
-        os.replace(tmp, self._ledger_path())  # atomic commit point
 
     @staticmethod
     def _tier_dirs(m: dict) -> list[str]:
@@ -122,47 +114,6 @@ class ExactlyOnceAppendSink:
     def _merged_dir(self, name: str) -> str:
         return os.path.join(self.path, _DATA, name)
 
-    # -- stored file schema (r13, the statetable trick applied to the
-    # ledger): readers passed mergeSchema over every committed epoch dir
-    # — a driver-side footer merge of every file at PLAN time on every
-    # read.  Each commit folds its written schema into the ledger as a
-    # monotone union (new columns only ADD; old files NULL-fill by
-    # parquet name resolution — exactly what mergeSchema produced); the
-    # entry is ABSENT — falling readers back to mergeSchema — for
-    # pre-schema-era ledgers with live unknown files and on field-type
-    # drift, where a claimed union would be unsound.
-    @staticmethod
-    def _fold_schema(led: dict, written_schema) -> None:
-        from pyspark.sql import types as T
-
-        stored = led.get("schema")
-        if stored is None:
-            if led["epochs"] or led["merged"]:
-                return  # live files of unknown schema: stay mergeSchema
-            led["schema"] = written_schema.json()
-            return
-        old = T.StructType.fromJson(json.loads(stored))
-        by_name = {f.name: f for f in old.fields}
-        out = list(old.fields)
-        for f in written_schema.fields:
-            g = by_name.get(f.name)
-            if g is None:
-                out.append(f)
-            elif g.dataType.simpleString() != f.dataType.simpleString():
-                led.pop("schema", None)  # type drift — only mergeSchema
-                return
-        led["schema"] = T.StructType(out).json()
-
-    def _reader(self, spark: SparkSession, led: dict):
-        from pyspark.sql import types as T
-
-        stored = led.get("schema")
-        if stored is not None:
-            return spark.read.schema(
-                T.StructType.fromJson(json.loads(stored))
-            )
-        return spark.read.option("mergeSchema", "true")
-
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         led = self._load_ledger()
         if epoch_id in led["epochs"] or any(
@@ -174,12 +125,16 @@ class ExactlyOnceAppendSink:
         out_dir = self._epoch_dir(epoch_id)
         # overwrite = a retry clobbers its own earlier partial write
         batch.write.mode("overwrite").parquet(out_dir)
-        # fold BEFORE recording the epoch: the legacy-dir guard must see
-        # only files committed by PRIOR epochs (this epoch's schema is
-        # exactly `batch.schema`)
-        self._fold_schema(led, batch.schema)
+        # the ledger keeps the union schema of every committed file so
+        # readers skip mergeSchema (statetable.fold_schema); fold BEFORE
+        # recording the epoch: the legacy-dir guard must see only files
+        # committed by PRIOR epochs (this epoch's schema is exactly
+        # `batch.schema`)
+        fold_schema(
+            led, "schema", bool(led["epochs"] or led["merged"]), batch.schema
+        )
         led["epochs"] = sorted([*led["epochs"], epoch_id])
-        self._store_ledger(led)
+        store_json(self._ledger_path(), led)
         if (
             self.compact_threshold is not None
             and len(led["epochs"]) > self.compact_threshold
@@ -203,9 +158,6 @@ class ExactlyOnceAppendSink:
             return False
         seq = led["compact_seq"] + 1
         name = f"merged={seq}"
-        self._reader(spark, led).parquet(
-            *[self._epoch_dir(e) for e in fold]
-        ).write.mode("overwrite").parquet(self._merged_dir(name))
         # second-level ledger fold (VERDICT r8 #8): tiers are committed in
         # epoch order over DENSE epoch ids (every trigger commits, so the
         # new range abuts the previous tier's high end — and a gap id at
@@ -230,9 +182,9 @@ class ExactlyOnceAppendSink:
             "merged": [entry],
             "compact_seq": seq,
         }
-        if "schema" in led:
-            new_led["schema"] = led["schema"]
-        self._store_ledger(new_led)  # the swap commits the fold
+        self._rewrite(
+            spark, led, [self._epoch_dir(e) for e in fold], name, new_led
+        )
         for e in fold:  # GC best-effort, post-commit
             shutil.rmtree(self._epoch_dir(e), ignore_errors=True)
         if (
@@ -257,9 +209,6 @@ class ExactlyOnceAppendSink:
             return False
         seq = led["compact_seq"] + 1
         name = f"merged={seq}"
-        self._reader(spark, led).parquet(
-            *[self._merged_dir(d) for d in dirs]
-        ).write.mode("overwrite").parquet(self._merged_dir(name))
         new_led = {
             "epochs": led["epochs"],
             "merged": [
@@ -271,12 +220,34 @@ class ExactlyOnceAppendSink:
             ],
             "compact_seq": seq,
         }
-        if "schema" in led:
-            new_led["schema"] = led["schema"]
-        self._store_ledger(new_led)
+        self._rewrite(
+            spark, led, [self._merged_dir(d) for d in dirs], name, new_led
+        )
         for d in dirs:
             shutil.rmtree(self._merged_dir(d), ignore_errors=True)
         return True
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        led: dict,
+        paths: list[str],
+        name: str,
+        new_led: dict,
+    ) -> None:
+        """Rewrite ``paths`` into the consolidated dir ``name``, then
+        publish ``new_led`` — the swap commits the rewrite.  The stored
+        schema carries over; a ledger without one (pre-schema era, type
+        drift) takes the rewrite's schema when the rewrite holds every
+        live file — no earlier tier, no loose epoch left — as a table
+        compaction re-establishes explicit-schema reads (ADVICE r13)."""
+        df = schema_reader(spark, led.get("schema")).parquet(*paths)
+        df.write.mode("overwrite").parquet(self._merged_dir(name))
+        if "schema" in led:
+            new_led["schema"] = led["schema"]
+        elif not new_led["epochs"] and new_led["merged"][0]["dirs"] == [name]:
+            new_led["schema"] = df.schema.json()
+        store_json(self._ledger_path(), new_led)
 
     def read_committed(self, spark: SparkSession) -> DataFrame | None:
         led = self._load_ledger()
@@ -287,7 +258,7 @@ class ExactlyOnceAppendSink:
         ] + [self._epoch_dir(e) for e in led["epochs"]]
         if not paths:
             return None
-        return self._reader(spark, led).parquet(*paths)
+        return schema_reader(spark, led.get("schema")).parquet(*paths)
 
     def gc_uncommitted(self) -> list[int]:
         """Remove orphan epoch directories (written but never committed —

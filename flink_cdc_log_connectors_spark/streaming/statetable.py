@@ -1,5 +1,8 @@
 """Key-bucketed, manifest-versioned parquet state table for foreachBatch
-materialization sinks.
+materialization sinks — and the ONE owner of the streaming layer's
+on-disk format: every other module reaches state through this table's
+methods and publishes its small metadata files through
+:func:`store_json`.
 
 Round 1 materialized changelogs by rewriting the ENTIRE state parquet per
 microbatch — O(total state) work per batch, 2× write amplification, and a
@@ -17,15 +20,28 @@ r1).  This module is the scale-safe replacement:
   and verified on every commit and pruned read: resuming a state dir with
   a different ``n_buckets`` or ``bucket_cols`` is refused instead of
   silently merging against buckets the new hash never probes.
-- **Manifest + versioned directories** — each upsert writes touched
-  buckets under a fresh ``_data/v=<epoch>/__bucket=<n>`` directory (one
-  job, ``partitionBy``), then atomically repoints ``_manifest.json``
-  (write-tmp + ``os.replace``) at the new versions.  A crash before the
-  manifest swap leaves the previous manifest — and therefore the previous
-  consistent state — fully intact; a Structured Streaming retry of the
-  same epoch overwrites the same version directory, so the swap is
-  idempotent.  Superseded bucket versions are garbage-collected
-  best-effort AFTER the swap.
+- **Manifest + versioned directories** — ``upsert`` runs these steps:
+
+  1. collect the touched buckets (``_collect_touched``);
+  2. heal ``_old_v*`` dirs a crashed replay swap stranded (``_heal``);
+  3. read the touched buckets' prior rows, merge the batch (``_merge``);
+  4. write ``_data/v=<epoch>/__bucket=<n>`` in one ``partitionBy`` job,
+     directly or as a replay swap (``_write_version``);
+  5. commit: stamp the union file schema, atomically repoint
+     ``_manifest.json`` at the new versions (``_commit``);
+  6. GC after the commit: retention sweep, superseded buckets, stranded
+     ``_tmp_v*``/``_old_v*`` dirs (``_gc``).
+
+  ``append`` and ``compact`` share steps 4 and 5.  A crash before the
+  manifest swap leaves the previous manifest — and therefore the
+  previous consistent state — fully intact; a Structured Streaming retry
+  of the same epoch overwrites the same version directory, so the swap
+  is idempotent.
+- **One publish point** — :func:`store_json` (write ``<path>.tmp``, then
+  ``os.replace``) is the only way a metadata file in this package is
+  written: the manifest, spec and history here, the sink ledger, the TTL
+  watermark and bounds, the epoch sequencer and idle-monitor state, and
+  the temporal join's watermark.
 - **No swallowed errors** — state existence is explicit (bucket present
   in the manifest), so there is no ``except Exception: first batch``
   anywhere; a corrupt manifest or unreadable bucket raises.
@@ -90,16 +106,95 @@ _COMMIT_TARGET_BYTES = 128 << 20
 _COMMIT_TASK_ROWS = 1 << 20
 
 
+# -- small metadata files ---------------------------------------------------
+def load_json(path: str, default):
+    """The JSON document at ``path``, or ``default`` when the file does
+    not exist; anything else unreadable raises (never treated as a fresh
+    start)."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return default
+
+
+def store_json(path: str, obj) -> None:
+    """Publish ``obj`` at ``path`` atomically: write ``<path>.tmp``, then
+    ``os.replace`` it over ``path`` — readers see the old document or the
+    new one, never a torn write.  Creates the parent directory, so a
+    metadata file may be the first thing written under a fresh dir."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)  # the atomic commit point
+
+
+# -- stored file schema -----------------------------------------------------
+# Readers pass the UNION schema of every live data file as an explicit
+# ``.schema(...)`` instead of ``mergeSchema=true``, which pays a
+# driver-side footer merge of every file at PLAN time on every read
+# (measured ~250 ms per read at witness scale, and ~2× the scan's
+# execution time).  Maintained as a monotone union: each commit merges
+# the written frame's schema in (L6 widenings only ever ADD columns; old
+# files lacking a column read as NULL by parquet name-based resolution —
+# exactly what mergeSchema produced).  The entry is DROPPED — falling
+# every reader back to mergeSchema — when the union is unsafe: live files
+# of unknown schema (a pre-schema-era dir), or a field whose TYPE drifted
+# (a widening coercion in unionByName); a full rewrite of every live file
+# re-establishes it.  SUPERSET guarantee (ADVICE r12, documented trade):
+# the union is monotone, so a column whose last containing file is
+# deleted or rewritten stays in the stored schema and explicit-schema
+# reads surface it as an all-NULL column where a fresh footer merge would
+# drop it — a wider-but-compatible schema, never missing data.
+def fold_schema(meta: dict, key: str, has_files: bool, written_schema):
+    """Fold ``written_schema`` into the union schema stored under
+    ``meta[key]`` (JSON), in place, and return the new entry — or pop the
+    entry and return None when the union is unsafe (see above).
+    ``has_files``: live files outside this write exist; with no stored
+    entry their schema is unknown."""
+    from pyspark.sql import types as T
+
+    stored = meta.get(key)
+    if stored is None:
+        if has_files:
+            return None  # live files of unknown schema: stay mergeSchema
+        meta[key] = written_schema.json()
+        return meta[key]
+    old = T.StructType.fromJson(json.loads(stored))
+    by_name = {f.name: f for f in old.fields}
+    out = list(old.fields)
+    for f in written_schema.fields:
+        g = by_name.get(f.name)
+        if g is None:
+            out.append(f)  # L6 widening: a genuinely new column
+        elif g.dataType.simpleString() != f.dataType.simpleString():
+            meta.pop(key, None)  # type drift — only mergeSchema is sound
+            return None
+    meta[key] = T.StructType(out).json()
+    return meta[key]
+
+
+def schema_reader(spark: SparkSession, stored: str | None):
+    """DataFrameReader for files whose union schema is ``stored`` (see
+    :func:`fold_schema`): the explicit schema when there is one (no
+    per-read footer merge), else ``mergeSchema``."""
+    from pyspark.sql import types as T
+
+    if stored is not None:
+        return spark.read.schema(T.StructType.fromJson(json.loads(stored)))
+    return spark.read.option("mergeSchema", "true")
+
+
 class PartitionedStateTable:
     """Upsert target for changelog materialization (see module docstring).
 
     ``retain_versions > 0`` enables TIME-TRAVEL reads: each commit also
-    appends its full manifest to ``_history.json`` (write-tmp +
-    ``os.replace``, same crash discipline), :meth:`read_at` reconstructs
-    the view AS OF any retained epoch, and garbage collection only
-    removes bucket versions no retained manifest references.  With the
-    default ``0`` nothing extra is written and GC is immediate — the
-    original behavior, byte for byte.
+    appends its full manifest to ``_history.json`` (same atomic publish),
+    :meth:`read_at` reconstructs the view AS OF any retained epoch, and
+    garbage collection only removes bucket versions no retained manifest
+    references.  With the default ``0`` nothing extra is written and GC
+    is immediate — the original behavior, byte for byte.
     """
 
     def __init__(
@@ -152,6 +247,9 @@ class PartitionedStateTable:
     def _spec_path(self) -> str:
         return os.path.join(self.path, "_spec.json")
 
+    def _spec(self) -> dict:
+        return {"n_buckets": self.n_buckets, "bucket_cols": self.bucket_cols}
+
     def _check_spec(self, stamp: bool) -> None:
         """Refuse to touch a state dir whose on-disk bucket layout
         (n_buckets / bucket columns) differs from this instance's:
@@ -161,11 +259,8 @@ class PartitionedStateTable:
         (``stamp=True``); pruned reads only verify, so read-only
         consumers never write.  Dirs written before the spec existed are
         accepted and stamped on their next commit."""
-        spec = {"n_buckets": self.n_buckets, "bucket_cols": self.bucket_cols}
-        try:
-            with open(self._spec_path()) as f:
-                existing = json.load(f)
-        except FileNotFoundError:
+        existing = load_json(self._spec_path(), None)
+        if existing is None:
             if self.load_manifest():
                 # committed data with NO recorded layout (pre-spec-era
                 # dir, or a hand-deleted spec): stamping THIS instance's
@@ -181,33 +276,34 @@ class PartitionedStateTable:
                     "spec) instead of resuming blind"
                 )
             if stamp:
-                os.makedirs(self.path, exist_ok=True)
-                tmp = self._spec_path() + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(spec, f)
-                os.replace(tmp, self._spec_path())
+                store_json(self._spec_path(), self._spec())
             return
-        if existing != spec:
+        if existing != self._spec():
             raise ValueError(
                 f"state table at {self.path} was committed with bucket "
-                f"layout {existing}, but this instance expects {spec}; "
-                "operating across layouts silently loses data — migrate "
-                "by rewriting the table"
+                f"layout {existing}, but this instance expects "
+                f"{self._spec()}; operating across layouts silently loses "
+                "data — migrate by rewriting the table"
             )
 
-    def _bucket_dir(self, version: int, bucket: int) -> str:
-        return os.path.join(
-            self.path, _DATA, f"v={version}", f"__bucket={bucket}"
-        )
+    def exists(self) -> bool:
+        """Whether this dir holds a committed state table (a manifest)."""
+        return os.path.exists(self._manifest_path())
+
+    def spec_matches(self) -> bool:
+        """Whether the dir's stamped bucket layout is this instance's."""
+        return load_json(self._spec_path(), None) == self._spec()
+
+    def _version_dir(self, version) -> str:
+        return os.path.join(self.path, _DATA, f"v={version}")
+
+    def _bucket_dir(self, version, bucket: int) -> str:
+        return os.path.join(self._version_dir(version), f"__bucket={bucket}")
 
     def load_manifest(self) -> dict[str, int]:
         """bucket-id (str) → version.  Missing manifest = empty table;
         anything else unreadable raises (never treated as first-batch)."""
-        try:
-            with open(self._manifest_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return load_json(self._manifest_path(), {})
 
     # -- time travel (retain_versions > 0) --------------------------------
     def _history_path(self) -> str:
@@ -215,17 +311,7 @@ class PartitionedStateTable:
 
     def load_history(self) -> list[dict]:
         """Retained commits, oldest→newest: [{"epoch": e, "manifest": {...}}]."""
-        try:
-            with open(self._history_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return []
-
-    def _store_history(self, entries: list[dict]) -> None:
-        tmp = self._history_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(entries, f)
-        os.replace(tmp, self._history_path())
+        return load_json(self._history_path(), [])
 
     def read_at(self, spark: SparkSession, epoch_id: int) -> DataFrame | None:
         """State AS OF ``epoch_id``: the view the latest retained commit
@@ -245,19 +331,9 @@ class PartitionedStateTable:
                 "retain_versions > 0"
             )
         manifest = eligible[-1]["manifest"]
-        buckets = self._bucket_items(manifest)
-        if not buckets:
-            return None
-        paths = [self._bucket_dir(v, int(b)) for b, v in buckets]
-        return self._reader(spark, manifest).parquet(*paths)
+        return self._scan(spark, manifest, self._live(manifest))
 
-    # -- read -------------------------------------------------------------
-    # mergeSchema: after an L6 schema widening, buckets written before
-    # the DDL lack the new column while later ones carry it; the default
-    # reader takes one file's schema and silently DROPS the new column
-    # from the union.  Footer merging costs one metadata read per bucket
-    # file — the buckets being read were paid for anyway.
-
+    # -- reserved manifest keys ---------------------------------------------
     #: reserved manifest key (not a bucket id): integer epochs whose
     #: appended rows live inside a compacted version — a REPLAYED append
     #: of such an epoch must be a no-op, not a duplicate (see append())
@@ -268,24 +344,9 @@ class PartitionedStateTable:
     #: referenced compacted version, no matter how epochs retry
     _COMPACT_SEQ = "__compact_seq"
     #: reserved manifest key: JSON of the UNION schema of every live data
-    #: file (r12 optimization) — readers pass it as an explicit
-    #: ``.schema(...)`` instead of ``mergeSchema=true``, which pays a
-    #: driver-side footer merge of every file at PLAN time on every read
-    #: (measured ~250 ms per read at witness scale, and ~2× the scan's
-    #: execution time).  Maintained as a monotone union: each commit
-    #: merges the written frame's schema in (L6 widenings only ever ADD
-    #: columns; old files lacking a column read as NULL by parquet
-    #: name-based resolution — exactly what mergeSchema produced).  The
-    #: key is DROPPED — falling every reader back to mergeSchema — when
-    #: the union is unsafe: a pre-existing dir with unknown file schemas,
-    #: or a field whose TYPE drifted (a widening coercion in unionByName);
-    #: ``compact()``'s full rewrite re-establishes it.  SUPERSET
-    #: guarantee (ADVICE r12, documented trade): the union is monotone,
-    #: so a column whose last containing file is deleted or rewritten
-    #: stays in the stored schema and explicit-schema reads surface it
-    #: as an all-NULL column where a fresh footer merge would drop it —
-    #: a wider-but-compatible schema, never missing data.  Append tables
-    #: get the exact live union back from ``compact()``; upsert-managed
+    #: file (r12 optimization, :func:`fold_schema`).  ``compact()``'s
+    #: full rewrite re-establishes a dropped entry.  Append tables get
+    #: the exact live union back from ``compact()``; upsert-managed
     #: consumers select named columns and are indifferent to trailing
     #: NULL columns.
     _SCHEMA = "__schema"
@@ -306,7 +367,69 @@ class PartitionedStateTable:
         ``__``-prefixed bookkeeping — excluded)."""
         return [(b, v) for b, v in manifest.items() if not b.startswith("__")]
 
-    # -- stored file schema (see _SCHEMA) -----------------------------------
+    @classmethod
+    def _live(cls, manifest: dict) -> list[int]:
+        return [int(b) for b, _ in cls._bucket_items(manifest)]
+
+    @staticmethod
+    def _versions(manifest: dict, bucket) -> list:
+        """The versions holding ``bucket``'s rows: one for an upsert
+        table, the list of an append table, none for an absent bucket."""
+        vs = manifest.get(str(bucket))
+        if vs is None:
+            return []
+        return vs if isinstance(vs, list) else [vs]
+
+    def _require(self, manifest: dict, append: bool, message: str) -> None:
+        """Refuse a table whose buckets are not all append-managed
+        (``append``) or all upsert-managed: a table is one or the
+        other."""
+        if any(
+            isinstance(v, list) != append
+            for _, v in self._bucket_items(manifest)
+        ):
+            raise ValueError(message)
+
+    # -- manifest queries for the other state-layer modules -----------------
+    def live_buckets(self) -> list[int]:
+        """Bucket ids holding committed rows."""
+        return self._live(self.load_manifest())
+
+    def committed_at(self, epoch_id: int) -> set[int]:
+        """Bucket ids whose current version is ``epoch_id`` — what this
+        epoch already committed (a retry unions them into its touched
+        set; the epoch-reuse guard refuses anything smaller)."""
+        return {
+            int(b)
+            for b, v in self._bucket_items(self.load_manifest())
+            if v == epoch_id
+        }
+
+    def max_committed_epoch(self) -> int | None:
+        """Highest integer epoch this table has committed, or None if it
+        committed nothing.  Append-managed tables are covered in full:
+        loose integer versions directly, and epochs folded into compacted
+        ``c<id>`` versions via the ``__folded_max`` watermark (ADVICE r10
+        — skipping non-int versions alone would UNDERSTATE the max on a
+        compacted table, and an expiry freshness guard would then
+        silently admit a recycled epoch id)."""
+        manifest = self.load_manifest()
+        folded = manifest.get(self._FOLDED_MAX)
+        eps = [folded] if isinstance(folded, int) else []
+        for b in self._live(manifest):
+            eps.extend(
+                v for v in self._versions(manifest, b) if isinstance(v, int)
+            )
+        return max(eps, default=None)
+
+    def compactions_committed(self) -> int:
+        """The manifest's monotone compaction counter — how far the
+        auto-compaction id sequence has advanced (0 = never compacted).
+        Observable proof that a compaction COMMITTED in this state dir,
+        replay-stable where an in-memory fired-count is not."""
+        return self.load_manifest().get(self._COMPACT_SEQ, 0)
+
+    # -- read -------------------------------------------------------------
     @staticmethod
     def _file_schema(schema):
         """The written FILE schema of a partitioned write: ``__bucket``
@@ -317,56 +440,19 @@ class PartitionedStateTable:
             [f for f in schema.fields if f.name != "__bucket"]
         )
 
-    def _schema_entry(
-        self, prior_manifest: dict, written_schema
-    ) -> str | None:
-        """Union of the stored schema and this commit's written file
-        schema as a JSON string — or None when storing is unsafe and
-        readers must keep footer-merging (see ``_SCHEMA``)."""
-        from pyspark.sql import types as T
-
-        new = self._file_schema(written_schema)
-        stored = prior_manifest.get(self._SCHEMA)
-        if stored is None:
-            if self._bucket_items(prior_manifest):
-                # pre-schema-era dir: files of unknown schema stay live
-                # after this commit, so no claimed union is sound
-                return None
-            return new.json()
-        old = T.StructType.fromJson(json.loads(stored))
-        by_name = {f.name: f for f in old.fields}
-        out = list(old.fields)
-        for f in new.fields:
-            g = by_name.get(f.name)
-            if g is None:
-                out.append(f)  # L6 widening: a genuinely new column
-            elif g.dataType.simpleString() != f.dataType.simpleString():
-                return None  # type drift — only mergeSchema is sound
-        return T.StructType(out).json()
-
-    def _stamp_schema(
-        self, new_manifest: dict, written_schema, prior_manifest: dict
-    ) -> None:
-        """Fold this commit's written schema into ``new_manifest``; the
-        legacy-dir and type-drift guards run against ``prior_manifest``
-        (the manifest BEFORE this commit — live files not rewritten by
-        this commit are exactly its bucket entries)."""
-        entry = self._schema_entry(prior_manifest, written_schema)
-        if entry is None:
-            new_manifest.pop(self._SCHEMA, None)
-        else:
-            new_manifest[self._SCHEMA] = entry
-
-    def _reader(self, spark: SparkSession, manifest: dict):
-        """DataFrameReader for this table's files: explicit stored schema
-        when the manifest carries one (no per-read footer merge), else
-        ``mergeSchema`` (pre-schema-era dirs; type-drifted tables)."""
-        from pyspark.sql import types as T
-
-        stored = manifest.get(self._SCHEMA)
-        if stored is not None:
-            return spark.read.schema(T.StructType.fromJson(json.loads(stored)))
-        return spark.read.option("mergeSchema", "true")
+    def _scan(
+        self, spark: SparkSession, manifest: dict, buckets: Sequence[int]
+    ) -> DataFrame | None:
+        """Every version file of ``buckets`` under ``manifest``, read with
+        the manifest's stored schema (None when there are none)."""
+        paths = [
+            self._bucket_dir(v, b)
+            for b in buckets
+            for v in self._versions(manifest, b)
+        ]
+        if not paths:
+            return None
+        return schema_reader(spark, manifest.get(self._SCHEMA)).parquet(*paths)
 
     def _commit_partitions(
         self,
@@ -385,10 +471,7 @@ class PartitionedStateTable:
         has fewer partitions), so it can only REDUCE task counts."""
         total = 0
         for b in touched:
-            vs = manifest.get(str(b))
-            if vs is None:
-                continue
-            for v in vs if isinstance(vs, list) else [vs]:
+            for v in self._versions(manifest, b):
                 try:
                     with os.scandir(self._bucket_dir(v, b)) as it:
                         total += sum(
@@ -404,34 +487,64 @@ class PartitionedStateTable:
     def read(self, spark: SparkSession) -> DataFrame | None:
         """Current state as a DataFrame, or None if nothing materialized."""
         manifest = self.load_manifest()
-        buckets = dict(self._bucket_items(manifest))
-        if not buckets:
-            return None
-        paths = [
-            self._bucket_dir(v, int(b))
-            for b, vs in buckets.items()
-            for v in (vs if isinstance(vs, list) else [vs])
-        ]
-        return self._reader(spark, manifest).parquet(*paths)
+        return self._scan(spark, manifest, self._live(manifest))
 
     def read_buckets(
         self, spark: SparkSession, buckets: Sequence[int]
     ) -> DataFrame | None:
         self._check_spec(stamp=False)  # pruning assumes this layout
-        manifest = self.load_manifest()
-        paths = [
-            self._bucket_dir(v, b)
-            for b in buckets
-            if str(b) in manifest
-            for v in (
-                manifest[str(b)]
-                if isinstance(manifest[str(b)], list)
-                else [manifest[str(b)]]
-            )
+        return self._scan(spark, self.load_manifest(), buckets)
+
+    # -- the shared write and commit steps ----------------------------------
+    def _write_version(
+        self, out: DataFrame, version, swap: bool = False
+    ) -> list[int]:
+        """Write ``out`` (carrying ``__bucket``) as version dir
+        ``v=<version>`` in ONE job and return the bucket ids it holds
+        (driver-side listing, no extra job).  ``overwrite`` makes a
+        same-epoch streaming retry idempotent.
+
+        ``swap``: a replay of an epoch whose manifest swap already
+        committed (crash between the swap and the stream's own commit) —
+        the lazy prior read points INTO ``v=<version>``, so the write
+        must not clobber its own input.  It goes to a sibling tmp dir
+        (prior files stay intact while the plan executes), then the
+        directories swap — one job, where the old eager localCheckpoint
+        pinned the merge with an EXTRA full materialization job per
+        replayed upsert (r12).  The tmp names must not start with "v="
+        (the GC sweeps parse that prefix as an integer version)."""
+        version_dir = self._version_dir(version)
+        target = version_dir
+        if swap:
+            target = os.path.join(self.path, _DATA, f"_tmp_v{version}")
+            shutil.rmtree(target, ignore_errors=True)
+        out.write.mode("overwrite").partitionBy("__bucket").parquet(target)
+        if swap:
+            old_dir = os.path.join(self.path, _DATA, f"_old_v{version}")
+            shutil.rmtree(old_dir, ignore_errors=True)
+            if os.path.isdir(version_dir):
+                os.rename(version_dir, old_dir)
+            os.rename(target, version_dir)
+            shutil.rmtree(old_dir, ignore_errors=True)
+        return [
+            int(d.split("=", 1)[1])
+            for d in os.listdir(version_dir)
+            if d.startswith("__bucket=")
         ]
-        if not paths:
-            return None
-        return self._reader(spark, manifest).parquet(*paths)
+
+    def _commit(self, prior: dict, new: dict, written_schema) -> None:
+        """Stamp this commit's written schema into ``new`` and publish it
+        — the atomic commit point of every write.  The legacy-dir and
+        type-drift guards run against ``prior`` (the manifest BEFORE this
+        commit — live files not rewritten by this commit are exactly its
+        bucket entries; ``{}`` for a rewrite of every live file)."""
+        fold_schema(
+            new,
+            self._SCHEMA,
+            bool(self._bucket_items(prior)),
+            self._file_schema(written_schema),
+        )
+        store_json(self._manifest_path(), new)
 
     # -- append-only commit (insert-only tables) ---------------------------
     def append(
@@ -476,19 +589,17 @@ class PartitionedStateTable:
             # (scenario: append(N) → compact → crash before the stream
             # commits N's offsets → epoch N retries)
             return
-        if any(
-            not isinstance(v, list) for _, v in self._bucket_items(manifest)
-        ):
-            # REFUSE before touching any version directory (ADVICE r7):
-            # on an upsert-managed table whose manifest references
-            # v=<epoch>, the static overwrite below would delete committed
-            # merged bucket files FIRST and only then raise, leaving the
-            # manifest pointing at clobbered data.
-            raise ValueError(
-                "table holds upsert-managed buckets; a table is either "
-                "append-managed or upsert-managed, not both"
-            )
-        version_dir = os.path.join(self.path, _DATA, f"v={epoch_id}")
+        # REFUSE before touching any version directory (ADVICE r7): on an
+        # upsert-managed table whose manifest references v=<epoch>, the
+        # static overwrite below would delete committed merged bucket
+        # files FIRST and only then raise, leaving the manifest pointing
+        # at clobbered data.
+        self._require(
+            manifest,
+            True,
+            "table holds upsert-managed buckets; a table is either "
+            "append-managed or upsert-managed, not both",
+        )
         out = batch.withColumns(
             {"__epoch": F.lit(epoch_id), "__bucket": self._bucket()}
         )
@@ -499,14 +610,9 @@ class PartitionedStateTable:
             # per-task machinery dominates at small sizes — and big
             # backfills keep one task per _COMMIT_TASK_ROWS
             out = out.coalesce(max(1, -(-batch_rows // _COMMIT_TASK_ROWS)))
-        out.write.mode("overwrite").partitionBy("__bucket").parquet(version_dir)
-        touched = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(version_dir)
-            if d.startswith("__bucket=")
-        ]
+        touched = self._write_version(out, epoch_id)
         if not touched:
-            shutil.rmtree(version_dir, ignore_errors=True)
+            shutil.rmtree(self._version_dir(epoch_id), ignore_errors=True)
             return
         new_manifest = dict(manifest)
         for b in touched:
@@ -521,22 +627,13 @@ class PartitionedStateTable:
         # this only fires for contract violations — where a consistent
         # manifest beats a PATH_NOT_FOUND read forever after.
         for b, vs in self._bucket_items(manifest):
-            if (
-                isinstance(vs, list)
-                and epoch_id in vs
-                and int(b) not in touched
-            ):
+            if epoch_id in vs and int(b) not in touched:
                 left = [v for v in new_manifest[b] if v != epoch_id]
                 if left:
                     new_manifest[b] = left
                 else:
                     new_manifest.pop(b, None)
-        self._stamp_schema(new_manifest, out.schema, manifest)
-        tmp = self._manifest_path() + ".tmp"
-        os.makedirs(self.path, exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump(new_manifest, f)
-        os.replace(tmp, self._manifest_path())
+        self._commit(manifest, new_manifest, out.schema)
 
     def compact(self, spark: SparkSession, epoch_id: int, transform=None) -> None:
         """Compact an append-managed table: rewrite every bucket's
@@ -572,14 +669,14 @@ class PartitionedStateTable:
         because it never depends on row contents."""
         self._check_spec(stamp=True)
         manifest = self.load_manifest()
-        if not self._bucket_items(manifest):
+        live = self._live(manifest)
+        if not live:
             return
-        if any(
-            not isinstance(v, list) for _, v in self._bucket_items(manifest)
-        ):
-            raise ValueError("compact() applies to append-managed tables")
+        self._require(
+            manifest, True, "compact() applies to append-managed tables"
+        )
         version = f"c{epoch_id}"
-        if any(version in v for _, v in self._bucket_items(manifest)):
+        if any(version in self._versions(manifest, b) for b in live):
             raise ValueError(
                 f"compaction version {version!r} is still referenced; "
                 "compact under a fresh id"
@@ -587,30 +684,64 @@ class PartitionedStateTable:
         current = self.read(spark)
         if transform is not None:
             current = transform(current)
-        version_dir = os.path.join(self.path, _DATA, f"v={version}")
+        self._write_compacted(
+            current,
+            version,
+            manifest,
+            epoch_id,
+            self._commit_partitions(manifest, live, None),
+        )
+        # GC: every version dir other than the compacted one is now
+        # unreferenced (single-writer discipline, same as upsert's GC)
+        data_root = os.path.join(self.path, _DATA)
+        for vdir in os.listdir(data_root):
+            if vdir.startswith("v=") and vdir != f"v={version}":
+                shutil.rmtree(
+                    os.path.join(data_root, vdir), ignore_errors=True
+                )
+
+    def adopt(
+        self, df: DataFrame, source: PartitionedStateTable | None
+    ) -> None:
+        """Commit ``df`` as this fresh table's whole contents: a
+        compaction into THIS layout under version ``c0`` — the layout
+        migration of a state dir.  ``source`` is the state table the rows
+        were read from; its replay bookkeeping carries over, so a
+        replayed append of any epoch it held no-ops.  ``None`` adopts
+        rows of a pre-manifest layout, all stamped epoch 0."""
+        self._check_spec(stamp=True)
+        prior = (
+            source.load_manifest()
+            if source is not None
+            else {self._FOLDED_MAX: 0}
+        )
+        self._write_compacted(df, "c0", prior, 0)
+
+    def _write_compacted(
+        self,
+        df: DataFrame,
+        version: str,
+        prior: dict,
+        epoch_id: int,
+        partitions: int | None = None,
+    ) -> None:
+        """Write ``df`` as the table's ONLY version and commit a manifest
+        of it that carries ``prior``'s replay bookkeeping forward."""
         # __bucket came from the directory name; restamp for the write
-        out = current.withColumn("__bucket", self._bucket()).coalesce(
-            self._commit_partitions(
-                manifest,
-                [int(b) for b, _ in self._bucket_items(manifest)],
-                None,
-            )
-        )
-        out.write.mode("overwrite").partitionBy("__bucket").parquet(
-            version_dir
-        )
-        touched = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(version_dir)
-            if d.startswith("__bucket=")
-        ]
-        new_manifest = {str(b): [version] for b in touched}
+        out = df.withColumn("__bucket", self._bucket())
+        if partitions is not None:
+            out = out.coalesce(partitions)
+        new_manifest = {
+            str(b): [version] for b in self._write_version(out, version)
+        }
         # every integer epoch folded into this compaction (plus those a
         # prior compaction already subsumed) — a replayed append of any
         # of them must no-op, or it would duplicate the compacted rows
-        subsumed = set(manifest.get(self._SUBSUMED, []))
-        for _, vs in self._bucket_items(manifest):
-            subsumed.update(v for v in vs if isinstance(v, int))
+        subsumed = set(prior.get(self._SUBSUMED, []))
+        for b in self._live(prior):
+            subsumed.update(
+                v for v in self._versions(prior, b) if isinstance(v, int)
+            )
         # keep the list bounded: a Structured Streaming retry can only
         # re-deliver the most recent uncommitted epoch(s), so subsumed
         # epochs more than 1024 commits old can never be replayed — a
@@ -621,34 +752,22 @@ class PartitionedStateTable:
         # refuses every epoch at or below the highest id ever folded,
         # so even a backup-restored replay older than the 1024-id window
         # cannot duplicate compacted rows (ADVICE r8)
-        folded_max = manifest.get(self._FOLDED_MAX, -1)
-        int_subsumed = [e for e in subsumed if isinstance(e, int)]
-        if int_subsumed:
-            folded_max = max(folded_max, max(int_subsumed))
+        folded_max = max(
+            [prior.get(self._FOLDED_MAX, -1)]
+            + [e for e in subsumed if isinstance(e, int)]
+        )
         if folded_max >= 0:
             new_manifest[self._FOLDED_MAX] = folded_max
         # advance the auto-compaction counter past this id so a later
         # maybe_compact never re-draws it (manual ids count too)
-        seq = manifest.get(self._COMPACT_SEQ, 0)
+        seq = prior.get(self._COMPACT_SEQ, 0)
         if isinstance(epoch_id, int):
             seq = max(seq, epoch_id)
         new_manifest[self._COMPACT_SEQ] = seq
         # the rewrite replaced EVERY live file, so its schema is the
         # table's schema outright — re-establishes explicit-schema reads
         # even after a type-drift or legacy-dir fallback
-        new_manifest[self._SCHEMA] = self._file_schema(out.schema).json()
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(new_manifest, f)
-        os.replace(tmp, self._manifest_path())
-        # GC: every version dir other than the compacted one is now
-        # unreferenced (single-writer discipline, same as upsert's GC)
-        data_root = os.path.join(self.path, _DATA)
-        for vdir in os.listdir(data_root):
-            if vdir.startswith("v=") and vdir != f"v={version}":
-                shutil.rmtree(
-                    os.path.join(data_root, vdir), ignore_errors=True
-                )
+        self._commit({}, new_manifest, out.schema)
 
     def maybe_compact(
         self, spark: SparkSession, max_versions: int, transform=None
@@ -674,9 +793,10 @@ class PartitionedStateTable:
         if max_versions < 1:
             raise ValueError("max_versions must be >= 1")
         manifest = self.load_manifest()
+        self._require(
+            manifest, True, "maybe_compact() applies to append-managed tables"
+        )
         lists = [v for _, v in self._bucket_items(manifest)]
-        if any(not isinstance(v, list) for v in lists):
-            raise ValueError("maybe_compact() applies to append-managed tables")
         if not lists or max(len(v) for v in lists) <= max_versions:
             return False
         self.compact(
@@ -686,14 +806,7 @@ class PartitionedStateTable:
         )
         return True
 
-    def compactions_committed(self) -> int:
-        """The manifest's monotone compaction counter — how far the
-        auto-compaction id sequence has advanced (0 = never compacted).
-        Observable proof that a compaction COMMITTED in this state dir,
-        replay-stable where an in-memory fired-count is not."""
-        return self.load_manifest().get(self._COMPACT_SEQ, 0)
-
-    # -- write ------------------------------------------------------------
+    # -- upsert commit (keyed changelog tables) -----------------------------
     def upsert(
         self,
         batch: DataFrame,
@@ -706,7 +819,8 @@ class PartitionedStateTable:
     ) -> None:
         """Merge one microbatch: read ONLY the buckets the batch touches,
         apply changelog semantics over prior-state ∪ batch, write fresh
-        versions of those buckets, atomically swap the manifest.
+        versions of those buckets, atomically swap the manifest (the
+        steps are listed in the module docstring).
 
         ``touched`` (optional): the bucket ids the batch's keys hash to,
         when the caller already knows them — e.g. collected inside an
@@ -725,7 +839,6 @@ class PartitionedStateTable:
         images are already merged into state, so they no longer appear
         in the batch, but the epoch-reuse guard rightly demands every
         bucket this epoch committed).  Supersets are safe as above."""
-        spark = batch.sparkSession
         batch = batch.withColumns(
             {"__epoch": F.lit(epoch_id), "__bucket": self._bucket()}
         )
@@ -733,234 +846,207 @@ class PartitionedStateTable:
         if self_collected:
             batch.persist()
         try:
-            if self_collected:
-                # per-bucket counts: same single job as the old distinct
-                # (≤ n_buckets result rows), and the row total feeds the
-                # scale-adaptive write-task count below for free
-                per_bucket = batch.groupBy("__bucket").count().collect()
-                batch_rows = sum(r["count"] for r in per_bucket)
-                touched = sorted(
-                    {r["__bucket"] for r in per_bucket}
-                    | set(extra_touched or ())
-                )
-            else:
-                touched = sorted(set(touched) | set(extra_touched or ()))
+            touched, batch_rows = self._collect_touched(
+                batch, touched, extra_touched, batch_rows
+            )
             if not touched:
                 return
             self._check_spec(stamp=True)
             manifest = self.load_manifest()
-            if any(
-                isinstance(v, list) for _, v in self._bucket_items(manifest)
-            ):
-                raise ValueError(
-                    "table holds append-managed buckets; a table is "
-                    "either append-managed or upsert-managed, not both"
-                )
-            # Epoch-REUSE guard (ADVICE r7): the static overwrite of
-            # v=<epoch> below deletes that whole version directory.  A
-            # genuine streaming retry touches the same buckets, so every
-            # committed bucket at this version gets rewritten — but a
-            # caller recycling an old epoch id with different data would
-            # silently destroy committed buckets the manifest still
-            # references.  Refuse before touching anything.
-            stale = [
-                b
-                for b, v in self._bucket_items(manifest)
-                if v == epoch_id and int(b) not in touched
-            ]
-            if stale:
-                raise ValueError(
-                    f"epoch {epoch_id} already committed buckets {stale} "
-                    "this batch does not touch; overwriting v="
-                    f"{epoch_id} would clobber them — use a fresh epoch id"
-                )
-            # Self-heal a crashed replay swap BEFORE the prior read
-            # (ADVICE r12): a crash between the swap's two renames left
-            # the manifest referencing a missing v=<e> dir while the
-            # prior state sits stranded in _old_v<e> — rename it back so
-            # the read below (and any other reader) sees the committed
-            # state again.  Any stranded epoch is healed, not just the
-            # one being replayed; one listdir per commit.
-            data_root = os.path.join(self.path, _DATA)
-            try:
-                stranded = [
-                    d for d in os.listdir(data_root)
-                    if d.startswith("_old_v")
-                ]
-            except OSError:
-                stranded = []
-            if stranded:
-                referenced = {
-                    v for _, v in self._bucket_items(manifest)
-                }
-                for d in stranded:
-                    try:
-                        eid = int(d[6:])
-                    except ValueError:
-                        continue
-                    vdir = os.path.join(data_root, f"v={eid}")
-                    if eid in referenced and not os.path.isdir(vdir):
-                        os.rename(os.path.join(data_root, d), vdir)
-            prior = self.read_buckets(spark, touched)
-            if prior is not None:
-                # stored buckets carry their __epoch; recompute the bucket
-                # column (it lived in the directory name, not the data)
-                merged_in = prior.withColumn("__bucket", self._bucket()).unionByName(
-                    batch, allowMissingColumns=True
-                )
-            else:
-                merged_in = batch
-            merged = apply_changelog(
-                merged_in,
-                keys=self.keys,
-                order_by=["__epoch", *order_by],
-                op_col=op_col,
-            ).coalesce(
-                # scale-adaptive commit parallelism: a microbatch merge
-                # writes from ONE task (the dynamic-partition writer's
-                # per-task sort/commit machinery measured ~5× a single-
-                # task write at kilobyte scale); large touched states
-                # keep ~one task per _COMMIT_TARGET_BYTES of prior
-                # bucket bytes — which also sizes output files sanely
-                self._commit_partitions(manifest, touched, batch_rows)
+            self._guard_upsert(manifest, epoch_id, touched)
+            self._heal(manifest)
+            merged = self._merge(
+                batch, manifest, touched, order_by, op_col, batch_rows
             )
-            version_dir = os.path.join(self.path, _DATA, f"v={epoch_id}")
-            if any(manifest.get(str(b)) == epoch_id for b in touched):
-                # Replay of an epoch whose manifest swap already committed
-                # (crash between swap and the stream's own commit): the
-                # lazy prior-read above points INTO v=<epoch>, so the
-                # write must not clobber its own input.  Write to a
-                # sibling tmp dir (prior files stay intact while the plan
-                # executes), then swap directories — one job, where the
-                # old eager localCheckpoint pinned `merged` with an EXTRA
-                # full materialization job per replayed upsert (r12).
-                # The tmp name must not start with "v=" (the GC sweeps
-                # parse that prefix as an integer version).
-                tmp_dir = os.path.join(
-                    self.path, _DATA, f"_tmp_v{epoch_id}"
-                )
-                shutil.rmtree(tmp_dir, ignore_errors=True)
-                merged.write.mode("overwrite").partitionBy(
-                    "__bucket"
-                ).parquet(tmp_dir)
-                old_dir = os.path.join(
-                    self.path, _DATA, f"_old_v{epoch_id}"
-                )
-                shutil.rmtree(old_dir, ignore_errors=True)
-                if os.path.isdir(version_dir):
-                    os.rename(version_dir, old_dir)
-                os.rename(tmp_dir, version_dir)
-                shutil.rmtree(old_dir, ignore_errors=True)
-            else:
-                # one job; overwrite makes a same-epoch streaming retry
-                # idempotent
-                merged.write.mode("overwrite").partitionBy(
-                    "__bucket"
-                ).parquet(version_dir)
+            written = self._write_version(
+                merged,
+                epoch_id,
+                swap=any(manifest.get(str(b)) == epoch_id for b in touched),
+            )
             new_manifest = dict(manifest)
             for b in touched:
-                if os.path.isdir(self._bucket_dir(epoch_id, b)):
+                if b in written:
                     new_manifest[str(b)] = epoch_id
                 else:
                     # every key in this bucket was deleted → no output dir
                     new_manifest.pop(str(b), None)
-            self._stamp_schema(new_manifest, merged.schema, manifest)
-            tmp = self._manifest_path() + ".tmp"
-            os.makedirs(self.path, exist_ok=True)
-            with open(tmp, "w") as f:
-                json.dump(new_manifest, f)
-            os.replace(tmp, self._manifest_path())  # the atomic commit point
-            # retention history: replace-or-append this epoch's manifest
-            # (replace = a replayed epoch stays idempotent), trimmed to
-            # the retention window
-            retained_refs: set[tuple[int, str]] = set()
-            if self.retain_versions > 0:
-                history = [
-                    h for h in self.load_history() if h["epoch"] != epoch_id
-                ]
-                history.append({"epoch": epoch_id, "manifest": new_manifest})
-                history = history[-(self.retain_versions + 1):]
-                self._store_history(history)
-                retained_refs = {
-                    (v, b)
-                    for h in history
-                    for b, v in h["manifest"].items()
-                }
-            # GC superseded bucket versions — best-effort, post-commit;
-            # with retention on, a directory sweep removes every bucket
-            # version no retained manifest references (O(version dirs)
-            # listdir per commit — trivial beside the bucket writes)
-            if self.retain_versions > 0:
-                # full sweep: with a history window, versions superseded
-                # MORE than one commit ago can expire too — delete every
-                # bucket dir no retained manifest references (single
-                # writer: foreachBatch commits sequentially)
-                data_root = os.path.join(self.path, _DATA)
-                for vdir in os.listdir(data_root):
-                    if not vdir.startswith("v="):
-                        continue
-                    v = int(vdir.split("=", 1)[1])
-                    vpath = os.path.join(data_root, vdir)
-                    for bdir in os.listdir(vpath):
-                        if not bdir.startswith("__bucket="):
-                            continue
-                        b = bdir.split("=", 1)[1]
-                        if (v, b) not in retained_refs:
-                            shutil.rmtree(
-                                os.path.join(vpath, bdir), ignore_errors=True
-                            )
-                    try:
-                        os.rmdir(vpath)
-                    except OSError:
-                        pass
-            else:
-                for b in touched:
-                    old = manifest.get(str(b))
-                    if old is None or old == epoch_id:
-                        continue
-                    shutil.rmtree(self._bucket_dir(old, b), ignore_errors=True)
-                    try:
-                        os.rmdir(os.path.join(self.path, _DATA, f"v={old}"))
-                    except OSError:
-                        pass  # version dir still holds live buckets
-            # GC stranded replay-swap dirs (ADVICE r12): _tmp_v*/_old_v*
-            # leaked forever (the v=-prefix sweeps skip them).  A foreign
-            # _tmp_v is always garbage (pre-swap; its own replay rewrites
-            # it); an _old_v that survived the entry heal above is
-            # garbage too — either its v= dir exists (swap completed,
-            # crash before the final rmtree) or its epoch is
-            # unreferenced.  This epoch's own swap already cleaned its
-            # dirs.
-            live_epochs = {
-                v for _, v in self._bucket_items(new_manifest)
-            }
-            try:
-                stranded_dirs = [
-                    d
-                    for d in os.listdir(data_root)
-                    if d.startswith(("_tmp_v", "_old_v"))
-                ]
-            except OSError:
-                stranded_dirs = []
-            for d in stranded_dirs:
-                if d.startswith("_old_v"):
-                    try:
-                        eid = int(d[6:])
-                    except ValueError:
-                        eid = None
-                    if (
-                        eid is not None
-                        and eid in live_epochs
-                        and not os.path.isdir(
-                            os.path.join(data_root, f"v={eid}")
-                        )
-                    ):
-                        continue  # healing source (committed post-entry
-                        # by THIS epoch's swap crash window) — keep
-                shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
+            self._commit(manifest, new_manifest, merged.schema)
+            self._gc(manifest, new_manifest, epoch_id, touched)
         finally:
             if self_collected:
                 batch.unpersist()
+
+    @staticmethod
+    def _collect_touched(
+        batch: DataFrame,
+        touched: Sequence[int] | None,
+        extra_touched: Sequence[int] | None,
+        batch_rows: int | None,
+    ) -> tuple[list[int], int | None]:
+        """(sorted touched bucket ids, batch row count).  Self-collected
+        per-bucket counts when the caller passed no ``touched``: same
+        single job as the old distinct (≤ n_buckets result rows), and
+        the row total feeds the scale-adaptive write-task count for
+        free."""
+        if touched is None:
+            per_bucket = batch.groupBy("__bucket").count().collect()
+            batch_rows = sum(r["count"] for r in per_bucket)
+            touched = [r["__bucket"] for r in per_bucket]
+        return sorted(set(touched) | set(extra_touched or ())), batch_rows
+
+    def _guard_upsert(
+        self, manifest: dict, epoch_id: int, touched: Sequence[int]
+    ) -> None:
+        self._require(
+            manifest,
+            False,
+            "table holds append-managed buckets; a table is "
+            "either append-managed or upsert-managed, not both",
+        )
+        # Epoch-REUSE guard (ADVICE r7): the static overwrite of
+        # v=<epoch> deletes that whole version directory.  A genuine
+        # streaming retry touches the same buckets, so every committed
+        # bucket at this version gets rewritten — but a caller recycling
+        # an old epoch id with different data would silently destroy
+        # committed buckets the manifest still references.  Refuse
+        # before touching anything.
+        stale = [
+            b
+            for b, v in self._bucket_items(manifest)
+            if v == epoch_id and int(b) not in touched
+        ]
+        if stale:
+            raise ValueError(
+                f"epoch {epoch_id} already committed buckets {stale} "
+                "this batch does not touch; overwriting v="
+                f"{epoch_id} would clobber them — use a fresh epoch id"
+            )
+
+    def _stranded(self, manifest: dict) -> tuple[list[str], list[str]]:
+        """Replay-swap leftovers under ``_data``, split into (healing
+        sources, garbage).  An ``_old_v<e>`` whose epoch ``manifest``
+        references while ``v=<e>`` is missing holds the committed state a
+        crash between the swap's two renames stranded; every other
+        ``_tmp_v*``/``_old_v*`` is garbage — a foreign ``_tmp_v`` is
+        pre-swap (its own replay rewrites it), and any other ``_old_v``
+        either has its ``v=`` dir (swap completed, crash before the final
+        rmtree) or an unreferenced epoch."""
+        root = os.path.join(self.path, _DATA)
+        names = os.listdir(root) if os.path.isdir(root) else []
+        live = {str(v) for _, v in self._bucket_items(manifest)}
+        heal = [
+            d
+            for d in names
+            if d.startswith("_old_v")
+            and d[6:] in live
+            and not os.path.isdir(os.path.join(root, "v=" + d[6:]))
+        ]
+        garbage = [
+            d
+            for d in names
+            if d.startswith(("_tmp_v", "_old_v")) and d not in heal
+        ]
+        return heal, garbage
+
+    def _heal(self, manifest: dict) -> None:
+        """Self-heal a crashed replay swap BEFORE the prior read (ADVICE
+        r12): rename every stranded committed ``_old_v<e>`` back to
+        ``v=<e>`` so the read (and any other reader) sees the committed
+        state again — any stranded epoch, not just the one being
+        replayed; one listdir per commit."""
+        root = os.path.join(self.path, _DATA)
+        for d in self._stranded(manifest)[0]:
+            os.rename(os.path.join(root, d), os.path.join(root, "v=" + d[6:]))
+
+    def _merge(
+        self, batch, manifest, touched, order_by, op_col, batch_rows
+    ) -> DataFrame:
+        """The touched buckets' new contents: changelog merge of their
+        prior rows ∪ the batch."""
+        prior = self.read_buckets(batch.sparkSession, touched)
+        if prior is not None:
+            # stored buckets carry their __epoch; recompute the bucket
+            # column (it lived in the directory name, not the data)
+            merged_in = prior.withColumn("__bucket", self._bucket()).unionByName(
+                batch, allowMissingColumns=True
+            )
+        else:
+            merged_in = batch
+        return apply_changelog(
+            merged_in,
+            keys=self.keys,
+            order_by=["__epoch", *order_by],
+            op_col=op_col,
+        ).coalesce(
+            # scale-adaptive commit parallelism: a microbatch merge
+            # writes from ONE task (the dynamic-partition writer's
+            # per-task sort/commit machinery measured ~5× a single-
+            # task write at kilobyte scale); large touched states
+            # keep ~one task per _COMMIT_TARGET_BYTES of prior
+            # bucket bytes — which also sizes output files sanely
+            self._commit_partitions(manifest, touched, batch_rows)
+        )
+
+    def _gc(
+        self,
+        manifest: dict,
+        new_manifest: dict,
+        epoch_id: int,
+        touched: Sequence[int],
+    ) -> None:
+        """Post-commit, best-effort: retention history and sweep, or the
+        superseded versions of the touched buckets; then the stranded
+        replay-swap dirs (ADVICE r12 — they leaked forever, the ``v=``
+        sweeps skip them)."""
+        data_root = os.path.join(self.path, _DATA)
+        if self.retain_versions > 0:
+            # replace-or-append this epoch's manifest (replace = a
+            # replayed epoch stays idempotent), trimmed to the window
+            history = [
+                h for h in self.load_history() if h["epoch"] != epoch_id
+            ]
+            history.append({"epoch": epoch_id, "manifest": new_manifest})
+            history = history[-(self.retain_versions + 1):]
+            store_json(self._history_path(), history)
+            retained_refs = {
+                (v, b) for h in history for b, v in h["manifest"].items()
+            }
+            # full sweep: with a history window, versions superseded MORE
+            # than one commit ago can expire too — delete every bucket
+            # dir no retained manifest references (O(version dirs)
+            # listdir per commit; single writer: foreachBatch commits
+            # sequentially)
+            for vdir in os.listdir(data_root):
+                if not vdir.startswith("v="):
+                    continue
+                v = int(vdir.split("=", 1)[1])
+                vpath = os.path.join(data_root, vdir)
+                for bdir in os.listdir(vpath):
+                    if not bdir.startswith("__bucket="):
+                        continue
+                    if (v, bdir.split("=", 1)[1]) not in retained_refs:
+                        shutil.rmtree(
+                            os.path.join(vpath, bdir), ignore_errors=True
+                        )
+                try:
+                    os.rmdir(vpath)
+                except OSError:
+                    pass
+        else:
+            for b in touched:
+                old = manifest.get(str(b))
+                if old is None or old == epoch_id:
+                    continue
+                shutil.rmtree(self._bucket_dir(old, b), ignore_errors=True)
+                try:
+                    os.rmdir(self._version_dir(old))
+                except OSError:
+                    pass  # version dir still holds live buckets
+        # an _old_v that is a healing source for new_manifest (committed
+        # by THIS epoch's swap crash window) is kept; this epoch's own
+        # swap already cleaned its dirs
+        for d in self._stranded(new_manifest)[1]:
+            shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
 
 
 def read_state(

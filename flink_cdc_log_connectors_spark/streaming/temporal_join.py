@@ -47,7 +47,6 @@ version count, the same bound Flink's temporal-join state carries
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,7 +55,7 @@ from pyspark.sql.window import Window
 
 from ..sources.debezium import parse_change_rows, parse_debezium
 from .joins import JoinSide
-from .statetable import PartitionedStateTable
+from .statetable import PartitionedStateTable, load_json, store_json
 
 _OFF_COLS = ["_vfile", "_vpos", "_vimg"]
 
@@ -151,18 +150,7 @@ class TemporalJoin:
         return os.path.join(self.output_path, "__watermark.json")
 
     def load_watermark(self) -> int | None:
-        try:
-            with open(self._wm_path()) as f:
-                return json.load(f)["ts_ms"]
-        except FileNotFoundError:
-            return None
-
-    def _store_watermark(self, ts_ms: int) -> None:
-        os.makedirs(self.output_path, exist_ok=True)
-        tmp = self._wm_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"ts_ms": ts_ms}, f)
-        os.replace(tmp, self._wm_path())
+        return load_json(self._wm_path(), {"ts_ms": None})["ts_ms"]
 
     # -- helpers ----------------------------------------------------------
     def _dim_out_cols(self) -> list[str]:
@@ -302,7 +290,7 @@ class TemporalJoin:
             if cand is not None and (wm is None or cand > wm):
                 wm = cand
         if wm is not None:
-            self._store_watermark(wm)
+            store_json(self._wm_path(), {"ts_ms": wm})
         # stored buffer ∪ this batch's facts (a replayed batch's facts may
         # be in both — key dedup).  The buffer is written ONCE per batch
         # below: new still-pending facts in, emitted keys tombstoned out.

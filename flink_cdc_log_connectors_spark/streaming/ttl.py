@@ -56,7 +56,6 @@ changelog merge — the fact survives with its fresh event time.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from collections.abc import Callable, Sequence
@@ -65,32 +64,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.prepared import prepared
-from .statetable import PartitionedStateTable
+from .statetable import PartitionedStateTable, load_json, store_json
 
 
 def max_committed_epoch(*tables: PartitionedStateTable) -> int | None:
     """Highest integer epoch any of ``tables`` has committed, or None if
-    none committed anything.  Append-managed tables are covered in full:
-    loose integer versions directly, and epochs folded into compacted
-    ``c<id>`` versions via the ``__folded_max`` manifest watermark
-    (ADVICE r10 — skipping non-int versions alone would UNDERSTATE the
-    max on a compacted table, and ``check_expire_epoch`` would then
-    silently admit a recycled epoch id).  Backs the ``expire()``
-    freshness guard below."""
-    mx: int | None = None
-    for t in tables:
-        manifest = t.load_manifest()
-        folded = manifest.get(PartitionedStateTable._FOLDED_MAX)
-        cands = [folded] if isinstance(folded, int) else []
-        for _, v in t._bucket_items(manifest):
-            cands.extend(
-                e for e in (v if isinstance(v, list) else [v])
-                if isinstance(e, int)
-            )
-        for e in cands:
-            if mx is None or e > mx:
-                mx = e
-    return mx
+    none committed anything (see
+    :meth:`PartitionedStateTable.max_committed_epoch`).  Backs the
+    ``expire()`` freshness guard below."""
+    eps = [t.max_committed_epoch() for t in tables]
+    return max((e for e in eps if e is not None), default=None)
 
 
 def check_expire_epoch(
@@ -168,20 +151,6 @@ def heal_pending_expiry(consumer, spark: SparkSession, epoch_id: int) -> None:
             consumer.expire(spark, pending)
 
 
-def committed_at(table: PartitionedStateTable, epoch_id: int) -> set[int]:
-    """Bucket ids this epoch already committed to ``table`` — a retry
-    (or a re-delivery of a fully-committed epoch) must union these into
-    its touched set: its effective batch may legitimately have SHRUNK
-    (staged expiry images it already merged), and the epoch-reuse guard
-    rightly refuses anything smaller.  Supersets are safe (rewritten
-    unchanged)."""
-    return {
-        int(b)
-        for b, v in table._bucket_items(table.load_manifest())
-        if v == epoch_id
-    }
-
-
 def _shared_stats(ts_col: str | None) -> list[Column]:
     """The stats every epoch collects per group: row count, retraction
     images applied, and — under TTL — the min/max event time of the
@@ -247,7 +216,7 @@ def fused_epoch(
             rows if syn is None else flagged.drop("__syn"),
             epoch_id,
             per,
-            lambda t: committed_at(t, epoch_id) if ttl is not None else set(),
+            lambda t: t.committed_at(epoch_id) if ttl is not None else set(),
         )
     elif not exp:
         return
@@ -301,11 +270,7 @@ class EventTimeTTL:
         return os.path.join(self.meta_dir, f"__{self.name}_watermark.json")
 
     def load_wm(self) -> int | None:
-        try:
-            with open(self._wm_path()) as f:
-                return json.load(f)["watermark"]
-        except FileNotFoundError:
-            return None
+        return load_json(self._wm_path(), {"watermark": None})["watermark"]
 
     def store_wm(self, wm: int | None) -> None:
         if wm is None:
@@ -313,29 +278,14 @@ class EventTimeTTL:
         prior = self.load_wm()
         if prior is not None and prior >= wm:
             return
-        os.makedirs(self.meta_dir, exist_ok=True)
-        tmp = self._wm_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"watermark": wm}, f)
-        os.replace(tmp, self._wm_path())
+        store_json(self._wm_path(), {"watermark": wm})
 
     # -- per-bucket min-ts lower bounds -------------------------------------
     def _bounds_path(self) -> str:
         return os.path.join(self.meta_dir, f"__{self.name}_bounds.json")
 
     def load_bounds(self) -> dict[str, int]:
-        try:
-            with open(self._bounds_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
-
-    def _store_bounds(self, bounds: dict[str, int]) -> None:
-        os.makedirs(self.meta_dir, exist_ok=True)
-        tmp = self._bounds_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(bounds, f)
-        os.replace(tmp, self._bounds_path())
+        return load_json(self._bounds_path(), {})
 
     # -- the staged expiry decision ------------------------------------------
     def _stage_dir(self, epoch_id: int) -> str:
@@ -363,12 +313,11 @@ class EventTimeTTL:
         fact whose ``ttl_col`` is at or before ``cutoff`` — read pruned
         to buckets whose bound the cutoff has reached (plus buckets with
         no bound yet, e.g. TTL enabled on a pre-existing dir)."""
-        manifest = self.state.load_manifest()
         bounds = self.load_bounds()
         exp = sorted(
-            int(b)
-            for b, _ in self.state._bucket_items(manifest)
-            if bounds.get(b) is None or bounds[b] <= cutoff
+            b
+            for b in self.state.live_buckets()
+            if bounds.get(str(b)) is None or bounds[str(b)] <= cutoff
         )
         cand = self.state.read_buckets(spark, exp) if exp else None
         if cand is None:
@@ -407,10 +356,7 @@ class EventTimeTTL:
         # retry the manifest already includes this epoch's buckets, so
         # seeding is suppressed for them too: conservative (one extra
         # scan), never wrong.
-        self._prior_live = {
-            int(b)
-            for b, _ in self.state._bucket_items(self.state.load_manifest())
-        }
+        self._prior_live = set(self.state.live_buckets())
         root = os.path.join(self.meta_dir, f"__{self.name}_syn")
         stage = self._stage_dir(epoch_id)
         if os.path.isdir(root):
@@ -441,8 +387,7 @@ class EventTimeTTL:
                     )
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)
         if os.path.isdir(stage):  # retry: reuse the staged decision
-            with open(os.path.join(stage, "_ttl_meta.json")) as f:
-                meta = json.load(f)
+            meta = load_json(os.path.join(stage, "_ttl_meta.json"), None)
             syn = spark.read.parquet(stage) if meta["has_rows"] else None
             return meta["exp"], meta["cutoff"], syn
         wm0 = self.load_wm()
@@ -491,18 +436,15 @@ class EventTimeTTL:
                 fs = pool.submit(_survivors)
                 fw.result()
                 survivor_min = fs.result()
-        else:
-            os.makedirs(tmp, exist_ok=True)
-        with open(os.path.join(tmp, "_ttl_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "exp": exp,
-                    "cutoff": cutoff,
-                    "has_rows": has_rows,
-                    "survivor_min": survivor_min,
-                },
-                f,
-            )
+        store_json(
+            os.path.join(tmp, "_ttl_meta.json"),
+            {
+                "exp": exp,
+                "cutoff": cutoff,
+                "has_rows": has_rows,
+                "survivor_min": survivor_min,
+            },
+        )
         os.rename(tmp, stage)  # atomic publish
         return exp, cutoff, (spark.read.parquet(stage) if has_rows else None)
 
@@ -520,13 +462,9 @@ class EventTimeTTL:
         AFTER the epoch's state commits; ``batch_min`` maps bucket id →
         min ``ttl_col`` over the batch's GENUINE images (synthesized
         retractions excluded)."""
-        survivor_min: dict[str, int] = {}
-        meta_path = os.path.join(
-            self._stage_dir(epoch_id), "_ttl_meta.json"
-        )
-        if os.path.isfile(meta_path):
-            with open(meta_path) as f:
-                survivor_min = json.load(f).get("survivor_min", {})
+        survivor_min = load_json(
+            os.path.join(self._stage_dir(epoch_id), "_ttl_meta.json"), {}
+        ).get("survivor_min", {})
         self.store_wm(wm_candidate)
         bounds = self.load_bounds()
         for b in exp:
@@ -560,7 +498,9 @@ class EventTimeTTL:
                     bounds[b] = bm
             else:
                 bounds[b] = min(old, bm)
-        manifest = self.state.load_manifest()
-        live = {b for b, _ in self.state._bucket_items(manifest)}
-        self._store_bounds({b: v for b, v in bounds.items() if b in live})
+        live = {str(b) for b in self.state.live_buckets()}
+        store_json(
+            self._bounds_path(),
+            {b: v for b, v in bounds.items() if b in live},
+        )
         shutil.rmtree(self._stage_dir(epoch_id), ignore_errors=True)

@@ -637,26 +637,14 @@ def _docs(spark: SparkSession, ids) -> DataFrame:
 def _state_bytes(table) -> int:
     """On-disk bytes of every bucket file the manifest references — the
     FULL-scan cost a pre-r9 batch paid to read this store."""
-    total = 0
-    manifest = table.load_manifest()
-    for b, vs in manifest.items():
-        if b.startswith("__"):
-            continue
-        for v in vs if isinstance(vs, list) else [vs]:
-            d = table._bucket_dir(v, int(b))
-            for f in os.listdir(d):
-                total += os.path.getsize(os.path.join(d, f))
-    return total
+    return _pruned_bytes(table, table.live_buckets())
 
 
 def _pruned_bytes(table, buckets) -> int:
     total = 0
     manifest = table.load_manifest()
     for b in buckets:
-        vs = manifest.get(str(b))
-        if vs is None:
-            continue
-        for v in vs if isinstance(vs, list) else [vs]:
+        for v in table._versions(manifest, b):
             d = table._bucket_dir(v, int(b))
             for f in os.listdir(d):
                 total += os.path.getsize(os.path.join(d, f))

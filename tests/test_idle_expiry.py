@@ -423,6 +423,21 @@ def test_idle_monitor_requires_ttl_consumer(tmp_path):
         IdleExpiryMonitor(agg, EpochSequencer(agg.output.path))
 
 
+def test_idle_monitor_first_tick_creates_missing_meta_dir(tmp_path):
+    """The ticker may start before the data query's first batch, so the
+    sequencer's meta dir may not exist yet: the first tick records its
+    cursor instead of failing on the missing directory."""
+
+    class _StubTTL:
+        _ttl_proto = object()
+
+    seq = EpochSequencer(str(tmp_path / "not" / "yet"))
+    mon = IdleExpiryMonitor(_StubTTL(), seq, idle_triggers=2)
+    assert mon.on_trigger(None, 0) is False
+    with open(mon._state_path) as f:
+        assert json.load(f) == {"seen": -1, "idle": 0, "done_at": None}
+
+
 def test_idle_monitor_flushes_join_consumer(spark, tmp_path):
     """The monitor is consumer-agnostic: a TTL'd ChangelogJoin quiesced
     with an expirable fact converges the join VIEW (tombstone) through

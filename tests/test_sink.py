@@ -8,6 +8,7 @@ from flink_cdc_log_connectors_spark.streaming.sink import (
     ExactlyOnceAppendSink,
     exactly_once_append,
 )
+from flink_cdc_log_connectors_spark.streaming.statetable import fold_schema
 
 
 def test_replayed_epoch_not_duplicated(spark, tmp_path):
@@ -252,7 +253,36 @@ def test_ledger_stored_schema_matches_merge_schema(spark, tmp_path):
     led = sink._load_ledger()
     from pyspark.sql import types as T
 
-    sink._fold_schema(
-        led, T.StructType([T.StructField("x", T.IntegerType())])
+    fold_schema(
+        led, "schema", True, T.StructType([T.StructField("x", T.IntegerType())])
     )
     assert "schema" not in led
+
+
+def test_compaction_restores_lost_ledger_schema(spark, tmp_path):
+    """ADVICE r13: a ledger without ``schema`` (pre-schema era, or one
+    dropped on type drift) regains it once a compaction rewrites every
+    live file — before, no compaction ever restored it and every read
+    kept paying the mergeSchema footer merge."""
+    import json
+
+    sink = ExactlyOnceAppendSink(str(tmp_path / "lost"), compact_threshold=None)
+    sink.process_batch(spark.createDataFrame([(1,)], "x long"), epoch_id=0)
+    sink.process_batch(
+        spark.createDataFrame([(2, "eu")], "x long, region string"),
+        epoch_id=1,
+    )
+    led = sink._load_ledger()
+    led.pop("schema")  # simulate a pre-schema ledger
+    with open(os.path.join(sink.path, "_ledger.json"), "w") as f:
+        json.dump(led, f)
+    assert sink.compact_epochs(spark, keep_recent=0)
+    assert "schema" in sink._load_ledger()
+    got = sink.read_committed(spark)
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        *[sink._merged_dir(d) for m in sink._load_ledger()["merged"]
+          for d in sink._tier_dirs(m)]
+    )
+    assert sorted(got.columns) == sorted(merged.columns)
+    assert sorted(got.collect()) == sorted(merged.select(*got.columns).collect())
+    assert {r["x"]: r["region"] for r in got.collect()} == {1: None, 2: "eu"}

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from flink_cdc_log_connectors_spark.streaming.statetable import (
     PartitionedStateTable,
+    fold_schema,
 )
 
 #: op sequence: each element is one epoch's batch of (key, value) rows,
@@ -430,7 +431,7 @@ def test_stored_schema_matches_merge_schema_reads(spark, tmp_path):
             T.StructField("op", T.StringType()),
         ]
     )
-    assert t._schema_entry(man, drifted) is None
+    assert fold_schema(dict(man), t._SCHEMA, True, drifted) is None
     # a compaction-style full rewrite is the upsert table's analogue of
     # "every live file rewritten"; for append tables compact() restores
     # the stored schema — prove that on a fresh append table
@@ -489,3 +490,59 @@ def test_replay_swap_crash_heals_and_orphans_gced(spark, tmp_path):
     )
     got = {r["id"]: r["v"] for r in t.read(spark).collect()}
     assert got == {1: 5.0, 2: 2.0, 9: 9.0}
+
+
+#: one epoch of keyed changes: key → new value, or None for a delete
+_CHANGES = st.dictionaries(
+    st.integers(0, 11), st.one_of(st.integers(0, 9), st.none()), max_size=5
+)
+
+
+@pytest.mark.usefixtures("spark")
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    epochs=st.lists(
+        st.tuples(_CHANGES, st.booleans()), min_size=1, max_size=4
+    )
+)
+def test_upsert_with_replays_equals_dict_model(
+    spark, tmp_path_factory, epochs
+):
+    """Keyed upserts and deletes, each epoch possibly re-run after its
+    manifest swap (the replay-swap write path), read back exactly the
+    dict model; every manifest entry's directory exists and no
+    ``_tmp_v*``/``_old_v*`` directory is left behind."""
+    import os
+
+    root = tmp_path_factory.mktemp("upsert")
+    t = PartitionedStateTable(str(root / "t"), ["k"], n_buckets=4)
+    model: dict[int, int] = {}
+    for epoch, (changes, replay) in enumerate(epochs):
+        batch = spark.createDataFrame(
+            [
+                (k, 0 if v is None else v, "d" if v is None else "c")
+                for k, v in changes.items()
+            ],
+            "k long, v long, op string",
+        )
+        for _ in range(1 + replay):
+            t.upsert(batch, order_by=["v"], epoch_id=epoch)
+        for k, v in changes.items():
+            if v is None:
+                model.pop(k, None)
+            else:
+                model[k] = v
+    df = t.read(spark)
+    got = {} if df is None else {r["k"]: r["v"] for r in df.collect()}
+    assert got == model
+    for b, v in t._bucket_items(t.load_manifest()):
+        assert os.path.isdir(t._bucket_dir(v, int(b))), (b, v)
+    data = os.path.join(t.path, "_data")
+    if os.path.isdir(data):
+        assert not [
+            d for d in os.listdir(data) if d.startswith(("_tmp_v", "_old_v"))
+        ]
