@@ -17,6 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_cdc_log_connectors_spark.registry import all_queries
 from flink_cdc_log_connectors_spark.session import get_spark
+from perfbench.common import warm_up
 
 
 def main() -> None:
@@ -24,27 +25,11 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
     spark = get_spark("bench")
-    # Warm the JVM/codegen once with a trivial action so q1 doesn't pay
-    # first-stage setup that no steady-state cluster query would pay.
-    spark.range(1000).count()
-    # Likewise warm the Python-UDF worker pool: spawn one worker per core
-    # with a trivial Arrow-batched stage (workers are reused afterwards —
-    # spark.python.worker.reuse default).  A long-lived cluster has these
-    # daemons resident; spawning ~32 processes inside a measured query
-    # would charge one-time infrastructure cost to that query.
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def _noop(s):
-        return s
-
-    # real annotations (module uses `from __future__ import annotations`)
-    _noop.__annotations__ = {"s": pd.Series, "return": pd.Series}
-
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 8)
-    spark.range(0, cores * 10, 1, cores).select(
-        F.pandas_udf(_noop, "long")(F.col("id"))
-    ).count()
+    # Warm the JVM/codegen and the Python-UDF worker pool once, so q1
+    # doesn't pay first-stage setup and no measured query pays for
+    # spawning the per-core worker daemons a long-lived cluster keeps
+    # resident.
+    warm_up(spark)
 
     if os.environ.get("SPARK_GRAFT_NO_CACHE", "") != "1":
         # Pin the workload tables in memory — the steady-state posture of a

@@ -11,37 +11,37 @@ crosses the Python boundary).
 
 Unresolved Columns built from ``F.col``/``F.lit`` are immutable and
 DataFrame-independent: reusing one across epochs resolves it against
-each new frame exactly as a freshly built copy would.  The JVM — and
-therefore the Expression objects the Columns wrap — outlives
-SparkSession/SparkContext restarts within one Python process, so the
-cache is keyed on the py4j GATEWAY identity (a genuinely fresh JVM gets
-fresh trees) with a strong reference held so a gateway id can never be
-recycled onto a live cache entry (the ADVICE-r10 id-recycling class).
+each new frame exactly as a freshly built copy would.  Some memoized
+values are bound to the SparkContext that built them (a ``pandas_udf``
+wrapper such as ``functions/text.hashed_ngram_udf``), so the memo lives
+exactly as long as the active SparkContext: one dict for the live
+context, dropped the first time a different context is active.  The
+context is held strongly, so its identity cannot be recycled onto a
+stale memo, and a dead context's entries are released.
 """
 
 from __future__ import annotations
 
 from typing import Any, Callable
 
-#: (id(gateway), *key) → (gateway strong ref, value)
-_CACHE: dict[tuple, tuple[Any, Any]] = {}
+#: (the SparkContext the memo belongs to, key → value), or None
+_MEMO: tuple[Any, dict[tuple, Any]] | None = None
 
 
 def prepared(key: tuple, build: Callable[[], Any]) -> Any:
-    """Memoize ``build()`` under ``key`` for the lifetime of the current
-    py4j gateway.  ``key`` must capture every input the built tree
+    """Memoize ``build()`` under ``key`` for the lifetime of the active
+    SparkContext.  ``key`` must capture every input the built tree
     depends on (schema JSON, column names, constants...).  Falls through
     to a plain build when no SparkContext is active (nothing to key on)."""
+    global _MEMO
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
     if sc is None:
         return build()
-    gw = sc._gateway
-    full = (id(gw), *key)
-    hit = _CACHE.get(full)
-    if hit is not None and hit[0] is gw:
-        return hit[1]
-    value = build()
-    _CACHE[full] = (gw, value)
-    return value
+    if _MEMO is None or _MEMO[0] is not sc:
+        _MEMO = (sc, {})
+    memo = _MEMO[1]
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]

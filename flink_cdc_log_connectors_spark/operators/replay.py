@@ -55,84 +55,6 @@ def replay_state_dir(prefix: str, sf_dir: str) -> str:
 RENAME_OFFSET = 1_000_000
 
 
-def witness_shuffle_partitions(spark: SparkSession, n: int = 8):
-    """Scope ``spark.sql.shuffle.partitions`` down for a replay witness.
-
-    The witnesses push kilobyte-scale microbatches through ~7 jobs per
-    epoch; at the session default (200 on a vanilla session) every state
-    merge schedules two orders of magnitude more tasks than there are
-    rows per partition — pure scheduler overhead, measured ~20% of
-    witness wall-clock.  A real deployment sizes shuffle partitions to
-    its cluster (and AQE coalesces); this is witness-scale tuning only,
-    restored on exit.
-
-    KEEP THE SAVE/SET/RESTORE BODY IN SYNC with
-    :func:`witness_replay_confs`, which duplicates it and layers the
-    AQE toggle on top (ADVICE r11: fold one into the other — deferred
-    to r13 for the driver-window rotation budget, the same constraint
-    that deferred the ingest diet from r11: composing them changes the
-    executed path of every witness_replay_confs witness, and the r12
-    window is full with the r8 band + this round's diet)."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _scope():
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    return _scope()
-
-
-def witness_replay_confs(spark: SparkSession, n: int = 2):
-    """Witness-scale session tuning for the keyed/join replay witnesses
-    (r11 bench diet — a superset of :func:`witness_shuffle_partitions`,
-    kept separate so the witnesses still on that helper keep their exact
-    code path): scopes ``spark.sql.shuffle.partitions`` down to ``n``
-    AND turns ADAPTIVE EXECUTION off for the replay.  AQE exists to
-    re-plan real-data shuffles at runtime; at these witnesses' kilobyte
-    microbatches every shuffle is tiny, so AQE's per-stage re-planning
-    is pure driver overhead (measured ~15% of witness wall-clock), and
-    task-launch overhead dominates task work — two shuffle partitions
-    (≤ 50k rows each at the bench sf) measured another ~15% off.
-
-    r13: WHOLE-STAGE CODEGEN is also off inside the scope.  Every epoch
-    plans fresh literals (the ``__epoch`` stamp) and fresh state-file
-    paths, so no generated class is ever reused — each per-epoch job
-    paid a janino compile for a pipeline that then processes kilobytes.
-    Interleaved A/B (min-of-3, sf0.1): agg_ttl 4.82→3.69s, join
-    6.07→4.74s, join_ttl 8.77→7.37s; the data-bound cep witness is flat
-    (4.87 vs 4.73s), so the toggle is unconditional here.  A real
-    deployment at real microbatch sizes keeps codegen on — witness-scale
-    tuning only, restored on exit.
-
-    KEEP THE SAVE/SET/RESTORE BODY IN SYNC with
-    :func:`witness_shuffle_partitions` (see the deferral note there —
-    composition lands with the window budget to re-prove the witnesses
-    it touches)."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _scope():
-        old_n = spark.conf.get("spark.sql.shuffle.partitions")
-        old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        old_cg = spark.conf.get("spark.sql.codegen.wholeStage")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_n)
-            spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-            spark.conf.set("spark.sql.codegen.wholeStage", old_cg)
-
-    return _scope()
-
-
 def _assert_unique_ts(base: DataFrame) -> None:
     """The replay fixtures use the microsecond rowtime as the log position
     AND as the oracle's ROW_NUMBER tie-break, so determinism of both the
@@ -370,15 +292,14 @@ def changelog_join_replay_query(
         # under deletes, renames, and re-enrichment
         bucket_left_by_join_col=True,
     )
-    with witness_replay_confs(spark):
-        # two microbatches — see _replay_keyed_batches (r11 bench diet)
-        for epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
-            join.process_batch(
-                raw.filter(F.col("day").between(lo, hi)).select(
-                    "value", "file", "pos"
-                ),
-                epoch_id=epoch,
-            )
+    # two microbatches — see _replay_keyed_batches (r11 bench diet)
+    for epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
+        join.process_batch(
+            raw.filter(F.col("day").between(lo, hi)).select(
+                "value", "file", "pos"
+            ),
+            epoch_id=epoch,
+        )
     view = join.read_view(spark)
     return view.select(
         "event_id", "user_id", "value", "r_score", "r_ver"
@@ -593,14 +514,13 @@ def _replay_keyed_batches(consumer_process_batch, env: DataFrame) -> None:
     # cross-batch per-key op sequences, mid-replay TTL expiry (epoch 1's
     # cutoff = day-15 watermark - 12 days reaches ~day 3), and the final
     # pass's tail flush (cutoff ~day 19).
-    with witness_replay_confs(env.sparkSession):
-        for epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
-            consumer_process_batch(
-                env.filter(F.col("day").between(lo, hi)).select(
-                    "value", "file", "pos"
-                ),
-                epoch_id=epoch,
-            )
+    for epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
+        consumer_process_batch(
+            env.filter(F.col("day").between(lo, hi)).select(
+                "value", "file", "pos"
+            ),
+            epoch_id=epoch,
+        )
 
 
 def _fresh_expire_epoch(default: int, *tables) -> int:
@@ -762,10 +682,9 @@ def changelog_agg_ttl_replay_query(
             "expiry path was not exercised"
         )
     mid = agg.expired_applied
-    with witness_replay_confs(spark):
-        agg.expire(
-            spark, epoch_id=_fresh_expire_epoch(3, agg.fact_state, agg.output)
-        )
+    agg.expire(
+        spark, epoch_id=_fresh_expire_epoch(3, agg.fact_state, agg.output)
+    )
     if fresh and agg.expired_applied <= mid:
         raise AssertionError(
             "final expire() pass retracted nothing — fixture/TTL sizing "
@@ -835,15 +754,14 @@ def changelog_agg_idle_expiry_replay_query(
     fresh = agg._ttl_proto.load_wm() is None
     seq = EpochSequencer(agg.output.path)
     feed = sequenced_process_batch(agg, seq)
-    with witness_replay_confs(spark):
-        # two microbatches — see _replay_keyed_batches (r11 bench diet)
-        for src_epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
-            feed(
-                env.filter(F.col("day").between(lo, hi)).select(
-                    "value", "file", "pos"
-                ),
-                src_epoch,
-            )
+    # two microbatches — see _replay_keyed_batches (r11 bench diet)
+    for src_epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
+        feed(
+            env.filter(F.col("day").between(lo, hi)).select(
+                "value", "file", "pos"
+            ),
+            src_epoch,
+        )
     if fresh and agg.expired_applied == 0:
         raise AssertionError(
             "idle-expiry witness never expired a fact mid-replay — the "
@@ -857,11 +775,10 @@ def changelog_agg_idle_expiry_replay_query(
         pass
     fired = False
     base = seq.last() + 1  # strictly past every prior run's trigger ids
-    with witness_replay_confs(spark):
-        for i in range(4):
-            if mon.on_trigger(spark, base + i):
-                fired = True
-                break
+    for i in range(4):
+        if mon.on_trigger(spark, base + i):
+            fired = True
+            break
     if not fired:
         raise AssertionError(
             "idle ticker never flushed the quiesced stream"
@@ -914,28 +831,26 @@ def changelog_join_ttl_replay_query(
     )
     # fresh-dir gate: see changelog_agg_ttl_replay_query
     fresh = join._ttl_proto.load_wm() is None
-    with witness_replay_confs(spark):
-        # two microbatches — see _replay_keyed_batches (r11 bench diet)
-        for epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
-            join.process_batch(
-                raw.filter(F.col("day").between(lo, hi)).select(
-                    "value", "file", "pos"
-                ),
-                epoch_id=epoch,
-            )
+    # two microbatches — see _replay_keyed_batches (r11 bench diet)
+    for epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
+        join.process_batch(
+            raw.filter(F.col("day").between(lo, hi)).select(
+                "value", "file", "pos"
+            ),
+            epoch_id=epoch,
+        )
     if fresh and join.expired_applied == 0:
         raise AssertionError(
             "join TTL witness never expired a fact mid-replay — the "
             "per-epoch expiry path was not exercised"
         )
     mid = join.expired_applied
-    with witness_replay_confs(spark):
-        join.expire(
-            spark,
-            epoch_id=_fresh_expire_epoch(
-                3, join.left_state, join.right_state, join.output
-            ),
-        )
+    join.expire(
+        spark,
+        epoch_id=_fresh_expire_epoch(
+            3, join.left_state, join.right_state, join.output
+        ),
+    )
     if fresh and join.expired_applied <= mid:
         raise AssertionError(
             "final expire() pass retracted nothing — fixture/TTL sizing "
@@ -1020,11 +935,10 @@ def changelog_topn_ttl_replay_query(
             "per-epoch expiry path was not exercised"
         )
     mid = topn.expired_applied
-    with witness_replay_confs(spark):
-        topn.expire(
-            spark,
-            epoch_id=_fresh_expire_epoch(3, topn.fact_state, topn.output),
-        )
+    topn.expire(
+        spark,
+        epoch_id=_fresh_expire_epoch(3, topn.fact_state, topn.output),
+    )
     if fresh and topn.expired_applied <= mid:
         raise AssertionError(
             "final expire() pass retracted nothing — fixture/TTL sizing "
@@ -1187,10 +1101,9 @@ def changelog_cagg_ttl_replay_query(
             "per-epoch expiry path was not exercised"
         )
     mid = agg.expired_applied
-    with witness_replay_confs(spark):
-        agg.expire(
-            spark, epoch_id=_fresh_expire_epoch(3, agg.fact_state, agg.output)
-        )
+    agg.expire(
+        spark, epoch_id=_fresh_expire_epoch(3, agg.fact_state, agg.output)
+    )
     if fresh and agg.expired_applied <= mid:
         raise AssertionError(
             "final expire() pass retracted nothing — fixture/TTL sizing "
@@ -1257,6 +1170,7 @@ def cep_stream_replay_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.datetime import epoch_micros
     from ..streaming.cep import streaming_adjacent_pattern
+    from ..streaming.statetable import session_confs
 
     work = tempfile.mkdtemp(prefix="cep_replay_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
@@ -1274,9 +1188,7 @@ def cep_stream_replay_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     _assert_unique_ts(base)
 
     # the state-store partition count is BAKED into the checkpoint at the
-    # first run, so the conf scope must span every wave (it does); AQE
-    # does not apply to the streaming runs — the toggle only trims the
-    # wave-prep batch writes.
+    # first run, so the conf scope must span every wave (it does).
     # Unlike the kilobyte-microbatch IVM witnesses, THIS witness is
     # data-bound: each wave pushes ~half the events table through the
     # stateful Python stage, so its partition count sets the stateful
@@ -1286,7 +1198,7 @@ def cep_stream_replay_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver's lower-core bench sees a matching layout.
     boundary = None
     cep_parts = max(2, min(32, spark.sparkContext.defaultParallelism))
-    with witness_replay_confs(spark, n=cep_parts):
+    with session_confs(spark, {"spark.sql.shuffle.partitions": str(cep_parts)}):
         for lo, hi in ((1, 15), (16, 31)):
             wave = base.filter(F.col("day").between(lo, hi)).drop("day")
             if lo == 16:
@@ -1393,8 +1305,7 @@ def ingest_dedup_replay_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     fires: the new-vs-index probe, the mid-replay fold at
     ``compact_threshold=1`` — bucket version lists reach 2 at epoch 1,
     BEFORE the re-delivery — and the at-least-once re-delivery of a
-    committed epoch), ``witness_replay_confs`` scoping (AQE off + 2
-    shuffle partitions, restored on exit), and ``n_buckets=4`` — pure
+    committed epoch), and ``n_buckets=4`` — pure
     witness-scale placement (semantics are bucket-count-independent;
     production sizing is the ``migrate_ingest_index`` rule), cutting
     per-append bucket-file IO 4×.  The oracle's orientation modulus
@@ -1409,20 +1320,19 @@ def ingest_dedup_replay_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the __epoch stamps the retry discipline reads — same witness
     # discipline as the temporal join's history compaction
     dd = IngestDedup(index_path, compact_threshold=1, n_buckets=4)
-    with witness_replay_confs(spark):
-        for epoch in range(2):
-            dd.process_batch(
-                docs.filter(F.col("doc_id") % 2 == epoch), epoch_id=epoch
-            )
-        if not dd.bands.compactions_committed():
-            raise AssertionError(
-                "index auto-compaction did not fire mid-replay"
-            )
-        # at-least-once: re-deliver a committed epoch; the pair set must
-        # not change (a retried append overwrites its own version — or
-        # no-ops if the fold subsumed it — also what makes harness
-        # re-runs over the shared state dir safe)
-        dd.process_batch(docs.filter(F.col("doc_id") % 2 == 1), epoch_id=1)
+    for epoch in range(2):
+        dd.process_batch(
+            docs.filter(F.col("doc_id") % 2 == epoch), epoch_id=epoch
+        )
+    if not dd.bands.compactions_committed():
+        raise AssertionError(
+            "index auto-compaction did not fire mid-replay"
+        )
+    # at-least-once: re-deliver a committed epoch; the pair set must
+    # not change (a retried append overwrites its own version — or
+    # no-ops if the fold subsumed it — also what makes harness
+    # re-runs over the shared state dir safe)
+    dd.process_batch(docs.filter(F.col("doc_id") % 2 == 1), epoch_id=1)
     pairs = read_dedup_pairs(spark, index_path)
     return pairs.select("d1", "d2", "jaccard").orderBy("d1", "d2")
 
@@ -1559,8 +1469,8 @@ def ingest_dedup_window_replay_query(
     # index per call BY DESIGN (above), so it replays a HALF slice of the
     # corpus — the window/fold/redelivery contract is slice-independent,
     # and the oracle (slice_mod=2) restricts identically, so values still
-    # check end to end.  r12 (VERDICT r11 #4): witness_replay_confs
-    # scoping + n_buckets=4 witness-scale placement; the THREE epochs
+    # check end to end.  r12 (VERDICT r11 #4): n_buckets=4
+    # witness-scale placement; the THREE epochs
     # stay — the retention window needs an epoch that ages OUT (0 vs 2)
     # and one that stays IN, which two batches cannot express
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -1571,30 +1481,29 @@ def ingest_dedup_window_replay_query(
         dd = IngestDedup(
             index_path, compact_threshold=2, retention_epochs=1, n_buckets=4
         )
-        with witness_replay_confs(spark):
-            for epoch in range(3):
-                dd.process_batch(
-                    docs.filter(F.col("doc_id") % 3 == epoch), epoch_id=epoch
-                )
-            if not dd.bands.compactions_committed():
-                raise AssertionError(
-                    "index auto-compaction did not fire mid-replay"
-                )
-            oldest = dd.bands.read(spark).agg(
-                F.min("__epoch").alias("mn")
-            ).first()["mn"]
-            # oldest is None ⇔ the bands store is EMPTY — also a fixture
-            # regression (ADVICE r9: without the guard it was a
-            # TypeError, not the intended AssertionError)
-            if oldest is None or oldest < 1:
-                raise AssertionError(
-                    f"expired index rows survived the fold or the store "
-                    f"is empty (min __epoch {oldest}) — the retention "
-                    "transform did not run as intended"
-                )
+        for epoch in range(3):
             dd.process_batch(
-                docs.filter(F.col("doc_id") % 3 == 2), epoch_id=2
+                docs.filter(F.col("doc_id") % 3 == epoch), epoch_id=epoch
             )
+        if not dd.bands.compactions_committed():
+            raise AssertionError(
+                "index auto-compaction did not fire mid-replay"
+            )
+        oldest = dd.bands.read(spark).agg(
+            F.min("__epoch").alias("mn")
+        ).first()["mn"]
+        # oldest is None ⇔ the bands store is EMPTY — also a fixture
+        # regression (ADVICE r9: without the guard it was a
+        # TypeError, not the intended AssertionError)
+        if oldest is None or oldest < 1:
+            raise AssertionError(
+                f"expired index rows survived the fold or the store "
+                f"is empty (min __epoch {oldest}) — the retention "
+                "transform did not run as intended"
+            )
+        dd.process_batch(
+            docs.filter(F.col("doc_id") % 3 == 2), epoch_id=2
+        )
         pairs = read_dedup_pairs(spark, index_path)
         # materialize before the workspace is deleted (try/finally
         # rmtree replaces the r9 atexit registration, which leaked one
@@ -1631,7 +1540,7 @@ def ingest_index_migrate_replay_query(
 
     Bench diet (VERDICT r11 #4): two arrival batches (the second epoch
     added nothing the migration contract needs — every gate above
-    binds at epoch 1 already), ``witness_replay_confs`` scoping, and
+    binds at epoch 1 already), and
     ``n_buckets=4`` witness-scale placement end to end (the raw layout
     has no buckets; the MIGRATION itself re-buckets into 4 — also the
     first driver proof of its ``n_buckets`` parameter, the documented
@@ -1647,43 +1556,42 @@ def ingest_index_migrate_replay_query(
 
     docs = load_table(spark, sf_dir, "documents")
     index_path = replay_state_dir("ingest_migrate", sf_dir)
-    with witness_replay_confs(spark):
-        if not os.path.isdir(os.path.join(index_path, "bands")):
-            # epoch 0, as the pre-r8 loop wrote it (raw appends; intra
-            # candidates only — the index was empty at epoch 0)
-            doc_sets = docs.filter(F.col("doc_id") % 2 == 0).select(
-                "doc_id",
-                hashed_word_ngrams(F.col("text"), 3).alias("shset"),
+    if not os.path.isdir(os.path.join(index_path, "bands")):
+        # epoch 0, as the pre-r8 loop wrote it (raw appends; intra
+        # candidates only — the index was empty at epoch 0)
+        doc_sets = docs.filter(F.col("doc_id") % 2 == 0).select(
+            "doc_id",
+            hashed_word_ngrams(F.col("text"), 3).alias("shset"),
+        )
+        bands0 = _batch_bands(doc_sets)
+        a, b = bands0.alias("a"), bands0.alias("b")
+        intra = a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.bh") == F.col("b.bh"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        ).select(
+            F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
+        )
+        pairs0 = _verify_pairs(intra.distinct(), doc_sets, 1, 5)
+        for _ in range(2):  # at-least-once: everything appended TWICE
+            pairs0.withColumn("epoch", F.lit(0)).write.mode(
+                "append"
+            ).parquet(os.path.join(index_path, "pairs"))
+            bands0.write.mode("append").parquet(
+                os.path.join(index_path, "bands")
             )
-            bands0 = _batch_bands(doc_sets)
-            a, b = bands0.alias("a"), bands0.alias("b")
-            intra = a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            ).select(
-                F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
+            doc_sets.write.mode("append").parquet(
+                os.path.join(index_path, "shsets")
             )
-            pairs0 = _verify_pairs(intra.distinct(), doc_sets, 1, 5)
-            for _ in range(2):  # at-least-once: everything appended TWICE
-                pairs0.withColumn("epoch", F.lit(0)).write.mode(
-                    "append"
-                ).parquet(os.path.join(index_path, "pairs"))
-                bands0.write.mode("append").parquet(
-                    os.path.join(index_path, "bands")
-                )
-                doc_sets.write.mode("append").parquet(
-                    os.path.join(index_path, "shsets")
-                )
-        # one-shot, idempotent (no-ops on a reused state dir — already
-        # the current layout, the migration's own contract)
-        migrate_ingest_index(spark, index_path, n_buckets=4)
-        dd = IngestDedup(index_path, n_buckets=4)
-        dd.process_batch(docs.filter(F.col("doc_id") % 2 == 1), epoch_id=1)
-        # re-delivery OVER THE MIGRATED INDEX: the retry's epoch filter
-        # must see exactly the migrated epoch-0 stamps plus nothing newer
-        dd.process_batch(docs.filter(F.col("doc_id") % 2 == 1), epoch_id=1)
+    # one-shot, idempotent (no-ops on a reused state dir — already
+    # the current layout, the migration's own contract)
+    migrate_ingest_index(spark, index_path, n_buckets=4)
+    dd = IngestDedup(index_path, n_buckets=4)
+    dd.process_batch(docs.filter(F.col("doc_id") % 2 == 1), epoch_id=1)
+    # re-delivery OVER THE MIGRATED INDEX: the retry's epoch filter
+    # must see exactly the migrated epoch-0 stamps plus nothing newer
+    dd.process_batch(docs.filter(F.col("doc_id") % 2 == 1), epoch_id=1)
     pairs = read_dedup_pairs(spark, index_path)
     return pairs.select("d1", "d2", "jaccard").orderBy("d1", "d2")
 
@@ -1728,44 +1636,43 @@ def sink_exactly_once_replay_query(
         ev.filter(F.col("day").between(lo, hi)).drop("day")
         for lo, hi in ((1, 8), (9, 16), (17, 24), (25, 31))
     ]
-    with witness_shuffle_partitions(spark):
-        if 1 not in sink.committed_epochs():
-            # crash-before-commit: partial first attempt of epoch 1
-            # (skipped on a reused state dir, where epoch 1 is committed
-            # and authoritative — exactly the ledger's own contract)
-            batches[1].limit(7).write.mode("overwrite").parquet(
-                sink._epoch_dir(1)
-            )
-        sink.process_batch(batches[0], 0)
-        sink.process_batch(batches[1], 1)  # retry clobbers the partial
-        sink.process_batch(batches[1], 1)  # duplicate delivery: no-op
-        # fold epochs 0-1 into one consolidated tier (no-op on a reused
-        # state dir, where they are already folded — < 2 loose to fold)
-        sink.compact_epochs(spark, keep_recent=0)
-        sink.process_batch(batches[1], 1)  # duplicate of a FOLDED epoch
-        sink.process_batch(batches[2], 2)
-        sink.process_batch(batches[3], 3)
-        # second compaction: its ledger entry merges into the first
-        # (r9 second-level fold; on a fresh dir the ledger must now hold
-        # ONE [0,3] entry and TWO tier dirs)
-        sink.compact_epochs(spark, keep_recent=0)
-        led = sink._load_ledger()
-        if len(led["merged"]) > 1:
-            raise AssertionError(
-                "sink_exactly_once_replay: tier ledger entries not folded"
-            )
-        # re-merge the tier dirs themselves; replay inside the
-        # reconsolidated range must still no-op (no-op call on a reused
-        # state dir, where a single tier is already in place)
-        sink.reconsolidate_tiers(spark)
-        sink.process_batch(batches[2], 2)
-        # orphan: written but never ledgered (crash before commit point)
-        batches[0].write.mode("overwrite").parquet(sink._epoch_dir(99))
-        removed = sink.gc_uncommitted()
-        if 99 not in removed:
-            raise AssertionError(
-                "sink_exactly_once_replay: orphan epoch dir not GC'd"
-            )
+    if 1 not in sink.committed_epochs():
+        # crash-before-commit: partial first attempt of epoch 1
+        # (skipped on a reused state dir, where epoch 1 is committed
+        # and authoritative — exactly the ledger's own contract)
+        batches[1].limit(7).write.mode("overwrite").parquet(
+            sink._epoch_dir(1)
+        )
+    sink.process_batch(batches[0], 0)
+    sink.process_batch(batches[1], 1)  # retry clobbers the partial
+    sink.process_batch(batches[1], 1)  # duplicate delivery: no-op
+    # fold epochs 0-1 into one consolidated tier (no-op on a reused
+    # state dir, where they are already folded — < 2 loose to fold)
+    sink.compact_epochs(spark, keep_recent=0)
+    sink.process_batch(batches[1], 1)  # duplicate of a FOLDED epoch
+    sink.process_batch(batches[2], 2)
+    sink.process_batch(batches[3], 3)
+    # second compaction: its ledger entry merges into the first
+    # (r9 second-level fold; on a fresh dir the ledger must now hold
+    # ONE [0,3] entry and TWO tier dirs)
+    sink.compact_epochs(spark, keep_recent=0)
+    led = sink._load_ledger()
+    if len(led["merged"]) > 1:
+        raise AssertionError(
+            "sink_exactly_once_replay: tier ledger entries not folded"
+        )
+    # re-merge the tier dirs themselves; replay inside the
+    # reconsolidated range must still no-op (no-op call on a reused
+    # state dir, where a single tier is already in place)
+    sink.reconsolidate_tiers(spark)
+    sink.process_batch(batches[2], 2)
+    # orphan: written but never ledgered (crash before commit point)
+    batches[0].write.mode("overwrite").parquet(sink._epoch_dir(99))
+    removed = sink.gc_uncommitted()
+    if 99 not in removed:
+        raise AssertionError(
+            "sink_exactly_once_replay: orphan epoch dir not GC'd"
+        )
     out = sink.read_committed(spark)
     return (
         out.groupBy("event_type")

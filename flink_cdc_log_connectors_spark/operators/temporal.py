@@ -1398,16 +1398,13 @@ def temporal_asof_replay_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         # asserted below (production default is 16)
         history_compact_threshold=2,
     )
-    from .replay import witness_replay_confs
-
-    with witness_replay_confs(spark):
-        for epoch in range(4):
-            tj.process_batch(
-                log.filter(F.col("b") == epoch).select(
-                    "value", "file", "pos"
-                ),
-                epoch_id=epoch,
-            )
+    for epoch in range(4):
+        tj.process_batch(
+            log.filter(F.col("b") == epoch).select(
+                "value", "file", "pos"
+            ),
+            epoch_id=epoch,
+        )
     log.unpersist(False)
     # the replay must have exercised compaction (fired this call, or —
     # on a reused state dir, where re-appended subsumed epochs no-op —

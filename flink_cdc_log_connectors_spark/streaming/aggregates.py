@@ -238,24 +238,27 @@ class ChangelogAggregate:
 
         return self._prepared("epoch_stats", build)
 
+    def _epoch_buckets(self, per: list) -> dict:
+        """The buckets the stats collect names per table (``fused_epoch``)."""
+        return {
+            self.fact_state: {r["__b"] for r in per},
+            self.output: {b for r in per for b in r["ob"]},
+        }
+
     def _merge_and_recompute(
         self,
         spark: SparkSession,
         rows: DataFrame,
         epoch_id: int,
         per: list,
-        committed,
+        touched: dict,
     ) -> None:
         """The epoch's commit step (``ttl.fused_epoch``): fact-state
         upsert + touched-group recompute + view upsert.  ``rows`` already
         contains any synthesized expiry retractions; ``per`` is the
         stats collect, one row per fact bucket."""
-        fact_buckets = sorted(
-            {r["__b"] for r in per} | committed(self.fact_state)
-        )
-        out_buckets = sorted(
-            {b for r in per for b in r["ob"]} | committed(self.output)
-        )
+        fact_buckets = touched[self.fact_state]
+        out_buckets = touched[self.output]
         # 1. keep the fact state current (feeds min/max recompute and
         #    replayed-epoch recovery)
         self.fact_state.upsert(

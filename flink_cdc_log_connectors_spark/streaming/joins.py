@@ -273,7 +273,9 @@ class ChangelogJoin:
         Crash discipline is unchanged: each table's manifest swap remains
         its own atomic commit point, and a crash with either (or both)
         un-swapped replays idempotently, exactly as the old sequential
-        ordering did (neither ordering was ever load-bearing)."""
+        ordering did (neither ordering was ever load-bearing).  Session
+        confs are per session, so both threads run under the epoch's
+        settings (``ttl.fused_epoch``) without entering them."""
         from concurrent.futures import ThreadPoolExecutor
 
         def _side(state, args):
@@ -388,6 +390,15 @@ class ChangelogJoin:
 
         return self._prepared("epoch_stats", build)
 
+    def _epoch_buckets(self, per: list) -> dict:
+        """The buckets the stats collect names per table (``fused_epoch``);
+        the output's are known only after the recompute."""
+        return {
+            self.left_state: {r["__b"] for r in per if r["__s"] == 0},
+            self.right_state: {r["__b"] for r in per if r["__s"] == 1},
+            self.output: None,
+        }
+
     def _upsert_and_recompute(
         self,
         rb: DataFrame,
@@ -395,20 +406,14 @@ class ChangelogJoin:
         lb_all: DataFrame,
         epoch_id: int,
         per: list,
-        committed,
+        touched: dict,
     ) -> None:
         """The epoch's commit step (``ttl.fused_epoch``): both side-state
         upserts, the affected-fact recompute and the output upsert.
         ``lb_all`` already contains any synthesized expiry retractions;
         ``per`` is the stats collect, one row per (side, bucket)."""
-        lbk = sorted(
-            {r["__b"] for r in per if r["__s"] == 0}
-            | committed(self.left_state)
-        )
-        rbk = sorted(
-            {r["__b"] for r in per if r["__s"] == 1}
-            | committed(self.right_state)
-        )
+        lbk = touched[self.left_state]
+        rbk = touched[self.right_state]
         dim_buckets = sorted(
             {b for r in per for b in r["dbs"]}
             | {r["__b"] for r in per if r["__s"] == 1}
@@ -546,7 +551,7 @@ class ChangelogJoin:
             rows.withColumn("__seq", F.lit(0)),
             order_by=["__seq"],
             epoch_id=epoch_id,
-            extra_touched=sorted(committed(self.output)),
+            extra_touched=touched[self.output],
         )
 
     def read_view(self, spark: SparkSession) -> DataFrame | None:

@@ -42,6 +42,10 @@ r1).  This module is the scale-safe replacement:
   written: the manifest, spec and history here, the sink ledger, the TTL
   watermark and bounds, the epoch sequencer and idle-monitor state, and
   the temporal join's watermark.
+- **Per-epoch execution settings** — every consumer's commit step runs
+  under :func:`epoch_settings`, which picks AQE, codegen and shuffle
+  partitions from the size ``_commit_partitions`` already measures
+  (:func:`session_confs` is the one save/set/restore body).
 - **No swallowed errors** — state existence is explicit (bucket present
   in the manifest), so there is no ``except Exception: first batch``
   anywhere; a corrupt manifest or unreadable bucket raises.
@@ -60,10 +64,11 @@ Delta/Iceberg MERGE sink instead — the changelog semantics
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,6 +109,53 @@ _COMMIT_TARGET_BYTES = 128 << 20
 #: whose byte size is unknown (first commit into an empty table): one
 #: write task per this many batch rows
 _COMMIT_TASK_ROWS = 1 << 20
+
+
+# -- per-epoch execution settings ----------------------------------------
+@contextlib.contextmanager
+def session_confs(spark: SparkSession, confs: Mapping[str, str]):
+    """Set ``confs`` on ``spark`` for the scope; every key gets its prior
+    value back on exit, also when the body raises."""
+    old = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def epoch_settings(
+    spark: SparkSession,
+    batch_rows: int,
+    touched: Mapping[PartitionedStateTable, Sequence[int] | None],
+):
+    """The settings for one epoch's commit step.  ``batch_rows`` comes
+    from the epoch's stats collect; ``touched`` maps each table the step
+    writes to the buckets it rewrites (None: not known before the step,
+    every live bucket counts).  SMALL when every commit would write from
+    one task (:meth:`PartitionedStateTable._commit_partitions`, no job):
+    then the jobs are fixed cost — AQE re-planning, a codegen compile per
+    fresh plan, more tasks than rows — so AQE and whole-stage codegen go
+    off and shuffle partitions to at most 2.  A larger epoch keeps the
+    session's settings.  Pass the batch's own ``sparkSession``: a
+    streaming query runs its batches on a clone of the session."""
+    for table, buckets in touched.items():
+        manifest = table.load_manifest()
+        if buckets is None:
+            buckets = table._live(manifest)
+        if table._commit_partitions(manifest, buckets, batch_rows) > 1:
+            return contextlib.nullcontext()
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return session_confs(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.codegen.wholeStage": "false",
+            "spark.sql.shuffle.partitions": str(min(n, 2)),
+        },
+    )
 
 
 # -- small metadata files ---------------------------------------------------

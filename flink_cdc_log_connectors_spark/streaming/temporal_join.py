@@ -55,7 +55,7 @@ from pyspark.sql.window import Window
 
 from ..sources.debezium import parse_change_rows, parse_debezium
 from .joins import JoinSide
-from .statetable import PartitionedStateTable, load_json, store_json
+from .statetable import PartitionedStateTable, epoch_settings, load_json, store_json
 
 _OFF_COLS = ["_vfile", "_vpos", "_vimg"]
 
@@ -264,110 +264,116 @@ class TemporalJoin:
         )
         probe = dim_all.select(*dcols).unionByName(facts.select(*fcols))
         stats = probe.agg(*aggs).first()
-        if stats["n_dim"] > 0:
-            # version history is INSERT-ONLY (keyed by dim key + offset,
-            # rows never change) — append-only commit: one O(batch) write,
-            # no touched-bucket collect, no prior-bucket rewrite (r7; an
-            # upsert rewrote every touched bucket's FULL history per batch)
-            self.history.append(
-                dim_all.filter(F.col("_vop") != "h"),
-                epoch_id=epoch_id,
-                batch_rows=stats["n_dim"],
-            )
-            # steady-state compaction policy (r8): fold the history's
-            # accumulated version files when any bucket's list exceeds
-            # the threshold — see __init__; the id comes from the
-            # manifest's own counter, never this epoch, so a retry of
-            # this epoch can't collide with the compacted version
-            if self.history_compact_threshold and self.history.maybe_compact(
-                spark,
-                self.history_compact_threshold,
-                transform=self._retention_transform(),
-            ):
-                self.history_compactions += 1
-        wm = self.load_watermark()
-        for cand in (stats["dim_max"], stats["hb_max"]):
-            if cand is not None and (wm is None or cand > wm):
-                wm = cand
-        if wm is not None:
-            store_json(self._wm_path(), {"ts_ms": wm})
-        # stored buffer ∪ this batch's facts (a replayed batch's facts may
-        # be in both — key dedup).  The buffer is written ONCE per batch
-        # below: new still-pending facts in, emitted keys tombstoned out.
-        buffered = self.pending.read(spark)
-        all_facts = facts
-        if buffered is not None:
-            all_facts = (
-                buffered.select(*fact_cols, "_fact_ms")
-                .unionByName(facts)
-                .dropDuplicates([self.fact.key])
-            )
+        # the commit step; compaction, the pending read and the emit reach any bucket
+        with epoch_settings(
+            spark,
+            stats["n_dim"] + stats["n_fact"],
+            dict.fromkeys((self.history, self.pending, self.output)),
+        ):
+            if stats["n_dim"] > 0:
+                # version history is INSERT-ONLY (keyed by dim key + offset,
+                # rows never change) — append-only commit: one O(batch) write,
+                # no touched-bucket collect, no prior-bucket rewrite (r7; an
+                # upsert rewrote every touched bucket's FULL history per batch)
+                self.history.append(
+                    dim_all.filter(F.col("_vop") != "h"),
+                    epoch_id=epoch_id,
+                    batch_rows=stats["n_dim"],
+                )
+                # steady-state compaction policy (r8): fold the history's
+                # accumulated version files when any bucket's list exceeds
+                # the threshold — see __init__; the id comes from the
+                # manifest's own counter, never this epoch, so a retry of
+                # this epoch can't collide with the compacted version
+                if self.history_compact_threshold and self.history.maybe_compact(
+                    spark,
+                    self.history_compact_threshold,
+                    transform=self._retention_transform(),
+                ):
+                    self.history_compactions += 1
+            wm = self.load_watermark()
+            for cand in (stats["dim_max"], stats["hb_max"]):
+                if cand is not None and (wm is None or cand > wm):
+                    wm = cand
+            if wm is not None:
+                store_json(self._wm_path(), {"ts_ms": wm})
+            # stored buffer ∪ this batch's facts (a replayed batch's facts
+            # may be in both — key dedup).  The buffer is written ONCE per batch
+            # below: new still-pending facts in, emitted keys tombstoned out.
+            buffered = self.pending.read(spark)
+            all_facts = facts
+            if buffered is not None:
+                all_facts = (
+                    buffered.select(*fact_cols, "_fact_ms")
+                    .unionByName(facts)
+                    .dropDuplicates([self.fact.key])
+                )
 
-        # STRICT bound: source timestamps are non-decreasing in offset
-        # order, so having SEEN ts only proves entries with ts' < ts are
-        # complete — another same-ms dim change may still arrive in a
-        # later microbatch (ms-resolution logs tie constantly, and a
-        # batch boundary can split the tie group).  Emitting at
-        # `_fact_ms == wm` therefore risks a premature final verdict
-        # pinning the earlier same-ms version; `<` is the exact
-        # completeness the max-seen watermark can assert.  (Flink emits
-        # at == because ITS source watermark carries a "no more ≤ t"
-        # contract; a max-seen watermark does not.)  Tail facts at the
-        # high-water mark flush when heartbeats advance wm past them —
-        # the reference's heartbeat feature exists for exactly this —
-        # or explicitly via :meth:`flush_tail` on bounded logs.
-        has_ready = False
-        ready = None
-        hist_buckets: list[int] = []
-        ready_pb: list[int] = []
-        if wm is not None:
-            # lazy persist + ONE agg job: materializes the cache, counts,
-            # AND collects both bucket sets the ready facts touch — the
-            # history buckets the emit join probes and the pending
-            # buckets the tombstones below hash to (each bounded by
-            # n_buckets) — so neither downstream upsert needs its own
-            # collect job
-            ready = all_facts.filter(F.col("_fact_ms") < F.lit(wm)).persist()
-            rstats = ready.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.collect_set(
-                    self.history.bucket_for(F.col(self.fact.join_col))
-                ).alias("bks"),
-                F.collect_set(
-                    self.pending.bucket_for(F.col(self.fact.key))
-                ).alias("pbs"),
-            ).first()
-            has_ready = rstats["n"] > 0
-            hist_buckets = sorted(rstats["bks"])
-            ready_pb = list(rstats["pbs"])
-        # EMIT BEFORE the pending tombstone commit (ADVICE r7): the
-        # output upsert is keyed and idempotent, so a crash between the
-        # two leaves the emitted facts still pending and the retry
-        # re-emits them identically; the old order (tombstone first)
-        # permanently lost every buffered fact if the crash landed
-        # between the commits — and it also kept `ready`'s lineage (over
-        # the PRE-upsert pending files) alive past the upsert's GC.
-        if has_ready:
-            self._emit(
-                spark, ready, fact_cols, epoch_id, hist_buckets, ready_pb
+            # STRICT bound: source timestamps are non-decreasing in offset
+            # order, so having SEEN ts only proves entries with ts' < ts are
+            # complete — another same-ms dim change may still arrive in a
+            # later microbatch (ms-resolution logs tie constantly, and a
+            # batch boundary can split the tie group).  Emitting at
+            # `_fact_ms == wm` therefore risks a premature final verdict
+            # pinning the earlier same-ms version; `<` is the exact
+            # completeness the max-seen watermark can assert.  (Flink emits
+            # at == because ITS source watermark carries a "no more ≤ t"
+            # contract; a max-seen watermark does not.)  Tail facts at the
+            # high-water mark flush when heartbeats advance wm past them —
+            # the reference's heartbeat feature exists for exactly this —
+            # or explicitly via :meth:`flush_tail` on bounded logs.
+            has_ready = False
+            ready = None
+            hist_buckets: list[int] = []
+            ready_pb: list[int] = []
+            if wm is not None:
+                # lazy persist + ONE agg job: materializes the cache, counts,
+                # AND collects both bucket sets the ready facts touch — the
+                # history buckets the emit join probes and the pending
+                # buckets the tombstones below hash to (each bounded by
+                # n_buckets) — so neither downstream upsert needs its own
+                # collect job
+                ready = all_facts.filter(F.col("_fact_ms") < F.lit(wm)).persist()
+                rstats = ready.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.collect_set(
+                        self.history.bucket_for(F.col(self.fact.join_col))
+                    ).alias("bks"),
+                    F.collect_set(
+                        self.pending.bucket_for(F.col(self.fact.key))
+                    ).alias("pbs"),
+                ).first()
+                has_ready = rstats["n"] > 0
+                hist_buckets = sorted(rstats["bks"])
+                ready_pb = list(rstats["pbs"])
+            # EMIT BEFORE the pending tombstone commit (ADVICE r7): the
+            # output upsert is keyed and idempotent, so a crash between the
+            # two leaves the emitted facts still pending and the retry
+            # re-emits them identically; the old order (tombstone first)
+            # permanently lost every buffered fact if the crash landed
+            # between the commits — and it also kept `ready`'s lineage (over
+            # the PRE-upsert pending files) alive past the upsert's GC.
+            if has_ready:
+                self._emit(
+                    spark, ready, fact_cols, epoch_id, hist_buckets, ready_pb
+                )
+            pending_rows = facts.withColumn("op", F.lit("c")).withColumn(
+                "__seq", F.lit(0)
             )
-        pending_rows = facts.withColumn("op", F.lit("c")).withColumn(
-            "__seq", F.lit(0)
-        )
-        if has_ready:
-            pending_rows = pending_rows.unionByName(
-                ready.withColumn("op", F.lit("d")).withColumn("__seq", F.lit(1))
+            if has_ready:
+                pending_rows = pending_rows.unionByName(
+                    ready.withColumn("op", F.lit("d")).withColumn("__seq", F.lit(1))
+                )
+            # touched precomputed (this batch's fact buckets ∪ the emitted
+            # tombstones' buckets) — upsert skips its own collect; it still
+            # no-ops when both are empty
+            self.pending.upsert(
+                pending_rows,
+                order_by=["__seq"],
+                epoch_id=epoch_id,
+                touched=[*stats["fact_pb"], *ready_pb],
+                batch_rows=stats["n_fact"],
             )
-        # touched precomputed (this batch's fact buckets ∪ the emitted
-        # tombstones' buckets) — upsert skips its own collect; it still
-        # no-ops when both are empty
-        self.pending.upsert(
-            pending_rows,
-            order_by=["__seq"],
-            epoch_id=epoch_id,
-            touched=[*stats["fact_pb"], *ready_pb],
-            batch_rows=stats["n_fact"],
-        )
         dim_all.unpersist(False)
         facts.unpersist(False)
         if ready is not None:

@@ -194,30 +194,32 @@ class ChangelogTopN:
             else self.fact_state.bucket_for(*pcols)
         )
 
+    def _epoch_buckets(self, per: list) -> dict:
+        """The buckets the stats collect names per table (``fused_epoch``)."""
+        return {
+            self.fact_state: {r["__b"] for r in per},
+            self.output: {
+                b
+                for r in per
+                for rn in range(1, self.n + 1)
+                for b in r[f"ob{rn}"]
+            },
+        }
+
     def _merge_and_recompute(
         self,
         spark: SparkSession,
         rows: DataFrame,
         epoch_id: int,
         per: list,
-        committed,
+        touched: dict,
     ) -> None:
         """The epoch's commit step (``ttl.fused_epoch``): fact-state
         upsert + touched-partition rank recompute + view upsert.
         ``rows`` already contains any synthesized expiry retractions;
         ``per`` is the stats collect, one row per fact bucket."""
-        fact_buckets = sorted(
-            {r["__b"] for r in per} | committed(self.fact_state)
-        )
-        out_buckets = sorted(
-            {
-                b
-                for r in per
-                for rn in range(1, self.n + 1)
-                for b in r[f"ob{rn}"]
-            }
-            | committed(self.output)
-        )
+        fact_buckets = touched[self.fact_state]
+        out_buckets = touched[self.output]
         # 1. fact state stays current
         self.fact_state.upsert(
             rows,

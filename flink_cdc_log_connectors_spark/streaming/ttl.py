@@ -20,9 +20,10 @@ Every IVM epoch — with or without TTL — runs through one function,
 synthesized retraction images into the consumer's OWN batch (so an
 expiry adds no extra state commits or recompute passes), runs the
 consumer's single grouped stats collect, and calls the consumer's
-commit step between ``stage()`` and ``finalize()``.  The consumer
-supplies only its bucket key, its output-bucket sets and that commit
-step.  Mechanics:
+commit step between ``stage()`` and ``finalize()``, under the execution
+settings ``statetable.epoch_settings`` picks from the epoch's size.  The
+consumer supplies only its bucket key, its output-bucket sets, the
+buckets per table those name, and that commit step.  Mechanics:
 
 - **Per-bucket min-ts bounds** (``__ttl_bounds.json``): the expiry scan
   reads only state buckets whose lower bound the cutoff has reached —
@@ -64,7 +65,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.prepared import prepared
-from .statetable import PartitionedStateTable, load_json, store_json
+from .statetable import PartitionedStateTable, epoch_settings, load_json, store_json
 
 
 def max_committed_epoch(*tables: PartitionedStateTable) -> int | None:
@@ -190,12 +191,17 @@ def fused_epoch(
     fact-side row ``__b``; ``out_sets`` are the consumer's own aggregate
     columns (the output buckets its commit touches); ``frame`` projects
     the flagged rows first (the join unions its dim side in).
-    ``commit(spark, batch, epoch_id, per, committed)`` receives the
-    batch with the retractions folded in, the collected rows, and
-    ``committed(table)``: the buckets this epoch already committed to
-    ``table``.  Under TTL a retry's effective batch may have SHRUNK (its
-    expiry images are already merged), so the commit must union those
-    in; without TTL ``committed`` is empty — a union there would mask a
+    ``consumer._epoch_buckets(per)`` maps each table the commit writes
+    to the buckets the collected rows name (None: the commit collects
+    them itself).  The commit step runs inside
+    :func:`~.statetable.epoch_settings`, which that map and the
+    collected row count size.  ``commit(spark, batch, epoch_id, per,
+    touched)`` receives the batch with the retractions folded in, the
+    collected rows, and ``touched``: per table, those buckets (none for
+    None) unioned with the buckets this epoch already committed to it,
+    sorted.  Under TTL a retry's effective batch may have SHRUNK (its
+    expiry images are already merged), so the commit must rewrite those
+    too; without TTL nothing is unioned — a union there would mask a
     recycled epoch id from the upsert's epoch-reuse guard."""
     ttl = consumer._ttl_proto
     exp, cutoff, syn = (
@@ -211,13 +217,22 @@ def fused_epoch(
     per = probe.groupBy(*key).agg(*stats, *out_sets).collect()
     if per:
         consumer.expired_applied += sum(r["syn_n"] for r in per)
-        commit(
-            spark,
-            rows if syn is None else flagged.drop("__syn"),
-            epoch_id,
-            per,
-            lambda t: t.committed_at(epoch_id) if ttl is not None else set(),
-        )
+        named = consumer._epoch_buckets(per)
+        touched = {
+            t: sorted({*(b or ()), *(t.committed_at(epoch_id) if ttl else ())})
+            for t, b in named.items()
+        }
+        # size by what the commit rewrites: under TTL a retry's shrunk
+        # batch may no longer name buckets it already committed
+        size_by = {t: None if b is None else touched[t] for t, b in named.items()}
+        with epoch_settings(spark, sum(r["cnt"] for r in per), size_by):
+            commit(
+                spark,
+                rows if syn is None else flagged.drop("__syn"),
+                epoch_id,
+                per,
+                touched,
+            )
     elif not exp:
         return
     # An empty epoch whose staged decision retracted nothing mutates no

@@ -19,25 +19,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_cdc_log_connectors_spark.registry import all_queries
 from flink_cdc_log_connectors_spark.session import get_spark
+from perfbench.common import warm_up
 
 
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench-subset")
-    spark.range(1000).count()
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def _noop(s):
-        return s
-
-    _noop.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 8)
-    spark.range(0, cores * 10, 1, cores).select(
-        F.pandas_udf(_noop, "long")(F.col("id"))
-    ).count()
+    warm_up(spark)
 
     from flink_cdc_log_connectors_spark.caching import release_intermediates
     from flink_cdc_log_connectors_spark.io import cache_tables

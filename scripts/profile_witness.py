@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_cdc_log_connectors_spark.registry import all_queries
 from flink_cdc_log_connectors_spark.session import get_spark
+from perfbench.common import warm_up
 
 EVDIR = "/tmp/spark-events-r13"
 
@@ -39,19 +40,7 @@ def main() -> None:
         },
     )
     app_id = spark.sparkContext.applicationId
-    spark.range(1000).count()
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def _noop(s):
-        return s
-
-    _noop.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 8)
-    spark.range(0, cores * 10, 1, cores).select(
-        F.pandas_udf(_noop, "long")(F.col("id"))
-    ).count()
+    warm_up(spark)
 
     from flink_cdc_log_connectors_spark.caching import release_intermediates
     from flink_cdc_log_connectors_spark.io import cache_tables

@@ -32,8 +32,10 @@ steady-state stream shape; re-running one epoch id would measure the
 replay-pin path — an extra eager checkpoint no real stream pays), plus
 a final fresh epoch that counts Spark jobs (the driver-action floor).
 
-Usage: python scripts/stream_scale.py [--quick]
+Usage: python scripts/stream_scale.py [--quick] [--legs=agg,join,...]
   --quick: 1/10th row counts (CI smoke of the script itself)
+  --legs=tier: only the ``statetable.epoch_settings`` A/B (see
+  :func:`measure_tier`)
 """
 
 from __future__ import annotations
@@ -879,6 +881,96 @@ def measure_agg(
     }
 
 
+def measure_tier(spark: SparkSession, n_keys: int, sizes, pairs: int):
+    """Both sides of ``statetable.epoch_settings``: per batch size,
+    ``pairs`` pairs of aggregate epochs, one with the small settings and
+    one with the session's, order alternating by pair.  Each epoch takes
+    the next ``size`` envelopes of the round-robin update stream over
+    ``n_keys`` keys, so state stays one row per key and every epoch
+    touches the same buckets.  The forced choice replaces the gate for
+    the commit step only; ``gate`` is what the gate itself picked, with
+    the batch rows it was sized by."""
+    import contextlib
+
+    from flink_cdc_log_connectors_spark.streaming import ttl
+    from flink_cdc_log_connectors_spark.streaming.aggregates import (
+        ChangelogAggregate,
+    )
+
+    root = os.path.join(WORK, "agg_tier")
+    shutil.rmtree(root, ignore_errors=True)
+    agg = ChangelogAggregate(
+        "state",
+        STATE_SCHEMA,
+        key="user_id",
+        group_cols=["grp"],
+        output_path=root,
+        sum_cols=["value"],
+        n_buckets=N_BUCKETS,
+    )
+    need = n_keys + 2 * pairs * sum(sizes)
+    stream = agg_build_envelopes(spark, n_keys, -(-need // n_keys))
+    pos = [0]
+
+    def epoch(n: int) -> DataFrame:
+        batch = stream.filter(
+            (F.col("pos") >= pos[0]) & (F.col("pos") < pos[0] + n)
+        ).persist()
+        batch.count()
+        pos[0] += n
+        return batch
+
+    first = epoch(n_keys)
+    agg.process_batch(first, epoch_id=0)
+    first.unpersist()
+
+    real = ttl.epoch_settings
+    seen: list = []
+
+    def forced(small: bool):
+        def pick(s, batch_rows, touched):
+            small_gate = not isinstance(
+                real(s, batch_rows, touched), contextlib.nullcontext
+            )
+            seen.append((batch_rows, "small" if small_gate else "session"))
+            # sized by nothing, the gate always returns the small scope
+            return real(s, 0, {}) if small else contextlib.nullcontext()
+
+        return pick
+
+    out: dict = {"state_rows": n_keys}
+    e = 1
+    try:
+        for size in sizes:
+            runs: dict = {"small": [], "session": []}
+            for p in range(pairs):
+                order = ("small", "session") if p % 2 == 0 else ("session", "small")
+                for side in order:
+                    batch = epoch(size)
+                    ttl.epoch_settings = forced(side == "small")
+                    t0 = time.perf_counter()
+                    agg.process_batch(batch, epoch_id=e)
+                    runs[side].append(round(time.perf_counter() - t0, 3))
+                    batch.unpersist()
+                    e += 1
+            rows, gate = seen[-1]
+            out[str(size)] = {
+                "batch_rows": rows,
+                "gate": gate,
+                "small_s": runs["small"],
+                "session_s": runs["session"],
+                "small_wins": sum(
+                    a < b for a, b in zip(runs["small"], runs["session"])
+                ),
+            }
+            print(f"# tier {size}: {json.dumps(out[str(size)])}", file=sys.stderr)
+    finally:
+        ttl.epoch_settings = real
+    view = agg.read_view(spark)
+    assert view is not None and view.count() == 50
+    return out
+
+
 def agg_ttl_cold_build_envelopes(
     spark: SparkSession, n_keys: int, versions: int
 ) -> DataFrame:
@@ -997,6 +1089,7 @@ def main() -> None:
         "ingest",
         "retention",
         "witness",
+        "tier",
     }
     for a in sys.argv:
         if a.startswith("--legs="):
@@ -1038,6 +1131,23 @@ def main() -> None:
         out["agg_ratio"] = round(
             out["agg_10x"]["probe_epoch_s"] / out["agg_1x"]["probe_epoch_s"],
             2,
+        )
+
+    if "tier" in legs:
+        # epoch_settings on both sides of its boundary: update batches
+        # below and above _COMMIT_TASK_ROWS parsed rows, each run under
+        # the small settings and the session's in alternating pairs
+        step(
+            "tier",
+            lambda: measure_tier(
+                spark,
+                int(500_000 * scale),
+                [
+                    int(n * scale)
+                    for n in (20_000, 100_000, 500_000, 1_000_000, 4_000_000)
+                ],
+                3,
+            ),
         )
 
     if "agg_ttl" in legs:
