@@ -143,9 +143,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ),
         )
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register every table as a temp view for the SQL entry points."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -84,21 +84,6 @@ def shingles(
     )
 
 
-def hashed_shingles(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, hash64(shingle)) rows — 8-byte join/shuffle keys instead of
-    strings, generated by one vectorized Pandas-UDF pass (see
-    ``functions.text.hashed_word_ngrams``).  Set sizes and intersection
-    counts are preserved (per-doc shingles are distinct before hashing;
-    cross-doc hash equality stands in for string equality with ~2^-64
-    per-pair collision odds)."""
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(hashed_word_ngrams(F.col(text_col), n)).alias("sh"),
-    )
-
-
 def auto_shingle_cap(n_docs: int) -> int:
     """Default document-frequency cap for inverted-index shingles:
     ``max(100, n_docs // 100)``.  A shingle present in more than 1% of a

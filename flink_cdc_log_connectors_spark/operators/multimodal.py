@@ -1,12 +1,12 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata, processed by Arrow-batched Pandas UDFs.
 
-The container has no image/audio codecs, so the actual decode step is a
-clearly-marked stub (``NotImplementedError``) with a deterministic fake
-used by tests and the registry query — but the Spark-side plumbing is
-real: schemas, ``mapInPandas`` batch iteration, partition-parallel
-execution, and metadata extraction are exactly what a codec-backed
-implementation would use at 100 TB (swap ``_fake_decode`` for PIL/ffmpeg).
+No image/audio codec is bundled, so the decode step is a deterministic
+fake (``fake_decode_features``) used by tests and the registry query —
+but the Spark-side plumbing is real: schemas, ``mapInPandas`` batch
+iteration, partition-parallel execution, and metadata extraction are
+exactly what a codec-backed implementation would use at 100 TB (swap
+``fake_decode_features`` for PIL/ffmpeg).
 """
 
 from __future__ import annotations
@@ -36,15 +36,6 @@ ASSET_SCHEMA = T.StructType(
         ), True),
     ]
 )
-
-
-def decode_image(payload: bytes) -> object:
-    """Real image decode — requires a codec library not present in this
-    container.  Replace with PIL/torchvision at deployment."""
-    raise NotImplementedError(
-        "image codecs are not available in this environment; "
-        "use fake_decode_features for deterministic plumbing tests"
-    )
 
 
 def fake_decode_features(payload: bytes, n_features: int = 4) -> list[float]:

@@ -47,15 +47,10 @@ from ..sources.debezium import (
     parse_change_rows,
 )
 from .statetable import PartitionedStateTable, null_safe_on
-from .ttl import (
-    EventTimeTTL,
-    check_expire_epoch,
-    fused_epoch,
-    heal_pending_expiry,
-)
+from .ttl import EventTimeTTL, TTLConsumer, fused_epoch
 
 
-class ChangelogAggregate:
+class ChangelogAggregate(TTLConsumer):
     """Maintains ``SELECT group_cols, count(*), sum(sum_cols...),
     min/max(minmax_cols...) FROM table GROUP BY group_cols`` over a raw
     CDC stream."""
@@ -189,10 +184,6 @@ class ChangelogAggregate:
     # -- the per-batch merge ----------------------------------------------
     def process_batch(self, raw_batch: DataFrame, epoch_id: int) -> None:
         spark = raw_batch.sparkSession
-        # self-heal a crashed expire() pass before anything else (r11 —
-        # covers raw-foreachBatch deployments too, not just the
-        # sequenced adapter); no-op on healthy batches
-        heal_pending_expiry(self, spark, epoch_id)
         table_of = F.get_json_object(F.col("value"), "$.source.table")
         # parse + UPDATE_BEFORE retraction (+ offset sort keys when no
         # derive hook intervenes) fused into the parse's projections with
@@ -328,27 +319,6 @@ class ChangelogAggregate:
             order_by=["__seq"],
             epoch_id=epoch_id,
             touched=out_buckets,
-        )
-
-    def expire(self, spark: SparkSession, epoch_id: int) -> None:
-        """Expiry-only pass (no input batch) under a FRESH epoch id:
-        retracts every fact the CURRENT stored watermark has aged out.
-        Run one after the final batch to make the view exactly
-        "GROUP BY over facts inside the retention window" — per-batch
-        expiry necessarily lags one epoch (an epoch's cutoff comes from
-        the watermark its PREDECESSORS committed, keeping the batch's
-        scalars in one fused driver action).  Drives the normal batch
-        pipeline with an empty envelope frame.  A recycled epoch id is
-        REFUSED (``check_expire_epoch``): it would silently no-op the
-        retractions while sealing the expiry bounds."""
-        if self.ttl is None:
-            raise ValueError("expire() requires ttl")
-        check_expire_epoch(
-            epoch_id, self.fact_state, self.output, ttl=self._ttl_proto
-        )
-        self.process_batch(
-            spark.createDataFrame([], "value string, file string, pos long"),
-            epoch_id,
         )
 
     def read_view(self, spark: SparkSession) -> DataFrame | None:

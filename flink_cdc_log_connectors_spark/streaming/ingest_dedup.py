@@ -59,6 +59,7 @@ pruned shsets read additionally tolerates None/missing buckets outright
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 
@@ -66,8 +67,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import hashed_word_ngrams
-from ..operators.dedup import BANDS, ROWS_PER_BAND, _band_bucket, minhash_signatures
-from .statetable import PartitionedStateTable, epoch_settings
+from ..operators.dedup import BANDS, _band_bucket, minhash_signatures
+from .statetable import PartitionedStateTable
+from .ttl import fused_epoch
 
 
 def _batch_bands(doc_sets: DataFrame) -> DataFrame:
@@ -187,7 +189,6 @@ class IngestDedup:
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         from ..functions.prepared import prepared
 
-        spark = batch.sparkSession
         doc_sets = batch.select(
             *prepared(
                 ("ingest_docsets", self.id_col, self.text_col, self.n),
@@ -200,146 +201,157 @@ class IngestDedup:
             )
         ).persist()
         new_bands = _batch_bands(doc_sets).persist()
-        cand = None
         try:
-            # ONE materializing agg for the batch's scalars: row count
-            # (empty-batch early-out) + the distinct index buckets the
-            # batch's band keys hash to — ≤ n_buckets values, collected
-            # in the job that materializes both persists anyway
-            stats = new_bands.agg(
-                F.count(F.lit(1)).alias("nb"),
-                F.collect_set(
-                    self.bands.bucket_for(F.col("band_idx"), F.col("bh"))
-                ).alias("bks"),
-            ).first()
-            if stats["nb"] == 0:
-                return
-            # the commit step; a compaction may rewrite any live bucket
-            with epoch_settings(
-                spark,
-                stats["nb"],
-                dict.fromkeys((self.pairs, self.shsets, self.bands)),
-            ):
-                # new-vs-new candidates (within the batch): smaller id first
-                a, b = new_bands.alias("a"), new_bands.alias("b")
-                intra = (
-                    a.join(
-                        b,
-                        (F.col("a.band_idx") == F.col("b.band_idx"))
-                        & (F.col("a.bh") == F.col("b.bh"))
-                        & (F.col("a.doc_id") < F.col("b.doc_id")),
-                    )
-                    .select(
-                        F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
-                    )
-                )
-                # new-vs-index candidates: new doc is always d1.  The index
-                # read is PRUNED to the batch's own band-key buckets (bands
-                # is bucketed by (band_idx, bh) — per-batch IO follows the
-                # batch, not the corpus) and epoch-FILTERED so a retried
-                # epoch joins exactly the index its first delivery saw
-                # (never its own re-appended rows — which would emit intra
-                # pairs in both orientations)
-                idx_all = self.bands.read_buckets(spark, sorted(stats["bks"]))
-                if idx_all is not None:
-                    # Broadcast semi-join prefilter BEFORE the candidate
-                    # join: a bucket holds many band groups, so row-level
-                    # filtering on the batch's distinct (band_idx, bh) keys
-                    # still pays — only band groups the batch actually
-                    # collides with enter the shuffle.
-                    probe_keys = new_bands.select("band_idx", "bh").distinct()
-                    win = F.col("__epoch") < epoch_id
-                    if self.retention_epochs is not None:
-                        win = win & (
-                            F.col("__epoch") >= epoch_id - self.retention_epochs
-                        )
-                    idx = idx_all.filter(win).join(
-                        F.broadcast(probe_keys),
-                        ["band_idx", "bh"],
-                        "leftsemi",
-                    )
-                    cross = (
-                        new_bands.alias("n")
-                        .join(
-                            idx.alias("i"),
-                            (F.col("n.band_idx") == F.col("i.band_idx"))
-                            & (F.col("n.bh") == F.col("i.bh"))
-                            & (F.col("n.doc_id") != F.col("i.doc_id")),
-                        )
-                        .select(
-                            F.col("n.doc_id").alias("d1"), F.col("i.doc_id").alias("d2")
-                        )
-                    )
-                    cand = intra.unionByName(cross).distinct().persist()
-                    # the verification only needs the candidate PARTNERS'
-                    # shingle sets (d2 is the only side that can be an index
-                    # doc) — collect their doc buckets (≤ n_buckets) and
-                    # prune the set-store read the same way, then row-filter
-                    # with a broadcast semi on the candidate ids themselves.
-                    # This agg also materializes the cand persist.
-                    cb = cand.agg(
-                        F.collect_set(self.shsets.bucket_for(F.col("d2"))).alias(
-                            "b2"
-                        )
-                    ).first()
-                    sets = doc_sets
-                    old = (
-                        self.shsets.read_buckets(spark, sorted(cb["b2"]))
-                        if cb["b2"]
-                        else None
-                    )
-                    if old is not None:
-                        # None-tolerant (ADVICE r8): an index whose crash
-                        # left bands ahead of shsets must recover, not wedge
-                        needed = cand.select(F.col("d2").alias("doc_id")).distinct()
-                        old_sets = (
-                            old.select("doc_id", "shset")
-                            .join(F.broadcast(needed), ["doc_id"], "leftsemi")
-                            .dropDuplicates(["doc_id"])
-                        )
-                        sets = doc_sets.unionByName(old_sets).dropDuplicates(
-                            ["doc_id"]
-                        )
-                else:
-                    cand = intra.distinct()
-                    sets = doc_sets
-                pairs = _verify_pairs(
-                    cand, sets, self.threshold_num, self.threshold_den
-                )
-                # pairs FIRST (its plan reads the pre-append band manifest),
-                # then shsets BEFORE bands (the probe side must never be
-                # ahead of the set store — ADVICE r8); a crash between any
-                # two retries the epoch and every append idempotently
-                # overwrites its own version — convergent
-                self.pairs.append(pairs, epoch_id=epoch_id)
-                # batch_rows: every doc emits exactly BANDS band rows, so the
-                # fused stats' band count names both table sizes for free
-                self.shsets.append(
-                    doc_sets, epoch_id=epoch_id, batch_rows=stats["nb"] // BANDS
-                )
-                self.bands.append(
-                    new_bands, epoch_id=epoch_id, batch_rows=stats["nb"]
-                )
-                # compactions drop index rows aged out of the CURRENT (=
-                # latest) epoch's dedup window — pure storage GC riding the
-                # fold's rewrite; the probe's window filter already made the
-                # semantics exact.  The pairs table is the OUTPUT record and
-                # never expires.
-                expire = None
-                if self.retention_epochs is not None:
-                    cutoff = epoch_id - self.retention_epochs
-                    expire = lambda df: df.filter(F.col("__epoch") >= cutoff)
-                for t, tf in (
-                    (self.pairs, None),
-                    (self.shsets, expire),
-                    (self.bands, expire),
-                ):
-                    t.maybe_compact(spark, self.compact_threshold, transform=tf)
+            # the epoch's ONE stats collect (it materializes both
+            # persists) groups the band rows by the index bucket their
+            # band key hashes to: the row count (an empty batch commits
+            # nothing) and the buckets the new-vs-index probe reads
+            band_bucket = self.bands.bucket_for(F.col("band_idx"), F.col("bh"))
+            fused_epoch(
+                self, batch.sparkSession, epoch_id, new_bands,
+                [band_bucket.alias("__b")], [],
+                functools.partial(self._commit, doc_sets),
+            )
         finally:
             doc_sets.unpersist()
             new_bands.unpersist()
-            if cand is not None and getattr(cand, "is_cached", False):
+
+    def _epoch_buckets(self, per: list) -> dict:
+        """Every live bucket of each table may be rewritten: a compaction
+        folds a whole table (``fused_epoch``)."""
+        return dict.fromkeys((self.pairs, self.shsets, self.bands))
+
+    def _commit(
+        self,
+        doc_sets: DataFrame,
+        spark: SparkSession,
+        new_bands: DataFrame,
+        epoch_id: int,
+        per: list,
+        touched: dict,
+    ) -> None:
+        """The epoch's commit step (``ttl.fused_epoch``): candidate pairs,
+        their verification, the three appends and the compactions.
+        ``per`` is the stats collect, one row per band-index bucket."""
+        n_bands = sum(r["cnt"] for r in per)
+        # new-vs-new candidates (within the batch): smaller id first
+        a, b = new_bands.alias("a"), new_bands.alias("b")
+        intra = (
+            a.join(
+                b,
+                (F.col("a.band_idx") == F.col("b.band_idx"))
+                & (F.col("a.bh") == F.col("b.bh"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(
+                F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
+            )
+        )
+        # new-vs-index candidates: new doc is always d1.  The index read
+        # is PRUNED to the batch's own band-key buckets (bands is
+        # bucketed by (band_idx, bh) — per-batch IO follows the batch,
+        # not the corpus) and epoch-FILTERED so a retried epoch joins
+        # exactly the index its first delivery saw (never its own
+        # re-appended rows — which would emit intra pairs in both
+        # orientations)
+        idx_all = self.bands.read_buckets(spark, sorted(r["__b"] for r in per))
+        cand = None
+        try:
+            if idx_all is not None:
+                # Broadcast semi-join prefilter BEFORE the candidate
+                # join: a bucket holds many band groups, so row-level
+                # filtering on the batch's distinct (band_idx, bh) keys
+                # still pays — only band groups the batch actually
+                # collides with enter the shuffle.
+                probe_keys = new_bands.select("band_idx", "bh").distinct()
+                win = F.col("__epoch") < epoch_id
+                if self.retention_epochs is not None:
+                    win = win & (
+                        F.col("__epoch") >= epoch_id - self.retention_epochs
+                    )
+                idx = idx_all.filter(win).join(
+                    F.broadcast(probe_keys),
+                    ["band_idx", "bh"],
+                    "leftsemi",
+                )
+                cross = (
+                    new_bands.alias("n")
+                    .join(
+                        idx.alias("i"),
+                        (F.col("n.band_idx") == F.col("i.band_idx"))
+                        & (F.col("n.bh") == F.col("i.bh"))
+                        & (F.col("n.doc_id") != F.col("i.doc_id")),
+                    )
+                    .select(
+                        F.col("n.doc_id").alias("d1"),
+                        F.col("i.doc_id").alias("d2"),
+                    )
+                )
+                cand = intra.unionByName(cross).distinct().persist()
+                # the verification only needs the candidate PARTNERS'
+                # shingle sets (d2 is the only side that can be an index
+                # doc) — collect their doc buckets (≤ n_buckets) and
+                # prune the set-store read the same way, then row-filter
+                # with a broadcast semi on the candidate ids themselves.
+                # This agg also materializes the cand persist.
+                cb = cand.agg(
+                    F.collect_set(self.shsets.bucket_for(F.col("d2"))).alias(
+                        "b2"
+                    )
+                ).first()
+                sets = doc_sets
+                old = (
+                    self.shsets.read_buckets(spark, sorted(cb["b2"]))
+                    if cb["b2"]
+                    else None
+                )
+                if old is not None:
+                    # None-tolerant (ADVICE r8): an index whose crash
+                    # left bands ahead of shsets must recover, not wedge
+                    needed = cand.select(F.col("d2").alias("doc_id")).distinct()
+                    old_sets = (
+                        old.select("doc_id", "shset")
+                        .join(F.broadcast(needed), ["doc_id"], "leftsemi")
+                        .dropDuplicates(["doc_id"])
+                    )
+                    sets = doc_sets.unionByName(old_sets).dropDuplicates(
+                        ["doc_id"]
+                    )
+            else:
+                cand = intra.distinct()
+                sets = doc_sets
+            pairs = _verify_pairs(
+                cand, sets, self.threshold_num, self.threshold_den
+            )
+            # pairs FIRST (its plan reads the pre-append band manifest),
+            # then shsets BEFORE bands (the probe side must never be
+            # ahead of the set store — ADVICE r8); a crash between any
+            # two retries the epoch and every append idempotently
+            # overwrites its own version — convergent
+            self.pairs.append(pairs, epoch_id=epoch_id)
+            # batch_rows: every doc emits exactly BANDS band rows, so the
+            # stats' band count names both table sizes for free
+            self.shsets.append(
+                doc_sets, epoch_id=epoch_id, batch_rows=n_bands // BANDS
+            )
+            self.bands.append(new_bands, epoch_id=epoch_id, batch_rows=n_bands)
+        finally:
+            if cand is not None and cand.is_cached:
                 cand.unpersist()
+        # compactions drop index rows aged out of the CURRENT (= latest)
+        # epoch's dedup window — pure storage GC riding the fold's
+        # rewrite; the probe's window filter already made the semantics
+        # exact.  The pairs table is the OUTPUT record and never expires.
+        expire = None
+        if self.retention_epochs is not None:
+            cutoff = epoch_id - self.retention_epochs
+            expire = lambda df: df.filter(F.col("__epoch") >= cutoff)
+        for t, tf in (
+            (self.pairs, None),
+            (self.shsets, expire),
+            (self.bands, expire),
+        ):
+            t.maybe_compact(spark, self.compact_threshold, transform=tf)
 
 
 def streaming_minhash_dedup(

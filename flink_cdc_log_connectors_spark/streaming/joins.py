@@ -57,20 +57,17 @@ reasoning); mismatched types fall back to the full dim read.
 from __future__ import annotations
 
 import functools
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from ..sources.debezium import CHANGELOG_ORDER_BY, parse_change_rows
 from .statetable import PartitionedStateTable
-from .ttl import (
-    EventTimeTTL,
-    check_expire_epoch,
-    fused_epoch,
-    heal_pending_expiry,
-)
+from .ttl import EventTimeTTL, TTLConsumer, fused_epoch
 
 
 @dataclass
@@ -85,7 +82,7 @@ class JoinSide:
     join_col: str
 
 
-class ChangelogJoin:
+class ChangelogJoin(TTLConsumer):
     """State + recompute machinery behind ``materialize_join`` (usable
     directly in tests / custom foreachBatch sinks)."""
 
@@ -264,7 +261,9 @@ class ChangelogJoin:
             ),
         )
 
-    def _upsert_sides(self, left_args, right_args, epoch_id: int) -> None:
+    def _upsert_sides(
+        self, spark: SparkSession, left_args, right_args, epoch_id: int
+    ) -> None:
         """Commit the two side-state upserts as CONCURRENT driver jobs
         (r12, optimization guide §2.6): the tables are independent —
         disjoint directories, separate manifests — and each commit is a
@@ -275,8 +274,8 @@ class ChangelogJoin:
         un-swapped replays idempotently, exactly as the old sequential
         ordering did (neither ordering was ever load-bearing).  Session
         confs are per session, so both threads run under the epoch's
-        settings (``ttl.fused_epoch``) without entering them."""
-        from concurrent.futures import ThreadPoolExecutor
+        settings (``ttl.fused_epoch``) without entering them; each thread
+        carries the caller's job group and tags."""
 
         def _side(state, args):
             batch, touched, rows = args
@@ -288,42 +287,26 @@ class ChangelogJoin:
                 batch_rows=rows,
             )
 
+        # each thread gets its own copy of the caller's local properties:
+        # a shared copy would let one thread's SQL execution id leak into
+        # the other's jobs
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fl = pool.submit(_side, self.left_state, left_args)
-            fr = pool.submit(_side, self.right_state, right_args)
+            fl = pool.submit(
+                inheritable_thread_target(spark)(_side),
+                self.left_state,
+                left_args,
+            )
+            fr = pool.submit(
+                inheritable_thread_target(spark)(_side),
+                self.right_state,
+                right_args,
+            )
             fl.result()
             fr.result()
-
-    def expire(self, spark: SparkSession, epoch_id: int) -> None:
-        """Expiry-only pass (no input batch) under a FRESH epoch id —
-        retracts every fact the CURRENT stored watermark has aged out
-        (per-batch expiry lags one epoch: an epoch's cutoff comes from
-        the watermark its predecessors committed).  Drives the normal
-        batch pipeline with an empty envelope frame, so the output
-        tombstones and state deletions take the standard commit path.
-        A recycled epoch id is REFUSED (``check_expire_epoch``): it
-        would silently no-op the retractions while sealing the expiry
-        bounds."""
-        if self._ttl_proto is None:
-            raise ValueError("expire() requires left_ttl")
-        check_expire_epoch(
-            epoch_id,
-            self.left_state,
-            self.right_state,
-            self.output,
-            ttl=self._ttl_proto,
-        )
-        empty = spark.createDataFrame(
-            [], "value string, file string, pos long"
-        )
-        self.process_batch(empty, epoch_id)
 
     # -- the per-batch merge ----------------------------------------------
     def process_batch(self, raw_batch: DataFrame, epoch_id: int) -> None:
         spark = raw_batch.sparkSession
-        # self-heal a crashed expire() pass before anything else (r11 —
-        # see streaming/ttl.heal_pending_expiry); no-op when healthy
-        heal_pending_expiry(self, spark, epoch_id)
         table_of = F.get_json_object(F.col("value"), "$.source.table")
         # parse_change_rows = parse + UPDATE_BEFORE retraction + offset
         # sort keys FUSED into the parse's own projections (r13 — the
@@ -419,6 +402,7 @@ class ChangelogJoin:
             | {r["__b"] for r in per if r["__s"] == 1}
         )
         self._upsert_sides(
+            spark,
             (lb_all, lbk, sum(r["cnt"] for r in per if r["__s"] == 0)),
             (rb, rbk, sum(r["cnt"] for r in per if r["__s"] == 1)),
             epoch_id,

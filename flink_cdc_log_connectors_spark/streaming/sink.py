@@ -115,13 +115,11 @@ class ExactlyOnceAppendSink:
         return os.path.join(self.path, _DATA, name)
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        led = self._load_ledger()
-        if epoch_id in led["epochs"] or any(
-            m["lo"] <= epoch_id <= m["hi"] for m in led["merged"]
-        ):
+        if self.is_committed(epoch_id):
             # replay of an already-committed epoch: nothing to do (the
             # data directory / consolidated tier is already authoritative)
             return
+        led = self._load_ledger()
         out_dir = self._epoch_dir(epoch_id)
         # overwrite = a retry clobbers its own earlier partial write
         batch.write.mode("overwrite").parquet(out_dir)

@@ -47,15 +47,18 @@ version count, the same bound Flink's temporal-join state carries
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.prepared import prepared
 from ..sources.debezium import parse_change_rows, parse_debezium
 from .joins import JoinSide
-from .statetable import PartitionedStateTable, epoch_settings, load_json, store_json
+from .statetable import PartitionedStateTable, load_json, store_json
+from .ttl import fused_epoch
 
 _OFF_COLS = ["_vfile", "_vpos", "_vimg"]
 
@@ -175,8 +178,6 @@ class TemporalJoin:
         # an eager localCheckpoint would spend one extra job per batch
         # (r7: per-batch driver actions are the dominant fixed cost of
         # the foreachBatch deployment — see NOTES_r7)
-        from ..functions.prepared import prepared
-
         dim_sel = prepared(
             ("tj_dim_sel", self.dim.physical.json()),
             lambda: [
@@ -225,21 +226,43 @@ class TemporalJoin:
         # had a dim-only stats agg plus a touched-bucket collect inside
         # EACH state-table upsert — the per-epoch job count, not shuffle
         # width, is the dominant fixed cost of a foreachBatch deployment):
-        # the union agg materializes both persists, computes the dim
-        # watermark stats AND collects the pending-table buckets this
-        # batch's facts hash to (bounded by n_buckets), which
-        # pending.upsert below takes precomputed.
-        def _build_stats():
+        # the epoch's keyless stats collect over the union of both sides
+        # materializes both persists, computes the dim watermark stats
+        # AND collects the pending-table buckets this batch's facts hash
+        # to (bounded by n_buckets), which pending.upsert takes
+        # precomputed.
+        dcols, fcols, aggs = self._epoch_stats()
+        try:
+            fused_epoch(
+                self, spark, epoch_id, dim_all, [], aggs,
+                functools.partial(self._commit, facts),
+                frame=lambda d: d.select(*dcols).unionByName(
+                    facts.select(*fcols)
+                ),
+            )
+        finally:
+            dim_all.unpersist(False)
+            facts.unpersist(False)
+
+    def _epoch_stats(self):
+        """This join's part of the epoch's one stats collect: dim images,
+        heartbeats and facts union into one keyless group, which yields
+        the watermark candidates, the row counts and the pending-table
+        buckets of the batch's facts."""
+
+        def build():
             is_hb = F.col("_vop") == "h"
             is_dim = (~is_hb) & (F.col("_vop") != "__fact")
             dcols = [
                 F.col("_vop"),
                 F.col("_valid_ms"),
+                F.col("__syn"),
                 F.lit(None).cast("int").alias("__pb"),
             ]
             fcols = [
                 F.lit("__fact").alias("_vop"),
                 F.lit(None).cast("long").alias("_valid_ms"),
+                F.lit(False).alias("__syn"),
                 self.pending.bucket_for(F.col(self.fact.key)).alias("__pb"),
             ]
             aggs = [
@@ -253,131 +276,159 @@ class TemporalJoin:
             ]
             return dcols, fcols, aggs
 
-        dcols, fcols, aggs = prepared(
+        return prepared(
             (
                 "tj_stats",
                 self.fact.physical.json(),
                 self.fact.key,
                 self.pending.n_buckets,
             ),
-            _build_stats,
+            build,
         )
-        probe = dim_all.select(*dcols).unionByName(facts.select(*fcols))
-        stats = probe.agg(*aggs).first()
-        # the commit step; compaction, the pending read and the emit reach any bucket
-        with epoch_settings(
-            spark,
-            stats["n_dim"] + stats["n_fact"],
-            dict.fromkeys((self.history, self.pending, self.output)),
-        ):
-            if stats["n_dim"] > 0:
-                # version history is INSERT-ONLY (keyed by dim key + offset,
-                # rows never change) — append-only commit: one O(batch) write,
-                # no touched-bucket collect, no prior-bucket rewrite (r7; an
-                # upsert rewrote every touched bucket's FULL history per batch)
-                self.history.append(
-                    dim_all.filter(F.col("_vop") != "h"),
-                    epoch_id=epoch_id,
-                    batch_rows=stats["n_dim"],
-                )
-                # steady-state compaction policy (r8): fold the history's
-                # accumulated version files when any bucket's list exceeds
-                # the threshold — see __init__; the id comes from the
-                # manifest's own counter, never this epoch, so a retry of
-                # this epoch can't collide with the compacted version
-                if self.history_compact_threshold and self.history.maybe_compact(
-                    spark,
-                    self.history_compact_threshold,
-                    transform=self._retention_transform(),
-                ):
-                    self.history_compactions += 1
-            wm = self.load_watermark()
-            for cand in (stats["dim_max"], stats["hb_max"]):
-                if cand is not None and (wm is None or cand > wm):
-                    wm = cand
-            if wm is not None:
-                store_json(self._wm_path(), {"ts_ms": wm})
-            # stored buffer ∪ this batch's facts (a replayed batch's facts
-            # may be in both — key dedup).  The buffer is written ONCE per batch
-            # below: new still-pending facts in, emitted keys tombstoned out.
-            buffered = self.pending.read(spark)
-            all_facts = facts
-            if buffered is not None:
-                all_facts = (
-                    buffered.select(*fact_cols, "_fact_ms")
-                    .unionByName(facts)
-                    .dropDuplicates([self.fact.key])
-                )
 
-            # STRICT bound: source timestamps are non-decreasing in offset
-            # order, so having SEEN ts only proves entries with ts' < ts are
-            # complete — another same-ms dim change may still arrive in a
-            # later microbatch (ms-resolution logs tie constantly, and a
-            # batch boundary can split the tie group).  Emitting at
-            # `_fact_ms == wm` therefore risks a premature final verdict
-            # pinning the earlier same-ms version; `<` is the exact
-            # completeness the max-seen watermark can assert.  (Flink emits
-            # at == because ITS source watermark carries a "no more ≤ t"
-            # contract; a max-seen watermark does not.)  Tail facts at the
-            # high-water mark flush when heartbeats advance wm past them —
-            # the reference's heartbeat feature exists for exactly this —
-            # or explicitly via :meth:`flush_tail` on bounded logs.
-            has_ready = False
-            ready = None
-            hist_buckets: list[int] = []
-            ready_pb: list[int] = []
-            if wm is not None:
-                # lazy persist + ONE agg job: materializes the cache, counts,
-                # AND collects both bucket sets the ready facts touch — the
-                # history buckets the emit join probes and the pending
-                # buckets the tombstones below hash to (each bounded by
-                # n_buckets) — so neither downstream upsert needs its own
-                # collect job
-                ready = all_facts.filter(F.col("_fact_ms") < F.lit(wm)).persist()
-                rstats = ready.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.collect_set(
-                        self.history.bucket_for(F.col(self.fact.join_col))
-                    ).alias("bks"),
-                    F.collect_set(
-                        self.pending.bucket_for(F.col(self.fact.key))
-                    ).alias("pbs"),
-                ).first()
-                has_ready = rstats["n"] > 0
-                hist_buckets = sorted(rstats["bks"])
-                ready_pb = list(rstats["pbs"])
-            # EMIT BEFORE the pending tombstone commit (ADVICE r7): the
-            # output upsert is keyed and idempotent, so a crash between the
-            # two leaves the emitted facts still pending and the retry
-            # re-emits them identically; the old order (tombstone first)
-            # permanently lost every buffered fact if the crash landed
-            # between the commits — and it also kept `ready`'s lineage (over
-            # the PRE-upsert pending files) alive past the upsert's GC.
-            if has_ready:
-                self._emit(
-                    spark, ready, fact_cols, epoch_id, hist_buckets, ready_pb
-                )
-            pending_rows = facts.withColumn("op", F.lit("c")).withColumn(
-                "__seq", F.lit(0)
-            )
-            if has_ready:
-                pending_rows = pending_rows.unionByName(
-                    ready.withColumn("op", F.lit("d")).withColumn("__seq", F.lit(1))
-                )
-            # touched precomputed (this batch's fact buckets ∪ the emitted
-            # tombstones' buckets) — upsert skips its own collect; it still
-            # no-ops when both are empty
-            self.pending.upsert(
-                pending_rows,
-                order_by=["__seq"],
+    def _epoch_buckets(self, per: list) -> dict:
+        """Every live bucket of each table may be rewritten: compaction,
+        the pending read and the emit reach any bucket
+        (``fused_epoch``)."""
+        return dict.fromkeys((self.history, self.pending, self.output))
+
+    def _commit(
+        self,
+        facts: DataFrame,
+        spark: SparkSession,
+        dim_all: DataFrame,
+        epoch_id: int,
+        per: list,
+        touched: dict,
+    ) -> None:
+        """The epoch's commit step (``ttl.fused_epoch``): the history
+        append and compaction, the watermark, then the emit of every
+        buffered fact the watermark has passed.  ``per`` is the keyless
+        stats collect: one row."""
+        (stats,) = per
+        if stats["n_dim"] > 0:
+            # version history is INSERT-ONLY (keyed by dim key + offset,
+            # rows never change) — append-only commit: one O(batch) write,
+            # no touched-bucket collect, no prior-bucket rewrite (r7; an
+            # upsert rewrote every touched bucket's FULL history per batch)
+            self.history.append(
+                dim_all.filter(F.col("_vop") != "h"),
                 epoch_id=epoch_id,
-                touched=[*stats["fact_pb"], *ready_pb],
-                batch_rows=stats["n_fact"],
+                batch_rows=stats["n_dim"],
             )
-        dim_all.unpersist(False)
-        facts.unpersist(False)
+            # steady-state compaction policy (r8): fold the history's
+            # accumulated version files when any bucket's list exceeds
+            # the threshold — see __init__; the id comes from the
+            # manifest's own counter, never this epoch, so a retry of
+            # this epoch can't collide with the compacted version
+            if self.history_compact_threshold and self.history.maybe_compact(
+                spark,
+                self.history_compact_threshold,
+                transform=self._retention_transform(),
+            ):
+                self.history_compactions += 1
+        wm = self.load_watermark()
+        for cand in (stats["dim_max"], stats["hb_max"]):
+            if cand is not None and (wm is None or cand > wm):
+                wm = cand
+        if wm is not None:
+            store_json(self._wm_path(), {"ts_ms": wm})
+        # stored buffer ∪ this batch's facts (a replayed batch's facts
+        # may be in both — key dedup).  The buffer is written ONCE per
+        # batch (``_release``): new still-pending facts in, emitted keys
+        # tombstoned out.
+        buffered = self.pending.read(spark)
+        all_facts = facts
+        if buffered is not None:
+            all_facts = (
+                buffered.select(*facts.columns)
+                .unionByName(facts)
+                .dropDuplicates([self.fact.key])
+            )
+        # STRICT bound: source timestamps are non-decreasing in offset
+        # order, so having SEEN ts only proves entries with ts' < ts are
+        # complete — another same-ms dim change may still arrive in a
+        # later microbatch (ms-resolution logs tie constantly, and a
+        # batch boundary can split the tie group).  Emitting at
+        # `_fact_ms == wm` therefore risks a premature final verdict
+        # pinning the earlier same-ms version; `<` is the exact
+        # completeness the max-seen watermark can assert.  (Flink emits
+        # at == because ITS source watermark carries a "no more ≤ t"
+        # contract; a max-seen watermark does not.)  Tail facts at the
+        # high-water mark flush when heartbeats advance wm past them —
+        # the reference's heartbeat feature exists for exactly this —
+        # or explicitly via :meth:`flush_tail` on bounded logs.
+        ready = (
+            None
+            if wm is None
+            else all_facts.filter(F.col("_fact_ms") < F.lit(wm)).persist()
+        )
+        try:
+            self._release(
+                spark, ready, epoch_id, facts, stats["fact_pb"], stats["n_fact"]
+            )
+        finally:
+            if ready is not None:
+                ready.unpersist(False)
+
+    def _release(
+        self,
+        spark: SparkSession,
+        ready: DataFrame | None,
+        epoch_id: int,
+        facts: DataFrame,
+        fact_pb: list[int],
+        n_fact: int,
+    ) -> None:
+        """Emit the ``ready`` facts' final verdicts, THEN write the
+        pending buffer once: this epoch's new ``facts`` in (hashing to
+        ``fact_pb``), the emitted keys tombstoned out.
+
+        EMIT BEFORE the pending tombstone commit (ADVICE r7): the output
+        upsert is keyed and idempotent, so a crash between the two
+        leaves the emitted facts still pending and the retry re-emits
+        them identically; the old order (tombstone first) permanently
+        lost every buffered fact if the crash landed between the
+        commits — and it also kept ``ready``'s lineage (over the
+        PRE-upsert pending files) alive past the upsert's GC."""
+        rows = facts.withColumn("op", F.lit("c")).withColumn("__seq", F.lit(0))
+        touched = list(fact_pb)
         if ready is not None:
-            ready.unpersist(False)
+            # ONE agg job (``ready`` is a lazy persist): materializes the
+            # cache, counts, AND collects both bucket sets the ready
+            # facts touch — the history buckets the emit join probes and
+            # the pending buckets the tombstones hash to (each bounded by
+            # n_buckets) — so neither upsert needs its own collect job
+            rstats = ready.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.collect_set(
+                    self.history.bucket_for(F.col(self.fact.join_col))
+                ).alias("bks"),
+                F.collect_set(
+                    self.pending.bucket_for(F.col(self.fact.key))
+                ).alias("pbs"),
+            ).first()
+            if rstats["n"] > 0:
+                ready_pb = list(rstats["pbs"])
+                self._emit(
+                    spark, ready, epoch_id, sorted(rstats["bks"]), ready_pb
+                )
+                tomb = ready.withColumn("op", F.lit("d")).withColumn(
+                    "__seq", F.lit(1)
+                )
+                rows = rows.unionByName(tomb)
+                touched += ready_pb
+                n_fact += rstats["n"]
+        # touched precomputed (the new facts' buckets ∪ the emitted
+        # tombstones' buckets) — upsert skips its own collect; it still
+        # no-ops when both are empty
+        self.pending.upsert(
+            rows,
+            order_by=["__seq"],
+            epoch_id=epoch_id,
+            touched=touched,
+            batch_rows=n_fact,
+        )
 
     def _retention_transform(self):
         """Row-GC hook for the history compaction (see
@@ -417,7 +468,6 @@ class TemporalJoin:
         self,
         spark: SparkSession,
         ready: DataFrame,
-        fact_cols: list[str],
         epoch_id: int,
         hist_buckets: list[int],
         out_touched: list[int] | None = None,
@@ -430,8 +480,7 @@ class TemporalJoin:
         pending table's key and bucket count, so the caller's collected
         pending-bucket set is a valid superset — emitted rows are a
         subset of ready), letting the upsert skip its own collect job."""
-        from ..functions.prepared import prepared
-
+        fact_cols = [f.name for f in self.fact.physical.fields]
         dim_cols = [f.name for f in self.dim.physical.fields]
         hist = (
             self.history.read_buckets(spark, hist_buckets)
@@ -559,30 +608,8 @@ class TemporalJoin:
         fact_cols = [f.name for f in self.fact.physical.fields]
         ready = buffered.select(*fact_cols, "_fact_ms").persist()
         try:
-            rstats = ready.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.collect_set(
-                    self.history.bucket_for(F.col(self.fact.join_col))
-                ).alias("bks"),
-                F.collect_set(
-                    self.pending.bucket_for(F.col(self.fact.key))
-                ).alias("pbs"),
-            ).first()
-            if rstats["n"] == 0:
-                return
-            pbs = list(rstats["pbs"])
-            self._emit(
-                spark, ready, fact_cols, epoch_id, sorted(rstats["bks"]), pbs
-            )
-            self.pending.upsert(
-                ready.withColumn("op", F.lit("d")).withColumn(
-                    "__seq", F.lit(0)
-                ),
-                order_by=["__seq"],
-                epoch_id=epoch_id,
-                touched=pbs,
-                batch_rows=rstats["n"],
-            )
+            # no new facts: an empty frame of the buffer's columns
+            self._release(spark, ready, epoch_id, ready.limit(0), [], 0)
         finally:
             ready.unpersist(False)
 

@@ -57,18 +57,13 @@ from pyspark.sql.window import Window
 
 from ..sources.debezium import CHANGELOG_ORDER_BY, parse_change_rows
 from .statetable import PartitionedStateTable, null_safe_on
-from .ttl import (
-    EventTimeTTL,
-    check_expire_epoch,
-    fused_epoch,
-    heal_pending_expiry,
-)
+from .ttl import EventTimeTTL, TTLConsumer, fused_epoch
 
 #: injected partition column for global (un-partitioned) Top-N
 _GLOBAL = "__all"
 
 
-class ChangelogTopN:
+class ChangelogTopN(TTLConsumer):
     """Maintains the Flink-SQL Top-N view over a raw CDC stream.
 
     ``order_col`` ranks descending by default (ascending for
@@ -153,9 +148,6 @@ class ChangelogTopN:
     # -- the per-batch merge ----------------------------------------------
     def process_batch(self, raw_batch: DataFrame, epoch_id: int) -> None:
         spark = raw_batch.sparkSession
-        # self-heal a crashed expire() pass before anything else (r11 —
-        # see streaming/ttl.heal_pending_expiry); no-op when healthy
-        heal_pending_expiry(self, spark, epoch_id)
         table_of = F.get_json_object(F.col("value"), "$.source.table")
         # parse + UPDATE_BEFORE retraction + offset sort keys fused into
         # the parse's own projections with memoized trees (r13)
@@ -308,24 +300,6 @@ class ChangelogTopN:
             order_by=["__seq"],
             epoch_id=epoch_id,
             touched=out_buckets,
-        )
-
-    def expire(self, spark: SparkSession, epoch_id: int) -> None:
-        """Expiry-only pass (no input batch) under a FRESH epoch id —
-        retracts every fact the CURRENT stored watermark has aged out
-        (per-batch expiry lags one epoch: cutoffs come from the
-        watermark the epoch's predecessors committed).  Drives the
-        normal batch pipeline with an empty envelope frame.  A recycled
-        epoch id is REFUSED (``check_expire_epoch``): it would silently
-        no-op the retractions while sealing the expiry bounds."""
-        if self.ttl is None:
-            raise ValueError("expire() requires ttl")
-        check_expire_epoch(
-            epoch_id, self.fact_state, self.output, ttl=self._ttl_proto
-        )
-        self.process_batch(
-            spark.createDataFrame([], "value string, file string, pos long"),
-            epoch_id,
         )
 
     def read_view(self, spark: SparkSession) -> DataFrame | None:

@@ -15,15 +15,19 @@ exactly the facts inside the retention window — a DuckDB-checkable
 oracle (witnesses: ``changelog_agg_ttl_replay``,
 ``changelog_join_ttl_replay``).
 
-Every IVM epoch — with or without TTL — runs through one function,
-:func:`fused_epoch`: it stages the expiry decision, folds the
-synthesized retraction images into the consumer's OWN batch (so an
-expiry adds no extra state commits or recompute passes), runs the
-consumer's single grouped stats collect, and calls the consumer's
-commit step between ``stage()`` and ``finalize()``, under the execution
-settings ``statetable.epoch_settings`` picks from the epoch's size.  The
-consumer supplies only its bucket key, its output-bucket sets, the
-buckets per table those name, and that commit step.  Mechanics:
+Every epoch of the five IVM consumers — ``ChangelogAggregate`` (plain
+and continuous), ``ChangelogTopN``, ``ChangelogJoin``, ``IngestDedup``
+and ``TemporalJoin``, with or without TTL — runs through one function,
+:func:`fused_epoch`: it completes a crashed expiry pass, stages the
+expiry decision, folds the synthesized retraction images into the
+consumer's OWN batch (so an expiry adds no extra state commits or
+recompute passes), runs the consumer's single grouped stats collect,
+and calls the consumer's commit step between ``stage()`` and
+``finalize()``, under the execution settings
+``statetable.epoch_settings`` picks from the epoch's size.  The consumer
+supplies only its bucket key, its stats columns, the buckets per table
+those name, and that commit step.  The three TTL consumers share
+:class:`TTLConsumer`'s expiry-only pass.  Mechanics:
 
 - **Per-bucket min-ts bounds** (``__ttl_bounds.json``): the expiry scan
   reads only state buckets whose lower bound the cutoff has reached —
@@ -60,9 +64,11 @@ from __future__ import annotations
 import os
 import shutil
 from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..functions.prepared import prepared
 from .statetable import PartitionedStateTable, epoch_settings, load_json, store_json
@@ -124,12 +130,12 @@ def heal_pending_expiry(consumer, spark: SparkSession, epoch_id: int) -> None:
     commits — ``stage()`` rightly refuses every LATER epoch until that
     pass completes, which used to stall a busy stream until the idle
     ticker fired or an operator re-ran the pass by hand.  Called at the
-    top of every consumer's ``process_batch``: replays the staged
-    decision under its own epoch — the idempotent recovery
-    ``check_expire_epoch`` admits while the stage survives — then lets
-    the batch proceed.  A pending stage equal to ``epoch_id`` is left
-    alone: that is THIS batch's own retry, and its ``stage()`` call
-    reuses the decision inline, folding the retractions with the
+    top of :func:`fused_epoch`, before the epoch's own expiry decision:
+    replays the staged decision under its own epoch — the idempotent
+    recovery ``check_expire_epoch`` admits while the stage survives —
+    then lets the batch proceed.  A pending stage equal to ``epoch_id``
+    is left alone: that is THIS batch's own retry, and its ``stage()``
+    call reuses the decision inline, folding the retractions with the
     batch's rows (running ``expire()`` on it first would apply them
     without the batch).  No-op for non-TTL consumers and on every
     healthy batch (one directory listing).
@@ -150,6 +156,34 @@ def heal_pending_expiry(consumer, spark: SparkSession, epoch_id: int) -> None:
     for pending in proto.staged_epochs():
         if pending != epoch_id:
             consumer.expire(spark, pending)
+
+
+class TTLConsumer:
+    """The expiry-only pass the TTL consumers share (aggregate, top-N,
+    join): each sets ``_ttl_proto`` (None without TTL) and names its
+    tables through ``_epoch_buckets``."""
+
+    def expire(self, spark: SparkSession, epoch_id: int) -> None:
+        """Expiry-only pass (no input batch) under a FRESH epoch id:
+        retracts every fact the CURRENT stored watermark has aged out.
+        Run one after the final batch to make the view exactly the query
+        over facts inside the retention window — per-batch expiry lags
+        one epoch (an epoch's cutoff comes from the watermark its
+        PREDECESSORS committed, keeping the batch's scalars in one fused
+        driver action).  Drives the normal batch pipeline with an empty
+        envelope frame, so the retractions take the standard commit
+        path.  A recycled epoch id is REFUSED
+        (:func:`check_expire_epoch`): it would silently no-op the
+        retractions while sealing the expiry bounds."""
+        if self._ttl_proto is None:
+            raise ValueError(f"{type(self).__name__}.expire() requires a TTL")
+        check_expire_epoch(
+            epoch_id, *self._epoch_buckets([]), ttl=self._ttl_proto
+        )
+        self.process_batch(
+            spark.createDataFrame([], "value string, file string, pos long"),
+            epoch_id,
+        )
 
 
 def _shared_stats(ts_col: str | None) -> list[Column]:
@@ -180,30 +214,37 @@ def fused_epoch(
     commit: Callable,
     frame: Callable[[DataFrame], DataFrame] | None = None,
 ) -> None:
-    """One IVM epoch of ``consumer``, whether or not it has TTL: stage the
+    """One epoch of IVM consumer ``consumer`` (aggregate, top-N, join,
+    ingest dedup or temporal join), whether or not it has TTL: complete
+    a crashed expiry pass (:func:`heal_pending_expiry`), stage the
     expiry decision, fold its retraction images into ``rows`` (the
     parsed fact-side batch) under a ``__syn`` flag, run the epoch's ONE
     grouped stats collect (the only driver action before the commits
     besides the expiry scan), call the commit step, then finalize the
     bounds and watermark.
 
-    ``key`` groups the collect and must name the fact-state bucket of a
-    fact-side row ``__b``; ``out_sets`` are the consumer's own aggregate
-    columns (the output buckets its commit touches); ``frame`` projects
-    the flagged rows first (the join unions its dim side in).
+    ``key`` groups the collect; under TTL it must name the fact-state
+    bucket of a fact-side row ``__b``.  An empty ``key`` collects one
+    row, even for an empty batch, so the commit step always runs (the
+    temporal join's watermark and emit).  ``out_sets`` are the
+    consumer's own aggregate columns (e.g. the output buckets its
+    commit touches); ``frame`` projects the flagged rows first (the
+    joins union their second side in).
     ``consumer._epoch_buckets(per)`` maps each table the commit writes
-    to the buckets the collected rows name (None: the commit collects
-    them itself).  The commit step runs inside
-    :func:`~.statetable.epoch_settings`, which that map and the
-    collected row count size.  ``commit(spark, batch, epoch_id, per,
-    touched)`` receives the batch with the retractions folded in, the
-    collected rows, and ``touched``: per table, those buckets (none for
-    None) unioned with the buckets this epoch already committed to it,
-    sorted.  Under TTL a retry's effective batch may have SHRUNK (its
-    expiry images are already merged), so the commit must rewrite those
-    too; without TTL nothing is unioned — a union there would mask a
-    recycled epoch id from the upsert's epoch-reuse guard."""
-    ttl = consumer._ttl_proto
+    to the buckets the collected rows name (None: not known before the
+    commit step, so the size gate counts every live bucket).  The
+    commit step runs inside :func:`~.statetable.epoch_settings`, which
+    that map and the collected row count size.  ``commit(spark, batch,
+    epoch_id, per, touched)`` receives the batch with the retractions
+    folded in, the collected rows, and ``touched``: per table, those
+    buckets (none for None) unioned with the buckets this epoch already
+    committed to it, sorted.  Under TTL a retry's effective batch may
+    have SHRUNK (its expiry images are already merged), so the commit
+    must rewrite those too; without TTL nothing is unioned — a union
+    there would mask a recycled epoch id from the upsert's epoch-reuse
+    guard."""
+    heal_pending_expiry(consumer, spark, epoch_id)
+    ttl = getattr(consumer, "_ttl_proto", None)
     exp, cutoff, syn = (
         ttl.stage(spark, epoch_id) if ttl is not None else ([], None, None)
     )
@@ -216,7 +257,8 @@ def fused_epoch(
     stats = _shared_stats(ttl.ttl_col if ttl is not None else None)
     per = probe.groupBy(*key).agg(*stats, *out_sets).collect()
     if per:
-        consumer.expired_applied += sum(r["syn_n"] for r in per)
+        if ttl is not None:  # a keyless collect of no rows sums to NULL
+            consumer.expired_applied += sum(r["syn_n"] for r in per)
         named = consumer._epoch_buckets(per)
         touched = {
             t: sorted({*(b or ()), *(t.committed_at(epoch_id) if ttl else ())})
@@ -430,8 +472,6 @@ class EventTimeTTL:
         # job's planning+execution hides behind the other's.
         survivor_min: dict[str, int] = {}
         if has_rows:
-            from concurrent.futures import ThreadPoolExecutor
-
             def _write_syn():
                 syn.write.mode("overwrite").parquet(tmp)
 
@@ -446,9 +486,12 @@ class EventTimeTTL:
                     .collect()
                 }
 
+            # each thread gets its own copy of the caller's local
+            # properties (job group, tags): a shared copy would let one
+            # thread's SQL execution id leak into the other's jobs
             with ThreadPoolExecutor(max_workers=2) as pool:
-                fw = pool.submit(_write_syn)
-                fs = pool.submit(_survivors)
+                fw = pool.submit(inheritable_thread_target(spark)(_write_syn))
+                fs = pool.submit(inheritable_thread_target(spark)(_survivors))
                 fw.result()
                 survivor_min = fs.result()
         store_json(

@@ -16,6 +16,7 @@ from flink_cdc_log_connectors_spark.streaming import statetable
 from flink_cdc_log_connectors_spark.streaming.aggregates import ChangelogAggregate
 from flink_cdc_log_connectors_spark.streaming.ingest_dedup import IngestDedup
 from flink_cdc_log_connectors_spark.streaming.joins import ChangelogJoin, JoinSide
+from flink_cdc_log_connectors_spark.streaming.temporal_join import TemporalJoin
 from flink_cdc_log_connectors_spark.streaming.topn import ChangelogTopN
 
 FACTS = T.StructType(
@@ -100,6 +101,12 @@ def _consumers(root):
             n_buckets=8,
         ),
         "ingest": IngestDedup(f"{root}/ingest", n_buckets=4),
+        "temporal": TemporalJoin(
+            JoinSide("facts", FACTS, "id", "dim_id"),
+            JoinSide("dims", DIMS, "id", "id"),
+            f"{root}/temporal",
+            n_buckets=8,
+        ),
     }
 
 
@@ -109,8 +116,9 @@ def _run_epoch(spark, name, consumer, epoch):
 
 
 def _count_jobs(sc, group, fn):
-    """Jobs ``fn`` launches: those in job group ``group`` plus new jobs in
-    no group (threads the engine starts do not inherit the group)."""
+    """Jobs ``fn`` launches, as (jobs in job group ``group``, new jobs in
+    no group).  A thread the engine starts without passing on the
+    caller's local properties launches its jobs in no group."""
     tracker = sc.statusTracker()
     bus = sc._jsc.sc().listenerBus()
     bus.waitUntilEmpty()
@@ -123,24 +131,61 @@ def _count_jobs(sc, group, fn):
         sc.setLocalProperty("spark.job.description", None)
     bus.waitUntilEmpty()
     new_loose = set(tracker.getJobIdsForGroup(None)) - loose
-    return len(tracker.getJobIdsForGroup(group)) + len(new_loose)
+    return len(tracker.getJobIdsForGroup(group)), len(new_loose)
 
 
-#: jobs of one toy epoch into fresh state, per consumer
-EPOCH_JOBS = {"agg": 7, "topn": 7, "join": 12, "ingest": 10}
+#: jobs of one toy epoch into fresh state, per consumer (the temporal
+#: join buffers every fact of its first epoch: all are past the watermark)
+EPOCH_JOBS = {"agg": 7, "topn": 7, "join": 12, "ingest": 10, "temporal": 7}
+#: jobs of the temporal join's next epoch, whose dim update emits the
+#: buffered facts, and of ``flush_tail`` emitting the one fact left
+TEMPORAL_EMIT_JOBS = {"emit": 9, "flush_tail": 9}
 
 
 def test_epoch_job_counts(spark, tmp_path):
     sc = spark.sparkContext
+    consumers = _consumers(tmp_path)
     got = {
         name: _count_jobs(
             sc,
             f"epoch-jobs-{name}",
             lambda: _run_epoch(spark, name, consumer, 0),
         )
-        for name, consumer in _consumers(tmp_path).items()
+        for name, consumer in consumers.items()
     }
-    assert got == EPOCH_JOBS
+    tj = consumers["temporal"]
+    got["emit"] = _count_jobs(
+        sc, "epoch-jobs-emit", lambda: _run_epoch(spark, "temporal", tj, 1)
+    )
+    got["flush_tail"] = _count_jobs(
+        sc, "epoch-jobs-flush-tail", lambda: tj.flush_tail(spark, 2)
+    )
+    assert {name: sum(n) for name, n in got.items()} == {
+        **EPOCH_JOBS,
+        **TEMPORAL_EMIT_JOBS,
+    }
+    assert sorted(r["id"] for r in tj.read_view(spark).collect()) == [
+        0, 1, 2, 3, 4, 5, 6, 7, 9,
+    ]
+    # every job runs in the caller's job group, threads included
+    assert {name: loose for name, (_, loose) in got.items() if loose} == {}
+
+
+def test_expiry_epoch_jobs_keep_the_job_group(spark, tmp_path):
+    """An expiry pass that retracts rows stages its decision from two
+    threads (the retraction write and the survivor scan); their jobs
+    carry the caller's job group too."""
+    agg = ChangelogAggregate(
+        "facts", FACTS, "id", ["grp"], f"{tmp_path}/agg",
+        sum_cols=["amount"], n_buckets=8, ttl=30, ttl_col="amount",
+    )
+    _run_epoch(spark, "agg", agg, 0)  # watermark 70: amounts <= 40 expire
+    grouped, loose = _count_jobs(
+        spark.sparkContext, "expiry-jobs", lambda: agg.expire(spark, 1)
+    )
+    assert agg.expired_applied == 5
+    assert grouped > 0
+    assert loose == 0
 
 
 def _session(spark):
