@@ -71,16 +71,46 @@ def _assert_unique_ts(base: DataFrame) -> None:
         )
 
 
-#: (session id, sf_dir, fact_ts) → (session, events mtime_ns, size,
-#: persisted envelope frame) — the join twin of ``_KEYED_ENV_CACHE``
-#: (r11 bench diet): both join witnesses replay this fixture and bench
-#: runs each twice in one process, so memoizing saves three rebuilds
-#: (two unions of window-heavy json encodes) per round.  Same lifetime
-#: discipline: session held strongly, identity-checked on hit,
-#: superseded entries unpersisted.  Callers must NOT unpersist it.
-_JOIN_ENV_CACHE: dict[
-    tuple[int, str, bool], tuple[SparkSession, int, int, DataFrame]
-] = {}
+#: (builder, its args, session id, sf_dir) → (session, events mtime_ns,
+#: events size, persisted envelope frame).  SEVEN keyed-state witnesses
+#: replay one fixture and both join witnesses another, and bench runs
+#: them all (twice) in one process — memoizing saves a rebuild (window +
+#: json encode + uniqueness assert) per witness per round at the cost of
+#: one small cached frame per fixture (VERDICT r9 #5, bench diet).
+#: Callers must NOT unpersist it.  The stored SESSION is part of the
+#: value, not just ``id()`` in the key (ADVICE r10): holding it both
+#: prevents CPython from recycling a GC'd session's id onto a new session
+#: (the strong ref keeps the object alive) and lets the lookup verify
+#: identity before returning.
+_ENV_CACHE: dict[tuple, tuple[SparkSession, int, int, DataFrame]] = {}
+
+
+def _cached_envelopes(spark: SparkSession, sf_dir: str, build, *args) -> DataFrame:
+    """``build(spark, sf_dir, *args)`` persisted and memoized in
+    ``_ENV_CACHE``.  The events file's (mtime, size) gates the hit: a
+    regenerated dataset at the same sf_dir within one process must miss
+    the cache, not silently replay stale envelopes against a fresh
+    oracle (r10 code review) — and the superseded frame is unpersisted,
+    not left pinned (ADVICE r10)."""
+    stat = os.stat(os.path.join(sf_dir, "events.parquet"))
+    cache_key = (build, args, id(spark), sf_dir)
+    entry = _ENV_CACHE.get(cache_key)
+    if entry is not None:
+        c_spark, c_mtime, c_size, c_env = entry
+        if (
+            c_spark is spark
+            and c_mtime == stat.st_mtime_ns
+            and c_size == stat.st_size
+        ):
+            return c_env
+        del _ENV_CACHE[cache_key]
+        try:
+            c_env.unpersist(False)
+        except Exception:
+            pass  # its session may already be stopped
+    env = build(spark, sf_dir, *args).persist()
+    _ENV_CACHE[cache_key] = (spark, stat.st_mtime_ns, stat.st_size, env)
+    return env
 
 
 def _join_cdc_fixture(spark: SparkSession, sf_dir: str, fact_ts: bool = False):
@@ -89,11 +119,10 @@ def _join_cdc_fixture(spark: SparkSession, sf_dir: str, fact_ts: bool = False):
     :func:`changelog_join_replay_query` for the op mix it encodes.  With
     ``fact_ts`` the fact payload additionally carries its microsecond
     rowtime as ``fts`` (the TTL witness's event-time column).  The
-    envelope frame is memoized per (session, sf_dir, fact_ts) — callers
-    must not unpersist it."""
+    envelope frame is memoized per (session, sf_dir, fact_ts) — see
+    ``_ENV_CACHE``."""
     from pyspark.sql import types as T
 
-    from ..functions.datetime import epoch_micros
     from ..streaming.joins import JoinSide
 
     fact_fields = [
@@ -117,23 +146,13 @@ def _join_cdc_fixture(spark: SparkSession, sf_dir: str, fact_ts: bool = False):
     right = JoinSide(
         table="dims", physical=dim_schema, key="user_id", join_col="user_id"
     )
+    raw = _cached_envelopes(spark, sf_dir, _join_envelopes, fact_ts)
+    return raw, left, right
 
-    stat = os.stat(os.path.join(sf_dir, "events.parquet"))
-    cache_key = (id(spark), sf_dir, fact_ts)
-    entry = _JOIN_ENV_CACHE.get(cache_key)
-    if entry is not None:
-        c_spark, c_mtime, c_size, c_raw = entry
-        if (
-            c_spark is spark
-            and c_mtime == stat.st_mtime_ns
-            and c_size == stat.st_size
-        ):
-            return c_raw, left, right
-        del _JOIN_ENV_CACHE[cache_key]
-        try:
-            c_raw.unpersist(False)
-        except Exception:
-            pass  # its session may already be stopped
+
+def _join_envelopes(spark: SparkSession, sf_dir: str, fact_ts: bool) -> DataFrame:
+    """The envelope frame of :func:`_join_cdc_fixture` (unpersisted)."""
+    from ..functions.datetime import epoch_micros
 
     base = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -229,11 +248,7 @@ def _join_cdc_fixture(spark: SparkSession, sf_dir: str, fact_ts: bool = False):
         F.col("ts_us").alias("pos"),
         "day",
     )
-    raw = dim_env.unionByName(fact_env).persist()
-    _JOIN_ENV_CACHE[cache_key] = (
-        spark, stat.st_mtime_ns, stat.st_size, raw
-    )
-    return raw, left, right
+    return dim_env.unionByName(fact_env)
 
 
 def changelog_join_replay_query(
@@ -292,14 +307,7 @@ def changelog_join_replay_query(
         # under deletes, renames, and re-enrichment
         bucket_left_by_join_col=True,
     )
-    # two microbatches — see _replay_keyed_batches (r11 bench diet)
-    for epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
-        join.process_batch(
-            raw.filter(F.col("day").between(lo, hi)).select(
-                "value", "file", "pos"
-            ),
-            epoch_id=epoch,
-        )
+    _replay_keyed_batches(join.process_batch, raw)
     view = join.read_view(spark)
     return view.select(
         "event_id", "user_id", "value", "r_score", "r_ver"
@@ -365,23 +373,6 @@ _CYCLE_DELETE = 3
 _CYCLE_RENAME = 7
 
 
-#: (session id, sf_dir) → (session, events mtime_ns, events size,
-#: persisted envelope frame).  SEVEN keyed-state witnesses replay this
-#: identical fixture, and bench runs them all (twice) in one process —
-#: memoizing saves six rebuilds (window + json encode + uniqueness
-#: assert) per round at the cost of one small cached frame (VERDICT r9
-#: #5, bench diet).  Callers must NOT unpersist it.  The stored SESSION
-#: is part of the value, not just ``id()`` in the key (ADVICE r10):
-#: holding it both prevents CPython from recycling a GC'd session's id
-#: onto a new session (the strong ref keeps the object alive) and lets
-#: the lookup verify identity before returning; a superseded entry for
-#: the same (session, sf_dir) — a regenerated dataset — is unpersisted
-#: and replaced instead of pinning the stale frame for process lifetime.
-_KEYED_ENV_CACHE: dict[
-    tuple[int, str], tuple[SparkSession, int, int, DataFrame]
-] = {}
-
-
 def _keyed_state_envelopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rebadge the events table as one well-formed CDC log of a single
     table ``state`` keyed by ``user_id`` with a NULLABLE group column:
@@ -396,33 +387,15 @@ def _keyed_state_envelopes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returned envelopes carry (value, file, pos, day); log position =
     microsecond rowtime (unique — asserted).  Memoized per (session,
-    sf_dir) — see ``_KEYED_ENV_CACHE``."""
+    sf_dir) — see ``_ENV_CACHE``."""
+    return _cached_envelopes(spark, sf_dir, _keyed_envelopes)
+
+
+def _keyed_envelopes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The envelope frame of :func:`_keyed_state_envelopes` (unpersisted)."""
     from pyspark.sql.window import Window
 
     from ..functions.datetime import epoch_micros
-
-    # the events file's (mtime, size) gates the hit: a regenerated
-    # dataset at the same sf_dir within one process must miss the cache,
-    # not silently replay stale envelopes against a fresh oracle (r10
-    # code review) — and the superseded frame is unpersisted, not left
-    # pinned (ADVICE r10)
-    src = os.path.join(sf_dir, "events.parquet")
-    stat = os.stat(src)
-    cache_key = (id(spark), sf_dir)
-    entry = _KEYED_ENV_CACHE.get(cache_key)
-    if entry is not None:
-        c_spark, c_mtime, c_size, c_env = entry
-        if (
-            c_spark is spark
-            and c_mtime == stat.st_mtime_ns
-            and c_size == stat.st_size
-        ):
-            return c_env
-        del _KEYED_ENV_CACHE[cache_key]
-        try:
-            c_env.unpersist(False)
-        except Exception:
-            pass  # its session may already be stopped
 
     base = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -462,7 +435,7 @@ def _keyed_state_envelopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     after = F.when(
         op != "d", F.when(p == _CYCLE_RENAME, ren_img).otherwise(u_img)
     )
-    env = base.select(
+    return base.select(
         F.to_json(
             F.struct(
                 before.alias("before"),
@@ -481,11 +454,7 @@ def _keyed_state_envelopes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("log.0").alias("file"),
         F.col("ts_us").alias("pos"),
         "day",
-    ).persist()
-    _KEYED_ENV_CACHE[cache_key] = (
-        spark, stat.st_mtime_ns, stat.st_size, env
     )
-    return env
 
 
 def _keyed_state_schema():
@@ -513,30 +482,52 @@ def _replay_keyed_batches(consumer_process_batch, env: DataFrame) -> None:
     # unit.  Two keeps every semantic the third added nothing to:
     # cross-batch per-key op sequences, mid-replay TTL expiry (epoch 1's
     # cutoff = day-15 watermark - 12 days reaches ~day 3), and the final
-    # pass's tail flush (cutoff ~day 19).
+    # pass's tail flush (cutoff ~day 19).  The epoch id is positional, so
+    # a sequenced foreachBatch adapter drives the same loop.
     for epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
         consumer_process_batch(
             env.filter(F.col("day").between(lo, hi)).select(
                 "value", "file", "pos"
             ),
-            epoch_id=epoch,
+            epoch,
         )
 
 
-def _fresh_expire_epoch(default: int, *tables) -> int:
-    """A provably-fresh epoch id for a witness's final ``expire()``
-    pass: ``default`` on a fresh state dir, else one past the highest
-    committed epoch.  Needed because ``expire()`` now REFUSES recycled
-    ids (ADVICE r9 — a recycled id silently no-ops the retractions
-    while sealing the expiry bounds): a harness re-run over the
-    persisted dir replays the data epochs with the final-pass epoch
-    already committed, so the hardcoded ``default`` would be refused.
+def _replay_ttl(
+    spark: SparkSession, consumer, env: DataFrame, witness: str
+) -> None:
+    """Replay ``env`` through the TTL'd ``consumer``, then run the final
+    :meth:`expire` pass.  RAISES unless expiry fired MID-REPLAY and the
+    final pass retracted more — the final pass alone must not be what
+    satisfies the oracle.
+
+    The asserts apply to the FIRST run on a fresh state dir: a harness
+    re-run over the persisted dir replays with the final watermark
+    already stored, which front-loads expiry into the replay epochs and
+    leaves nothing for the final pass (the view still converges to the
+    same oracle).  The final pass's epoch id is 3 on a fresh dir, else
+    one past the highest committed epoch: ``expire()`` REFUSES recycled
+    ids (ADVICE r9 — a recycled id silently no-ops the retractions while
+    sealing the expiry bounds), and a re-run finds epoch 3 committed.
     The view converges identically under any id strictly above every
     committed epoch (the retractions win the changelog merge)."""
     from ..streaming.ttl import max_committed_epoch
 
-    mx = max_committed_epoch(*tables)
-    return default if mx is None else max(default, mx + 1)
+    fresh = consumer._ttl_proto.load_wm() is None
+    _replay_keyed_batches(consumer.process_batch, env)
+    if fresh and consumer.expired_applied == 0:
+        raise AssertionError(
+            f"{witness} never expired a fact mid-replay — the per-epoch "
+            "expiry path was not exercised"
+        )
+    mid = consumer.expired_applied
+    mx = max_committed_epoch(*consumer._epoch_buckets([]))
+    consumer.expire(spark, epoch_id=3 if mx is None else max(3, mx + 1))
+    if fresh and consumer.expired_applied <= mid:
+        raise AssertionError(
+            f"{witness}: final expire() pass retracted nothing — "
+            "fixture/TTL sizing no longer exercises the tail flush"
+        )
 
 
 #: latest-live-state CTE shared by both oracles: after-images of
@@ -669,27 +660,7 @@ def changelog_agg_ttl_replay_query(
         ttl=_AGG_TTL_US,
         ttl_col="ets",
     )
-    # strictness asserts apply to the FIRST run on a fresh state dir; a
-    # harness re-run over the persisted dir replays with the final
-    # watermark already stored, which front-loads expiry into the replay
-    # epochs and leaves nothing for the final pass (the view still
-    # converges to the same oracle)
-    fresh = agg._ttl_proto.load_wm() is None
-    _replay_keyed_batches(agg.process_batch, env)
-    if fresh and agg.expired_applied == 0:
-        raise AssertionError(
-            "TTL witness never expired a fact mid-replay — the per-epoch "
-            "expiry path was not exercised"
-        )
-    mid = agg.expired_applied
-    agg.expire(
-        spark, epoch_id=_fresh_expire_epoch(3, agg.fact_state, agg.output)
-    )
-    if fresh and agg.expired_applied <= mid:
-        raise AssertionError(
-            "final expire() pass retracted nothing — fixture/TTL sizing "
-            "no longer exercises the tail flush"
-        )
+    _replay_ttl(spark, agg, env, "TTL witness")
     view = agg.read_view(spark)
     return view.select(
         "grp",
@@ -753,15 +724,7 @@ def changelog_agg_idle_expiry_replay_query(
     )
     fresh = agg._ttl_proto.load_wm() is None
     seq = EpochSequencer(agg.output.path)
-    feed = sequenced_process_batch(agg, seq)
-    # two microbatches — see _replay_keyed_batches (r11 bench diet)
-    for src_epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
-        feed(
-            env.filter(F.col("day").between(lo, hi)).select(
-                "value", "file", "pos"
-            ),
-            src_epoch,
-        )
+    _replay_keyed_batches(sequenced_process_batch(agg, seq), env)
     if fresh and agg.expired_applied == 0:
         raise AssertionError(
             "idle-expiry witness never expired a fact mid-replay — the "
@@ -829,33 +792,7 @@ def changelog_join_ttl_replay_query(
         left_ttl=_AGG_TTL_US,
         left_ttl_col="fts",
     )
-    # fresh-dir gate: see changelog_agg_ttl_replay_query
-    fresh = join._ttl_proto.load_wm() is None
-    # two microbatches — see _replay_keyed_batches (r11 bench diet)
-    for epoch, (lo, hi) in enumerate(((1, 15), (16, 31))):
-        join.process_batch(
-            raw.filter(F.col("day").between(lo, hi)).select(
-                "value", "file", "pos"
-            ),
-            epoch_id=epoch,
-        )
-    if fresh and join.expired_applied == 0:
-        raise AssertionError(
-            "join TTL witness never expired a fact mid-replay — the "
-            "per-epoch expiry path was not exercised"
-        )
-    mid = join.expired_applied
-    join.expire(
-        spark,
-        epoch_id=_fresh_expire_epoch(
-            3, join.left_state, join.right_state, join.output
-        ),
-    )
-    if fresh and join.expired_applied <= mid:
-        raise AssertionError(
-            "final expire() pass retracted nothing — fixture/TTL sizing "
-            "no longer exercises the tail flush"
-        )
+    _replay_ttl(spark, join, raw, "join TTL witness")
     view = join.read_view(spark)
     return view.select(
         "event_id", "user_id", "value", "fts", "r_score", "r_ver"
@@ -926,24 +863,7 @@ def changelog_topn_ttl_replay_query(
         ttl=_AGG_TTL_US,
         ttl_col="ets",
     )
-    # fresh-dir gate: see changelog_agg_ttl_replay_query
-    fresh = topn._ttl_proto.load_wm() is None
-    _replay_keyed_batches(topn.process_batch, env)
-    if fresh and topn.expired_applied == 0:
-        raise AssertionError(
-            "Top-N TTL witness never expired a fact mid-replay — the "
-            "per-epoch expiry path was not exercised"
-        )
-    mid = topn.expired_applied
-    topn.expire(
-        spark,
-        epoch_id=_fresh_expire_epoch(3, topn.fact_state, topn.output),
-    )
-    if fresh and topn.expired_applied <= mid:
-        raise AssertionError(
-            "final expire() pass retracted nothing — fixture/TTL sizing "
-            "no longer exercises the tail flush"
-        )
+    _replay_ttl(spark, topn, env, "Top-N TTL witness")
     view = topn.read_view(spark)
     return view.orderBy("grp", "rn")
 
@@ -1092,23 +1012,7 @@ def changelog_cagg_ttl_replay_query(
         ttl=_AGG_TTL_US,
         ttl_col="ets",
     )
-    # fresh-dir gate: see changelog_agg_ttl_replay_query
-    fresh = agg._ttl_proto.load_wm() is None
-    _replay_keyed_batches(agg.process_batch, env)
-    if fresh and agg.expired_applied == 0:
-        raise AssertionError(
-            "cagg TTL witness never expired a fact mid-replay — the "
-            "per-epoch expiry path was not exercised"
-        )
-    mid = agg.expired_applied
-    agg.expire(
-        spark, epoch_id=_fresh_expire_epoch(3, agg.fact_state, agg.output)
-    )
-    if fresh and agg.expired_applied <= mid:
-        raise AssertionError(
-            "final expire() pass retracted nothing — fixture/TTL sizing "
-            "no longer exercises the tail flush"
-        )
+    _replay_ttl(spark, agg, env, "cagg TTL witness")
     view = agg.read_view(spark)
     return view.select(
         "bkt",

@@ -20,12 +20,24 @@ The output of every strategy is a list of ``ChunkRange``s that compile to
 JDBC predicates for ``spark.read.jdbc(predicates=...)`` — Spark's executor-
 parallel partitioned read, the direct analogue of snapshot-split assignment
 to Flink readers.
+
+The chunk rules every dialect shares live here too, so a fix to the
+exactly-once protocol lands once:
+
+- **Membership**: ``ChunkRange.contains`` — the half-open key test.
+- **Backfill merge** (P6): ``merge_backfill`` replays a trigger log's
+  (low, high] rows onto one chunk's rows (``RecordUtils.upsertBinlog``).
+- **shouldEmit** (L2): ``should_emit`` filters log-phase events against
+  the finished chunks' high watermarks (``BinlogSplitReader.shouldEmit``).
 """
 
 from __future__ import annotations
 
+import json
 import math
+from collections.abc import Iterable
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame
 
@@ -52,6 +64,15 @@ class ChunkRange:
         if self.end is None:
             return f"{col} >= {self.start}"
         return f"{col} >= {self.start} AND {col} < {self.end}"
+
+    def contains(self, key: Any) -> bool:
+        """Whether ``key`` lies in ``[start, end)``.  A ``None`` key (an
+        image without the chunk column) lies in no chunk."""
+        return (
+            key is not None
+            and (self.start is None or key >= self.start)
+            and (self.end is None or key < self.end)
+        )
 
 
 def distribution_factor(min_key: int, max_key: int, row_count: int) -> float:
@@ -98,6 +119,18 @@ def split_even(
         start += dynamic
     ranges.append(ChunkRange(start, None))
     return ranges
+
+
+def split_even_or_whole(
+    min_key: int, max_key: int, row_count: int, chunk_size: int = DEFAULT_CHUNK_SIZE
+) -> list[ChunkRange]:
+    """The trigger-log dialects' plan from a MIN/MAX/COUNT probe: the even
+    split, else ONE unbounded chunk — an empty table or an uneven key
+    space is read whole (correct, just less parallel; the quantile path
+    stays on the JDBC snapshot, where a distributed pass pays off)."""
+    return split_even(int(min_key), int(max_key), int(row_count), chunk_size) or [
+        ChunkRange(None, None)
+    ]
 
 
 def split_from_boundaries(boundaries: list) -> list[ChunkRange]:
@@ -218,3 +251,90 @@ def choose_split_column(
             f"split column {head!r} has non-chunkable type {type_name}"
         )
     return head
+
+
+# ---------------------------------------------------------------------------
+# the snapshot→log protocol over a trigger log: backfill merge + shouldEmit
+# ---------------------------------------------------------------------------
+
+
+def log_envelope(
+    op: str,
+    before: str | None,
+    after: str | None,
+    table: str,
+    pos: int,
+    ts_ms: int,
+    snapshot: bool = False,
+) -> str:
+    """The Debezium-style envelope JSON (``RAW_SCHEMA`` ``value``) the
+    trigger-log dialects ship for one change at log position ``pos``."""
+    env: dict[str, Any] = {
+        "before": json.loads(before) if before else None,
+        "after": json.loads(after) if after else None,
+        "op": op,
+        "ts_ms": ts_ms,
+        "source": {
+            "db": "main",
+            "table": table,
+            "ts_ms": ts_ms,
+            "file": "cdc",
+            "pos": pos,
+            "snapshot": "true" if snapshot else None,
+        },
+    }
+    return json.dumps(env, separators=(",", ":"))
+
+
+def merge_backfill(
+    rows: Iterable[dict],
+    log_rows: Iterable[tuple],
+    table: str,
+    key_col: str,
+    chunk: ChunkRange,
+    high: int,
+) -> list[str]:
+    """P6 backfill merge (``RecordUtils.upsertBinlog:138-192``): replay
+    the trigger log's (low, high] ``log_rows`` — ``(id, tbl, op, before,
+    after, ts_ms)`` with JSON images — over the chunk's row images, last
+    write wins: c/u put the after-image, d removes the key.  Other
+    tables' rows and keys outside ``chunk`` are skipped.
+
+    The chunk SELECT ran at some commit point T with low ≤ T ≤ high, so
+    replaying is idempotent for events ≤ T and applies those > T: the
+    result is the chunk range exactly at ``high``, returned as op='r'
+    envelopes at offset ``high``."""
+    state = {img[key_col]: img for img in rows}
+    for _id, tbl, op, before, after, _ts in log_rows:
+        if tbl != table:
+            continue
+        img = json.loads(after if op != "d" else before)
+        k = img.get(key_col)
+        if not chunk.contains(k):
+            continue
+        if op == "d":
+            state.pop(k, None)
+        else:
+            state[k] = img
+    return [
+        log_envelope(
+            "r", None, json.dumps(img, separators=(",", ":")), table, high, 0,
+            snapshot=True,
+        )
+        for img in state.values()
+    ]
+
+
+def should_emit(
+    offset: int, key: Any, finished: Iterable[tuple[ChunkRange, int]]
+) -> bool:
+    """L2 shouldEmit (``BinlogSplitReader.shouldEmit:194-240``) for a
+    log-phase event at ``offset`` on ``key``.  ``finished`` pairs each
+    snapshotted chunk with its high watermark: an event whose key lies in
+    one is emitted only past that high — up to it, the chunk's backfill
+    merge already delivered the effect.  A key in no finished chunk is
+    emitted."""
+    for chunk, high in finished:
+        if chunk.contains(key):
+            return offset > high
+    return True

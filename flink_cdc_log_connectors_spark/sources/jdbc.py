@@ -33,8 +33,8 @@ from .chunking import (
     DEFAULT_CHUNK_SIZE,
     ChunkRange,
     chunk_predicates,
-    plan_snapshot_chunks,
     split_even,
+    split_uneven_by_quantiles,
 )
 from .offsets import LogOffset
 
@@ -75,6 +75,32 @@ def probe_key_stats(
     return int(row[0]), int(row[1]), int(row[2])
 
 
+def _plan_ranges(
+    spark: SparkSession,
+    url: str,
+    table: str,
+    key_col: str,
+    chunk_size: int,
+    props: dict[str, str],
+    key_stats: tuple[int, int, int] | None,
+) -> list[ChunkRange]:
+    """Key stats (probed unless injected) → even split, else quantile
+    boundaries over a key-only read (pushed projection) — the key read is
+    built only for an uneven key space."""
+    mn, mx, cnt = key_stats or probe_key_stats(spark, url, table, key_col, props)
+    ranges = split_even(mn, mx, cnt, chunk_size)
+    if ranges is None:
+        key_df = (
+            spark.read.format("jdbc")
+            .option("url", url)
+            .option("dbtable", f"(SELECT {key_col} FROM {table}) keys_q")
+            .options(**props)
+            .load()
+        )
+        ranges = split_uneven_by_quantiles(key_df, key_col, cnt, chunk_size)
+    return ranges
+
+
 def read_snapshot(
     spark: SparkSession,
     url: str,
@@ -96,19 +122,7 @@ def read_snapshot(
     """
     props = dict(properties or {})
     props.setdefault("fetchsize", str(fetch_size))
-    mn, mx, cnt = key_stats or probe_key_stats(spark, url, table, key_col, props)
-
-    ranges = split_even(mn, mx, cnt, chunk_size)
-    if ranges is None:
-        # uneven: quantile-plan over the key column only (pushed projection)
-        key_df = (
-            spark.read.format("jdbc")
-            .option("url", url)
-            .option("dbtable", f"(SELECT {key_col} FROM {table}) keys_q")
-            .options(**props)
-            .load()
-        )
-        ranges = plan_snapshot_chunks(mn, mx, cnt, chunk_size, key_df, key_col)
+    ranges = _plan_ranges(spark, url, table, key_col, chunk_size, props, key_stats)
 
     low = log_position_fn() if log_position_fn else None
     df = spark.read.jdbc(
@@ -257,17 +271,7 @@ def read_snapshot_consistent(
     """
     props = dict(properties or {})
     props.setdefault("fetchsize", str(fetch_size))
-    mn, mx, cnt = key_stats or probe_key_stats(spark, url, table, key_col, props)
-    ranges = split_even(mn, mx, cnt, chunk_size)
-    if ranges is None:
-        key_df = (
-            spark.read.format("jdbc")
-            .option("url", url)
-            .option("dbtable", f"(SELECT {key_col} FROM {table}) keys_q")
-            .options(**props)
-            .load()
-        )
-        ranges = plan_snapshot_chunks(mn, mx, cnt, chunk_size, key_df, key_col)
+    ranges = _plan_ranges(spark, url, table, key_col, chunk_size, props, key_stats)
 
     def _one_chunk(idx_chunk: tuple[int, ChunkRange]) -> tuple[int, DataFrame, ChunkWatermarks]:
         idx, chunk = idx_chunk
@@ -292,10 +296,13 @@ def read_snapshot_consistent(
             # durable path for 100 TB runs).
             cdf = cdf.localCheckpoint(eager=True)  # fetch happens NOW
         high = int(log_position_fn())
+        # image keys fold case, as in merge_chunk_backfill
         events = [
             e
             for e in (read_log_fn(low, high) if high > low else [])
-            if _image_in_chunk(e, key_col, chunk)
+            if chunk.contains(
+                {k.lower(): v for k, v in e.image.items()}.get(key_col.lower())
+            )
         ]
         merged = merge_chunk_backfill(cdf, events, key_col, low)
         return idx, merged, ChunkWatermarks(chunk=chunk, low=low, high=high)
@@ -314,13 +321,3 @@ def read_snapshot_consistent(
     for _, part, _w in results[1:]:
         out = out.unionByName(part)
     return ConsistentSnapshotResult(df=out, watermarks=[r[2] for r in results])
-
-
-def _image_in_chunk(ev: LogEvent, key_col: str, chunk: ChunkRange) -> bool:
-    img = {k.lower(): v for k, v in ev.image.items()}
-    k = img.get(key_col.lower())
-    if k is None:
-        return False
-    return (chunk.start is None or k >= chunk.start) and (
-        chunk.end is None or k < chunk.end
-    )

@@ -42,12 +42,8 @@ import decimal
 import json
 from typing import Any
 
-from .chunking import ChunkRange, split_even
-from .sqlite_dialect import (
-    SqliteCdcStreamReader,
-    _envelope,
-    _key_in_chunk,
-)
+from .chunking import ChunkRange, merge_backfill, split_even_or_whole
+from .sqlite_dialect import SqliteCdcStreamReader
 
 
 def _jvm_conn(url: str):
@@ -235,12 +231,7 @@ class JdbcTriggerLogStreamReader(SqliteCdcStreamReader):
             f"SELECT COALESCE(MIN({self.key_col}), 0), "
             f"COALESCE(MAX({self.key_col}), 0), COUNT(*) FROM {self.table}",
         )[0]
-        if not cnt:
-            return [ChunkRange(None, None)]
-        return (
-            split_even(int(mn), int(mx), int(cnt), self.chunk_size)
-            or [ChunkRange(None, None)]
-        )
+        return split_even_or_whole(mn, mx, cnt, self.chunk_size)
 
     def _chunk_predicate(self, lo: Any, hi: Any) -> str:
         conds = []
@@ -259,31 +250,11 @@ class JdbcTriggerLogStreamReader(SqliteCdcStreamReader):
             f"WHERE {self._chunk_predicate(lo, hi)}",
         )
         high = self._log_position_spi()
-        state: dict[Any, dict] = {}
-        for r in rows:
-            img = dict(zip(self.columns, r))
-            state[img[self.key_col]] = img
-        if high > low:
-            for _id, tbl, op, before, after, _ts in self._read_log_rows(
-                low, upto=high
-            ):
-                if tbl != self.table:
-                    continue
-                img = json.loads(after if op != "d" else before)
-                k = img.get(self.key_col)
-                if not _key_in_chunk(k, lo, hi):
-                    continue
-                if op == "d":
-                    state.pop(k, None)
-                else:
-                    state[k] = img
-        envs = [
-            _envelope(
-                "r", None, json.dumps(img, separators=(",", ":")),
-                self.table, high, 0, snapshot=True,
-            )
-            for img in state.values()
-        ]
+        backfill = self._read_log_rows(low, upto=high) if high > low else []
+        envs = merge_backfill(
+            (dict(zip(self.columns, r)) for r in rows),
+            backfill, self.table, self.key_col, ChunkRange(lo, hi), high,
+        )
         return envs, low, high
 
     def _read_log_rows(

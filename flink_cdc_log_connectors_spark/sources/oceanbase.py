@@ -27,6 +27,7 @@ import json
 from dataclasses import dataclass
 from typing import Any, Iterator, Protocol
 
+from .chunking import ChunkRange, should_emit
 from .jdbc import LogEvent
 
 #: reference startup modes (OceanBaseTableSourceFactory `scan.startup.mode`)
@@ -151,29 +152,15 @@ def tail_commitlog(
     the effect.  ``chunk_watermarks`` accepts
     ``ConsistentSnapshotResult.watermarks`` directly (ChunkWatermarks
     objects) or raw (chunk_lo, chunk_hi, high_watermark) tuples."""
-    norm: list[tuple[Any, Any, int]] = []
-    for w in chunk_watermarks or []:
-        if isinstance(w, tuple):
-            norm.append(w)
-        else:  # ChunkWatermarks dataclass
-            norm.append((w.chunk.start, w.chunk.end, w.high))
-    chunk_watermarks = norm
+    finished = [
+        (ChunkRange(w[0], w[1]), w[2]) if isinstance(w, tuple) else (w.chunk, w.high)
+        for w in chunk_watermarks or []
+    ]
     for m in client.fetch(after_version):
         if m.table != table:
             continue
-        if chunk_watermarks:
+        if finished:
             img = (m.after if m.op != "d" else m.before) or {}
-            key = img.get(key_col)
-            suppressed = False
-            for lo, hi, high in chunk_watermarks:
-                in_chunk = (
-                    key is not None
-                    and (lo is None or key >= lo)
-                    and (hi is None or key < hi)
-                )
-                if in_chunk:
-                    suppressed = m.commit_version <= high
-                    break
-            if suppressed:
+            if not should_emit(m.commit_version, img.get(key_col), finished):
                 continue
         yield (envelope(m), "oblog", m.commit_version)

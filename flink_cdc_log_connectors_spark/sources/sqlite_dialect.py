@@ -19,11 +19,12 @@ What this exercises FOR REAL that the file dialect cannot:
 - **P6 backfill + chunk merge** (``RecordUtils.upsertBinlog:138-192``):
   events that landed inside a chunk's (low, high] window are merged onto
   the chunk's rows (last-write-wins, delete-drops-key) so each emitted
-  chunk is point-in-time consistent at its own high watermark.
+  chunk is point-in-time consistent at its own high watermark
+  (``chunking.merge_backfill``).
 - **L2 shouldEmit** (``BinlogSplitReader.shouldEmit:194-240``): during
   the log phase an event is emitted only if its offset is past the high
   watermark of the chunk covering its key — otherwise the chunk merge
-  already delivered its effect.
+  already delivered its effect (``chunking.should_emit``).
 
 Consistency argument (same as DBLog's): a chunk SELECT runs atomically at
 some commit point T with low ≤ T ≤ high.  Replaying log events in
@@ -50,7 +51,7 @@ from __future__ import annotations
 
 import json
 import sqlite3
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from typing import Any, Iterator, Tuple
 
 from pyspark.sql.datasource import (
@@ -61,7 +62,14 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
-from .chunking import DEFAULT_CHUNK_SIZE, ChunkRange, split_even
+from .chunking import (
+    DEFAULT_CHUNK_SIZE,
+    ChunkRange,
+    log_envelope,
+    merge_backfill,
+    should_emit,
+    split_even_or_whole,
+)
 from .datasource import RAW_SCHEMA
 
 LOG_TABLE = "_cdc_log"
@@ -371,36 +379,6 @@ def log_position(db_path: str) -> int:
         conn.close()
 
 
-# ---------------------------------------------------------------------------
-# envelope construction (shared raw wire format with the file dialect)
-# ---------------------------------------------------------------------------
-
-def _envelope(
-    op: str,
-    before: str | None,
-    after: str | None,
-    table: str,
-    pos: int,
-    ts_ms: int,
-    snapshot: bool = False,
-) -> str:
-    env: dict[str, Any] = {
-        "before": json.loads(before) if before else None,
-        "after": json.loads(after) if after else None,
-        "op": op,
-        "ts_ms": ts_ms,
-        "source": {
-            "db": "main",
-            "table": table,
-            "ts_ms": ts_ms,
-            "file": "cdc",
-            "pos": pos,
-            "snapshot": "true" if snapshot else None,
-        },
-    }
-    return json.dumps(env, separators=(",", ":"))
-
-
 def read_log_between(
     db_path: str, after_id: int, upto_id: int | None = None, limit: int | None = None
 ) -> list[tuple[int, str, str, str | None, str | None, int]]:
@@ -427,10 +405,8 @@ def read_log_between(
 # ---------------------------------------------------------------------------
 
 def plan_chunks(db_path: str, table: str, key_col: str, chunk_size: int) -> list[ChunkRange]:
-    """P1-P3 against the live table: MIN/MAX/COUNT probe, then the even
-    splitter (integer pk).  Sparse/uneven key spaces fall back to a single
-    chunk — correct, just less parallel (sqlite is a one-file DB; the
-    quantile path stays on the JDBC dialect where it pays off)."""
+    """P1-P3 against the live table: MIN/MAX/COUNT probe, then
+    :func:`~.chunking.split_even_or_whole` (integer pk)."""
     conn = _connect(db_path)
     try:
         mn, mx, cnt = conn.execute(
@@ -438,9 +414,7 @@ def plan_chunks(db_path: str, table: str, key_col: str, chunk_size: int) -> list
         ).fetchone()
     finally:
         conn.close()
-    if cnt == 0:
-        return [ChunkRange(None, None)]
-    return split_even(int(mn), int(mx), int(cnt), chunk_size) or [ChunkRange(None, None)]
+    return split_even_or_whole(mn, mx, cnt, chunk_size)
 
 
 def _chunk_where(key_col: str, lo: Any, hi: Any) -> tuple[str, list]:
@@ -454,12 +428,6 @@ def _chunk_where(key_col: str, lo: Any, hi: Any) -> tuple[str, list]:
     return (" AND ".join(conds) or "1=1"), args
 
 
-def _key_in_chunk(key: Any, lo: Any, hi: Any) -> bool:
-    if key is None:
-        return False
-    return (lo is None or key >= lo) and (hi is None or key < hi)
-
-
 def read_chunk_merged(
     db_path: str,
     table: str,
@@ -468,8 +436,8 @@ def read_chunk_merged(
     hi: Any,
 ) -> tuple[list[str], int, int]:
     """One consistent chunk: low watermark → SELECT chunk → high watermark
-    → merge backfill events in (low, high] restricted to the chunk range
-    (``RecordUtils.upsertBinlog`` semantics: c/u put, d remove).
+    on one connection, then :func:`~.chunking.merge_backfill` of the log
+    rows in (low, high].
 
     Returns (envelope JSON strings with op='r' at offset ``high``, low, high).
     """
@@ -490,27 +458,11 @@ def read_chunk_merged(
     finally:
         conn.close()
 
-    state: dict[Any, dict] = {}
-    for r in rows:
-        img = dict(zip(cols, r))
-        state[img[key_col]] = img
-    if high > low:
-        for _id, tbl, op, before, after, _ts in read_log_between(db_path, low, high):
-            if tbl != table:
-                continue
-            img = json.loads(after if op != "d" else before)
-            k = img.get(key_col)
-            if not _key_in_chunk(k, lo, hi):
-                continue
-            if op == "d":
-                state.pop(k, None)
-            else:
-                state[k] = img
-    envs = [
-        _envelope("r", None, json.dumps(img, separators=(",", ":")), table, high, 0,
-                  snapshot=True)
-        for img in state.values()
-    ]
+    backfill = read_log_between(db_path, low, high) if high > low else []
+    envs = merge_backfill(
+        (dict(zip(cols, r)) for r in rows),
+        backfill, table, key_col, ChunkRange(lo, hi), high,
+    )
     return envs, low, high
 
 
@@ -573,6 +525,13 @@ def decode_chunks(spec) -> list:
 # ordering rationale as the file dialect / reference mysql-cdc.md:408)
 # ---------------------------------------------------------------------------
 
+def _opt(options: Mapping[str, str], name: str, default: Any) -> Any:
+    """Option ``name`` by its lowercase or camelCase key (Spark hands a
+    registered source case-insensitive options; a directly built reader
+    may get either), else ``default``."""
+    return options.get(name.lower()) or options.get(name) or default
+
+
 class SqliteCdcStreamReader(SimpleDataSourceStreamReader):
     """Snapshot→log hybrid stream over a live sqlite database.
 
@@ -588,62 +547,37 @@ class SqliteCdcStreamReader(SimpleDataSourceStreamReader):
       passes ``max(chunk_highs)`` (shouldEmit horizon), then dropped.
     """
 
-    def __init__(self, options: dict[str, str]) -> None:
+    def __init__(self, options: Mapping[str, str]) -> None:
         self.db_path = options["path"]
         self._init_protocol_options(options)
         # §2.8 connection option parity (MySqlSourceOptions.java:32-215)
-        def _opt(lower: str, camel: str, default):
-            return options.get(lower) or options.get(camel) or default
-
-        configure_connection(
-            self.db_path,
-            timeout_s=float(
-                _opt("connecttimeout", "connectTimeout", DEFAULT_CONNECT_TIMEOUT_S)
-            ),
-            max_retries=int(
-                _opt(
-                    "connectmaxretries",
-                    "connectMaxRetries",
-                    DEFAULT_CONNECT_MAX_RETRIES,
-                )
-            ),
-            pool_size=int(
-                _opt("connectionpoolsize", "connectionPoolSize", DEFAULT_POOL_SIZE)
-            ),
+        self.conn_conf = (
+            float(_opt(options, "connectTimeout", DEFAULT_CONNECT_TIMEOUT_S)),
+            int(_opt(options, "connectMaxRetries", DEFAULT_CONNECT_MAX_RETRIES)),
+            int(_opt(options, "connectionPoolSize", DEFAULT_POOL_SIZE)),
         )
+        configure_connection(self.db_path, *self.conn_conf)
 
-    def _init_protocol_options(self, options: dict[str, str]) -> None:
+    def _init_protocol_options(self, options: Mapping[str, str]) -> None:
         """Engine-agnostic protocol knobs — shared by every trigger-log
         dialect built on this reader (the snapshot→log state machine,
         shouldEmit, heartbeats, chunk-meta compaction, and L6 probing are
         all engine-independent; subclasses override only the engine SPI
         methods below)."""
         self.table = options["table"]
-        self.key_col = options.get("keycolumn") or options.get("keyColumn") or "id"
-        self.chunk_size = int(options.get("chunksize", DEFAULT_CHUNK_SIZE))
-        self.max_events = int(options.get("maxeventsperbatch", 10_000))
-        self.startup = (options.get("startingoffsets") or "initial").lower()
+        self.key_col = _opt(options, "keyColumn", "id")
+        self.chunk_size = int(_opt(options, "chunkSize", DEFAULT_CHUNK_SIZE))
+        self.max_events = int(_opt(options, "maxEventsPerBatch", 10_000))
+        self.startup = _opt(options, "startingOffsets", "initial").lower()
         # L5 heartbeats (MySqlSourceOptions.java:167-172): when the log
         # advances on OTHER tables' traffic while ours is idle, emit a
         # synthetic op='h' row every N skipped entries so downstream
         # event-time watermarks keep moving.  Counted in log entries (not
         # wall time) so replay of a committed range reproduces the exact
         # same heartbeat rows — determinism is the C3/C4 contract.
-        self.heartbeat_every = int(
-            options.get("heartbeatinterval")
-            or options.get("heartbeatInterval")
-            or 0
-        )
-
-        def _opt(lower: str, camel: str, default):
-            return options.get(lower) or options.get(camel) or default
-
+        self.heartbeat_every = int(_opt(options, "heartbeatInterval", 0))
         self.chunk_meta_group_size = int(
-            _opt(
-                "chunkmetagroupsize",
-                "chunkMetaGroupSize",
-                DEFAULT_CHUNK_META_GROUP_SIZE,
-            )
+            _opt(options, "chunkMetaGroupSize", DEFAULT_CHUNK_META_GROUP_SIZE)
         )
         # L6 on the live dialect (reference `include-schema-changes`,
         # default false there too): per-batch schema probe against the
@@ -651,7 +585,7 @@ class SqliteCdcStreamReader(SimpleDataSourceStreamReader):
         # envelope into the raw stream (schema_change_events surfaces it,
         # plan_schema_evolution classifies widen-vs-resnapshot).
         self.include_schema_changes = str(
-            _opt("includeschemachanges", "includeSchemaChanges", "false")
+            _opt(options, "includeSchemaChanges", "false")
         ).lower() == "true"
 
     # -- engine SPI (override these — and ONLY these — for a new
@@ -721,14 +655,6 @@ class SqliteCdcStreamReader(SimpleDataSourceStreamReader):
             off["schema_sig"] = self._schema_signature_spi()
         return off
 
-    # -- shouldEmit (L2) ---------------------------------------------------
-    @staticmethod
-    def _should_emit(ev_id: int, key: Any, chunks: list, highs: list) -> bool:
-        for (lo, hi), high in zip(chunks, highs):
-            if _key_in_chunk(key, lo, hi):
-                return ev_id > high
-        return True  # key outside every finished chunk
-
     # -- reading -----------------------------------------------------------
     def _read_snapshot(self, start: dict) -> Tuple[list[tuple], dict]:
         """Serve whole chunks until the per-batch event budget is spent,
@@ -773,8 +699,13 @@ class SqliteCdcStreamReader(SimpleDataSourceStreamReader):
 
     def _read_log(self, start: dict, limit: int | None = None) -> Tuple[list[tuple], dict]:
         enc = start.get("chunks") or []
-        chunks = decode_chunks(enc)
         highs = start.get("chunk_highs") or []
+        # shouldEmit (L2) runs against the snapshotted chunks until the log
+        # passes the last high watermark
+        finished = [
+            (ChunkRange(lo, hi), high)
+            for (lo, hi), high in zip(decode_chunks(enc), highs)
+        ]
         horizon = max(highs) if highs else -1
         cursor = int(start["log_id"])
         rows: list[tuple] = []
@@ -789,7 +720,7 @@ class SqliteCdcStreamReader(SimpleDataSourceStreamReader):
                 if self.heartbeat_every and skipped >= self.heartbeat_every:
                     rows.append(
                         (
-                            _envelope("h", None, None, "__heartbeat__", ev_id, ts_ms),
+                            log_envelope("h", None, None, "__heartbeat__", ev_id, ts_ms),
                             "cdc",
                             ev_id,
                         )
@@ -798,13 +729,11 @@ class SqliteCdcStreamReader(SimpleDataSourceStreamReader):
                 continue
             skipped = 0
             img = json.loads(after if op != "d" else before)
-            if chunks and not self._should_emit(
-                ev_id, img.get(self.key_col), chunks, highs
-            ):
+            if finished and not should_emit(ev_id, img.get(self.key_col), finished):
                 continue
-            rows.append((_envelope(op, before, after, tbl, ev_id, ts_ms), "cdc", ev_id))
+            rows.append((log_envelope(op, before, after, tbl, ev_id, ts_ms), "cdc", ev_id))
         nxt: dict[str, Any] = {"phase": "log", "log_id": cursor}
-        if chunks and cursor <= horizon:
+        if finished and cursor <= horizon:
             nxt["chunks"], nxt["chunk_highs"] = enc, highs
         return rows, nxt
 
@@ -869,63 +798,42 @@ def prune_log(db_path: str, upto_id: int) -> int:
 # ---------------------------------------------------------------------------
 
 class _SqlitePartition(InputPartition):
-    def __init__(
-        self,
-        kind: str,
-        lo: Any = None,
-        hi: Any = None,
-        conn_conf: tuple[float, int, int] | None = None,
-    ) -> None:
+    def __init__(self, kind: str, lo: Any = None, hi: Any = None) -> None:
         self.kind = kind
         self.lo = lo
         self.hi = hi
-        # connection options ride the partition: executor processes have
-        # fresh module state, so driver-side configure_connection alone
-        # would not reach them
-        self.conn_conf = conn_conf
 
 
 class SqliteCdcBatchReader(DataSourceReader):
     """Bounded snapshot + full-log read.  Snapshot chunks become Spark
     input partitions (executor-parallel, the split-assignment analogue);
-    the log is one ordered partition."""
+    the log is one ordered partition.  Options are the stream reader's,
+    and its SPI plans and reads the chunks."""
 
-    def __init__(self, options: dict[str, str]) -> None:
-        self.db_path = options["path"]
-        self.table = options["table"]
-        self.key_col = options.get("keycolumn") or options.get("keyColumn") or "id"
-        self.chunk_size = int(options.get("chunksize", DEFAULT_CHUNK_SIZE))
-        self.conn_conf = (
-            float(options.get("connecttimeout") or DEFAULT_CONNECT_TIMEOUT_S),
-            int(options.get("connectmaxretries") or DEFAULT_CONNECT_MAX_RETRIES),
-            int(options.get("connectionpoolsize") or DEFAULT_POOL_SIZE),
-        )
-        configure_connection(self.db_path, *self.conn_conf)
+    def __init__(self, options: Mapping[str, str]) -> None:
+        self.stream = SqliteCdcStreamReader(options)
 
     def partitions(self) -> list[InputPartition]:
-        chunks = plan_chunks(self.db_path, self.table, self.key_col, self.chunk_size)
-        parts: list[InputPartition] = [
-            _SqlitePartition("chunk", c.start, c.end, self.conn_conf) for c in chunks
-        ]
-        parts.append(_SqlitePartition("log", conn_conf=self.conn_conf))
-        return parts
+        return [
+            _SqlitePartition("chunk", c.start, c.end)
+            for c in self.stream._plan_chunks_spi()
+        ] + [_SqlitePartition("log")]
 
     def read(self, partition: _SqlitePartition) -> Iterator[Tuple]:
-        if partition.conn_conf:
-            configure_connection(self.db_path, *partition.conn_conf)
+        s = self.stream
+        # connection options ride the pickled reader: executor processes
+        # have fresh module state, so the driver-side configure_connection
+        # alone would not reach them
+        configure_connection(s.db_path, *s.conn_conf)
         if partition.kind == "chunk":
-            envs, _low, high = read_chunk_merged(
-                self.db_path, self.table, self.key_col, partition.lo, partition.hi
-            )
+            envs, _low, high = s._read_chunk_merged_spi(partition.lo, partition.hi)
             for e in envs:
                 yield (e, "cdc", high)
         else:
-            for ev_id, tbl, op, before, after, ts_ms in read_log_between(
-                self.db_path, 0
-            ):
-                if tbl != self.table:
+            for ev_id, tbl, op, before, after, ts_ms in read_log_between(s.db_path, 0):
+                if tbl != s.table:
                     continue
-                yield (_envelope(op, before, after, tbl, ev_id, ts_ms), "cdc", ev_id)
+                yield (log_envelope(op, before, after, tbl, ev_id, ts_ms), "cdc", ev_id)
 
 
 class SqliteCdcDataSource(DataSource):

@@ -204,39 +204,28 @@ def sequenced_process_batch(consumer, seq: EpochSequencer):
     its staged decision published, and every later epoch's ``stage()``
     rightly REFUSES to start until that pass completes — on a busy
     stream without the idle ticker deployed, that used to be an outage
-    with a manual fix.  Recovery lives at the CONSUMER layer: every TTL
-    consumer's ``process_batch`` opens with
-    :func:`~.ttl.heal_pending_expiry` (r11 — so raw foreachBatch
-    deployments recover too), and because this adapter holds the
-    namespace lock across the whole batch, that heal runs under the
-    lock here with no second call needed (ADVICE r11: the adapter-level
-    duplicate cost one directory listing per batch and a second code
-    path to keep in sync).  A pending stage belonging to THIS batch's
-    own epoch is left alone: that is the batch's own retry, and
-    ``stage()`` reuses the staged decision inline."""
+    with a manual fix.  Recovery lives at the CONSUMER layer: every
+    epoch of every IVM consumer runs through :func:`~.ttl.fused_epoch`,
+    which opens with :func:`~.ttl.heal_pending_expiry` (so raw
+    foreachBatch deployments recover too), and because this adapter
+    holds the namespace lock across the whole batch, that heal runs
+    under the lock here with no second call needed (ADVICE r11: the
+    adapter-level duplicate cost one directory listing per batch and a
+    second code path to keep in sync).  A pending stage belonging to
+    THIS batch's own epoch is left alone: that is the batch's own retry,
+    and ``stage()`` reuses the staged decision inline."""
 
     def fn(batch_df, batch_id: int) -> None:
         # the lock spans the whole batch so an idle tick can never run
         # expire() against state a batch is mid-commit on (seq.lock);
-        # crashed-expire healing happens INSIDE process_batch (every TTL
-        # consumer's entry calls heal_pending_expiry first — see the
+        # crashed-expire healing happens inside process_batch
+        # (fused_epoch calls heal_pending_expiry first — see the
         # docstring above), so it too runs under this lock
         with seq.lock:
             epoch = seq.allocate("stream", batch_id)
             consumer.process_batch(batch_df, epoch)
 
     return fn
-
-
-def _consumer_tables(consumer):
-    return [
-        t
-        for t in (
-            getattr(consumer, n, None)
-            for n in ("fact_state", "left_state", "right_state", "output")
-        )
-        if t is not None
-    ]
 
 
 class IdleExpiryMonitor:
@@ -295,8 +284,8 @@ class IdleExpiryMonitor:
         if st["idle"] < self.idle_triggers or st["done_at"] == cur:
             store_json(self._state_path, st)
             return False
-        tables = _consumer_tables(self.consumer)
-        mx = max_committed_epoch(*tables)
+        # every table the consumer commits to (the ones expire() checks)
+        mx = max_committed_epoch(*self.consumer._epoch_buckets([]))
         if mx is not None and mx > cur:
             # state committed under ids the sequencer never allocated
             # (e.g. a consumer previously driven by raw Structured
